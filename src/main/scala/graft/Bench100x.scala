@@ -263,12 +263,7 @@ object Bench100x {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_sf10")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     // Fixed-shuffle calibration gate (r15 VERDICT item 6): ~1 GB of

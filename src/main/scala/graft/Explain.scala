@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan (or row count) of named
   * gate queries — the plan-audit loop behind the per-round scale review.
-  * Usage: Explain <q1,q2,...> [count]; SPARK_GRAFT_SF_DIR picks the scale. */
+  * Usage: tools/run.sh graft.Explain <q1,q2,...> [count];
+  * SPARK_GRAFT_SF_DIR picks the scale. */
 object Explain {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names =

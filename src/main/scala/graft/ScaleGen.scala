@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,11 +20,7 @@ object ScaleGen {
     val dst = args.lift(1).getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def amplify(table: String, keyCols: Seq[String],

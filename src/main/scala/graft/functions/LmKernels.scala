@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
  * numberOfLeadingZeros, mantissa by shift, table lookup from a shared
  * constant — the exact integer definition, so values are bit-identical to
  * the column form (and to [[graft.operators.TextLm.l2q16Long]]) on the
- * whole documented domain 1 ≤ x < 2^59 (pinned by LmKernelSpec), and to
+ * whole documented domain 1 ≤ x < 2^59 (pinned by Round21Spec), and to
  * the column form's x = 0 corner as well (both engines' element_at(−15)
  * wraps to the 2nd table entry → value 1). Negative input fails loud —
  * the column forms produced engine-DIVERGENT garbage there, so no green

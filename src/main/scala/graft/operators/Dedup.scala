@@ -45,7 +45,7 @@ object Dedup {
     * chain materialized three intermediate strings per row (lowered copy,
     * collapsed copy, md5 hex) before the conv(substring(…)) parse; the
     * kernel is one in-row pass with byte-identical values (pinned by
-    * LmKernelSpec against the legacy chain, unicode cases included). */
+    * Round21Spec against the legacy chain, unicode cases included). */
   def exactKey(text: Column): Column =
     graft.functions.TextRuns.exactKey(text)
 

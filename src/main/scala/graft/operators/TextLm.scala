@@ -54,7 +54,7 @@ object TextLm {
   // expression tree materialized a base-2 STRING (bin) and called pow()
   // per evaluation, once per scored gram/token at corpus scale; the
   // kernel is one static call with bit-identical values on the
-  // documented domain (LmKernelSpec pins kernel == the legacy tree).
+  // documented domain (Round21Spec pins kernel == the legacy tree).
   def l2q16(x: Column): Column =
     graft.functions.LmKernels.l2q16(x.cast("long"))
 
@@ -106,7 +106,7 @@ object TextLm {
     // literal, so the per-gram plan loses the cross join outright.
     // Unseen grams fall back to the same constants the old per-row
     // coalesce produced: l2q16(0 + V) and l2q16(0 + 1) = 0. Integers
-    // identical position for position (LmKernelSpec/oracle-pinned).
+    // identical position for position (Round21Spec/oracle-pinned).
     val v = uni.agg(count(lit(1)).as("v")).head().getLong(0)
     val a0 = graft.functions.LmKernels.l2q16(v)
     val keyCols = (idCol +: keepCols).map(col)

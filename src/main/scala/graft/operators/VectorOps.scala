@@ -332,7 +332,7 @@ object VectorOps {
         // over ascending ids == lexicographic (dist, cid) min) and its
         // degenerate rule (all-NULL dists sort first → lowest cid, NULL
         // dist). Requires idCol unique, like the pre-kernel window form;
-        // AssignStrategySpec pins both strategies equal.
+        // Round21Spec pins both strategies equal.
         val centArg = broadcast(centRows.toDF("_cid", "_cent"))
         val best = df.select(col(idCol), quantize(col(vecCol)).as("_qv"))
           .crossJoin(centArg)
@@ -605,7 +605,7 @@ object VectorOps {
     // sets: the kernel's (dist asc, id asc) strict ordering is the
     // window's (cdist, centroid_id) rule, degenerate/NULL embeddings fall
     // back to the first nProbe ids exactly as the nulls-first window
-    // ranking did (pinned by VectorKernelSpec).
+    // ranking did (pinned by Round21Spec).
     val centRows = cents
       .select(col("centroid_id").cast("long"), col("centroid")).collect()
       .map(r => (r.getLong(0), r.getSeq[Number](1).map(_.longValue()).toSeq))

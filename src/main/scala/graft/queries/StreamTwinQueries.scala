@@ -1201,7 +1201,7 @@ object StreamTwinQueries {
 
   /**
    * W1/G5 — the owner barrier at the MICROBATCH BOUNDARY
-   * ([[graft.streaming.Changefeed.batchBarrier]] — ddl_manager.go:508-584
+   * ([[graft.streaming.DdlStream.controlStep]] — ddl_manager.go:508-584
    * wired into foreachBatch; the live path is exercised in
    * StreamingSpec): four batch windows over the cdc stream, each with its
    * announced-but-unexecuted textual DDLs classified through the REAL

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators._
 
@@ -78,43 +77,10 @@ object Changefeed {
     s.foldLeft(1125899906842597L)((h, c) => h * 31 + c)
   }
 
-  /**
-   * Compose the owner barrier at a microbatch boundary
-   * (ddl_manager.go:508-584 wired into foreachBatch): resolved ts = the
-   * batch's max commit ts (the DDL puller's resolved ts — the batch is
-   * watermark-complete by construction); pending = the batch's DDL
-   * control rows NOT yet in the applied log. Returns None when the batch
-   * is empty or carries no envelope. The caller logs it BEFORE
-   * [[DdlStream.applyDdlRows]] runs — the record shows where the feed's
-   * checkpoint and redo resolved ts held at the boundary; executing the
-   * DDLs inside the batch is what lifts it, exactly the reference's
-   * execute-then-advance cycle.
-   */
-  def batchBarrier(batch: DataFrame, registryDir: String,
-      redoEnabled: Boolean, defaultSchema: String = "")
-      : Option[(Long, OwnerBarrier.Barrier)] = {
-    if (!batch.columns.contains("op")) return None
-    val head = batch.agg(max(col("commit_ts"))).collect()(0)
-    if (head.isNullAt(0)) return None
-    val resolved = head.getLong(0)
-    val seen = DdlStream.loadApplied(registryDir).toSet
-    Some((resolved, barrierFromRows(resolved, collectDdlRows(batch),
-      seen, redoEnabled, defaultSchema)))
-  }
-
-  /** The batch's DDL control rows, collected ONCE per microbatch and
-    * shared between the barrier computation and the registry apply
-    * (each used to re-collect and re-read the applied log). */
-  private def collectDdlRows(batch: DataFrame)
-      : Seq[(String, Long, String, String)] =
-    batch.filter(col("op") === DdlStream.DdlOp)
-      .select(col("etype"), col("commit_ts"),
-        col("schema_name"), col("table_name"))
-      .collect().toSeq // control-plane: a handful of DDLs per batch
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2),
-        r.getString(3)))
-
-  private def barrierFromRows(resolved: Long,
+  /** The owner barrier at a microbatch boundary: pending = the batch's
+    * DDL control rows (sql, ts, schema, table) NOT yet in the applied
+    * log, classified by [[ddlAction]]. */
+  private[streaming] def barrierFromRows(resolved: Long,
       rows: Seq[(String, Long, String, String)],
       seen: Set[(String, Long)], redoEnabled: Boolean,
       defaultSchema: String): OwnerBarrier.Barrier = {
@@ -193,45 +159,17 @@ object Changefeed {
   def start(spark: SparkSession, source: DataFrame, spec: ChangefeedSpec)
            (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val shaped = pipeline(source, spec)
-    // sink wrapping, innermost-out: the user sink receives schema-bound
-    // data rows (DDL applied first), and metrics record the batch as
-    // produced by the pipeline — the reference's sink-level DML counters.
-    var effectiveSink = sink
-    spec.textDdlRegistryDir.foreach { d =>
-      effectiveSink =
-        DdlStream.withTextDdl(spark, d, spec.textDdlDefaultSchema)(effectiveSink)
-    }
-    spec.metricsDir.foreach { d =>
-      effectiveSink = Metrics.withDmlMetrics(spark, d)(effectiveSink)
-    }
     shaped.writeStream
       .queryName(spec.id)
       .option("checkpointLocation", spec.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // DDL + OWNER BARRIER (W1/G5): control rows are collected ONCE;
-        // the composed barrier is logged BEFORE the batch's DDLs apply —
-        // the boundary's checkpoint/redo clamp — then the registry
-        // advances and data rows bind against it in the same batch.
-        val data = spec.textDdlRegistryDir match {
-          case Some(d) if batch.columns.contains("op") =>
-            val ddlRows = collectDdlRows(batch)
-            var seenShared: Option[Set[(String, Long)]] = None
-            for (bd <- spec.barrierDir) {
-              val head = batch.agg(max(col("commit_ts"))).collect()(0)
-              if (!head.isNullAt(0)) {
-                val resolved = head.getLong(0)
-                val seen = DdlStream.loadApplied(d).toSet
-                seenShared = Some(seen)
-                appendBarrier(bd, batchId, resolved,
-                  barrierFromRows(resolved, ddlRows, seen,
-                    spec.redoEnabled, spec.textDdlDefaultSchema))
-              }
-            }
-            DdlStream.applyCollected(
-              ddlRows.map(r => (r._1, r._2)), d, seenShared)
-            batch.filter(col("op") =!= DdlStream.DdlOp)
-          case _ => batch
-        }
+        // DDL + OWNER BARRIER (W1/G5): the batch's control step logs the
+        // barrier and advances the registry BEFORE any row is delivered;
+        // data rows bind against the versions it returns.
+        val versions = spec.textDdlRegistryDir.map(d =>
+          DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
+            spec.barrierDir, spec.redoEnabled))
+        val data = if (versions.isEmpty) batch else DdlStream.dataRows(batch)
         // Compaction keys on the ROUTED identity: after shard-merge several
         // source tables share one target, and net effects must fold across
         // them (dm shard-merge semantics). Renamed back so sinks see the
@@ -243,7 +181,14 @@ object Changefeed {
               .withColumnRenamed("target_schema", "schema_name")
               .withColumnRenamed("target_table", "table_name")
           else data
-        effectiveSink(b, batchId)
+        // the user sink receives schema-bound rows; metrics record the
+        // batch as produced by the pipeline (the reference's sink-level
+        // DML counters) — before the bind, whose broadcast would otherwise
+        // cost them one more job
+        val bound: (DataFrame, Long) => Unit = (df, id) =>
+          sink(versions.fold(df)(DdlStream.bindVersions(spark, df, _)), id)
+        spec.metricsDir.fold(bound)(Metrics.withDmlMetrics(spark, _)(bound))(
+          b, batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()

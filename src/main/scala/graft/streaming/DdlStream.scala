@@ -49,12 +49,6 @@ object DdlStream {
     DdlParser.applyToRegistry(Nil, loadApplied(registryDir), defaultSchema)
 
   /**
-   * Wrap a sink so each microbatch first applies its DDL control rows,
-   * then delivers data rows bound to their schema version. Batch replays
-   * re-apply nothing (the (ts, sql) pair set is the idempotence key, the
-   * same way the reference skips already-synced DDL locations).
-   */
-  /**
    * G5 — DDL barrier algebra (batch twin of the foreachBatch
    * control-before-rows ordering; reference cdc/owner/ddl_manager +
    * barrier ts in cdc/processor): a DDL at ts T applies after every row
@@ -92,51 +86,88 @@ object DdlStream {
       .withColumn("barrier_ts", coalesce(array_max(passed), lit(0L)))
   }
 
-  /** Apply a batch's DDL control rows to the registry, idempotently (the
-    * (ts, sql) pair set is the idempotence key — batch replays re-apply
-    * nothing). Control-plane sized driver collect. */
-  def applyDdlRows(batch: DataFrame, registryDir: String): Unit = {
-    if (!batch.columns.contains("op")) return
-    val ddlRows = batch.filter(col("op") === DdlOp)
-      .select(col("etype"), col("commit_ts"))
-      .collect() // control-plane sized: a handful of DDLs per batch
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    applyCollected(ddlRows, registryDir)
+  /**
+   * One microbatch's DDL control step — the owner's cycle at a barrier
+   * (ddl_manager.go:508-584). ONE Spark action yields the batch's
+   * resolved ts (max commit ts, the DDL puller's resolved ts — the batch
+   * is watermark-complete by construction) and its DDL control rows; the
+   * applied log is read once. With a `barrierDir`, the owner barrier over
+   * the not-yet-applied DDLs is logged BEFORE they join the registry —
+   * the boundary's checkpoint/redo clamp, and the crash order the
+   * barrier log's replay idempotence relies on. Then the fresh DDLs are
+   * appended (the (sql, ts) pair set is the idempotence key, so a batch
+   * replay re-applies nothing) and the table versions are folded from
+   * the in-memory log. A batch without an `op` column (already
+   * compacted) carries no control rows.
+   */
+  def controlStep(batch: DataFrame, batchId: Long, registryDir: String,
+      defaultSchema: String = "", barrierDir: Option[String] = None,
+      redoEnabled: Boolean = false): Seq[SchemaRegistry.TableVersion] = {
+    val applied = loadApplied(registryDir)
+    val log =
+      if (!batch.columns.contains("op")) applied
+      else {
+        // one scan folds each partition to (max ts, its DDL rows):
+        // control-plane sized, a handful of DDLs per batch
+        val parts = batch
+          .select(col("commit_ts"), col("op") <=> DdlOp, col("etype"),
+            col("schema_name"), col("table_name"))
+          .rdd.mapPartitions { it =>
+            var hi: Option[Long] = None
+            val ddls = Seq.newBuilder[(String, Long, String, String)]
+            it.foreach { r =>
+              if (!r.isNullAt(0))
+                hi = Some(hi.fold(r.getLong(0))(math.max(_, r.getLong(0))))
+              if (r.getBoolean(1)) ddls += ((r.getString(2), r.getLong(0),
+                r.getString(3), r.getString(4)))
+            }
+            Iterator((hi, ddls.result()))
+          }.collect()
+        val rows = parts.toSeq.flatMap(_._2)
+        val seen = applied.toSet
+        for (dir <- barrierDir; resolved <- parts.flatMap(_._1).maxOption)
+          Changefeed.appendBarrier(dir, batchId, resolved,
+            Changefeed.barrierFromRows(resolved, rows, seen, redoEnabled,
+              defaultSchema))
+        val fresh = rows.map(r => (r._1, r._2))
+          .filterNot(seen.contains).distinct.sortBy(_._2)
+        if (fresh.nonEmpty) append(registryDir, fresh)
+        applied ++ fresh
+      }
+    DdlParser.applyToRegistry(Nil, log, defaultSchema)
   }
 
-  /** The apply step over an already-collected (sql, ts) batch — callers
-    * that collected the control rows for another purpose (the owner
-    * barrier) reuse them, and pass the applied set when they already
-    * read it, instead of re-running the collect and the log read. */
-  def applyCollected(pairs: Seq[(String, Long)], registryDir: String,
-                     seen0: Option[Set[(String, Long)]] = None): Unit = {
-    val seen = seen0.getOrElse(loadApplied(registryDir).toSet)
-    val fresh = pairs.filterNot(seen.contains).distinct
-    if (fresh.nonEmpty) append(registryDir, fresh.sortBy(_._2))
-  }
+  /** Data rows of a batch: its DDL control rows peeled off. */
+  private[streaming] def dataRows(batch: DataFrame): DataFrame =
+    if (batch.columns.contains("op")) batch.filter(col("op") =!= DdlOp)
+    else batch
 
+  /** Bind each row to the schema version in force at its ts;
+    * post-compaction batches carry last_commit_ts, so bind on whichever
+    * event-time column the batch has. */
+  private[streaming] def bindVersions(spark: SparkSession, data: DataFrame,
+      vs: Seq[SchemaRegistry.TableVersion]): DataFrame =
+    if (vs.isEmpty) data.withColumn("schema_version", lit(null).cast("int"))
+    else {
+      val withTs =
+        if (data.columns.contains("commit_ts")) data
+        else data.withColumn("commit_ts", col("last_commit_ts"))
+      val b = SchemaRegistry.bindSchemaVersion(withTs,
+        SchemaRegistry.versionIntervals(spark, vs))
+      if (data.columns.contains("commit_ts")) b else b.drop("commit_ts")
+    }
+
+  /**
+   * Wrap a sink so each microbatch first applies its DDL control rows,
+   * then delivers data rows bound to their schema version. Batch replays
+   * re-apply nothing (the (ts, sql) pair set is the idempotence key, the
+   * same way the reference skips already-synced DDL locations).
+   */
   def withTextDdl(spark: SparkSession, registryDir: String,
                   defaultSchema: String = "")
                  (sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      // compacted batches carry net_op and no control rows — DDL rows only
-      // exist pre-compaction in the raw envelope
-      val hasOp = batch.columns.contains("op")
-      applyDdlRows(batch, registryDir)
-      val vs = versions(registryDir, defaultSchema)
-      val data = if (hasOp) batch.filter(col("op") =!= DdlOp) else batch
-      val bound =
-        if (vs.isEmpty) data.withColumn("schema_version", lit(null).cast("int"))
-        else {
-          // post-compaction batches carry last_commit_ts; bind on whichever
-          // event-time column the batch has
-          val withTs =
-            if (data.columns.contains("commit_ts")) data
-            else data.withColumn("commit_ts", col("last_commit_ts"))
-          val b = SchemaRegistry.bindSchemaVersion(withTs,
-            SchemaRegistry.versionIntervals(spark, vs))
-          if (data.columns.contains("commit_ts")) b else b.drop("commit_ts")
-        }
-      sink(bound, batchId)
+      val vs = controlStep(batch, batchId, registryDir, defaultSchema)
+      sink(bindVersions(spark, dataRows(batch), vs), batchId)
   }
 }

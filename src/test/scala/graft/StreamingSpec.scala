@@ -539,4 +539,99 @@ class StreamingSpec extends SparkSpec {
     val twice = Sinks.readState(spark, s"$dir/state").collect().toSet
     assert(once == twice)
   }
+
+  // Three microbatches with DDL control rows, one query start each (the
+  // AvailableNow trigger drains one MemoryStream offset per start).
+  private def ddlBatches: Seq[Seq[StreamEv]] = {
+    def ddl(seq: Long, ts: Long, sql: String) =
+      StreamEv(seq, "G", ts, ts - 1, 0, "db", "t", 0, 0, None, None, sql)
+    Seq(
+      Seq(ddl(1, 100, "CREATE TABLE db.t (pk BIGINT PRIMARY KEY, val DOUBLE)"),
+        ev(2, "I", 1, 10), ev(3, "I", 2, 20), ev(4, "U", 1, 11)),
+      Seq(ddl(5, 105, "ALTER TABLE db.t ADD COLUMN c2 BIGINT"),
+        ev(6, "I", 3, 30), ev(7, "D", 2, 20)),
+      Seq(ev(8, "U", 3, 31), ev(9, "I", 4, 40)))
+  }
+
+  private def fullSpec(id: String, dir: String) = ChangefeedSpec(id = id,
+    checkpointDir = s"$dir/ckpt", metricsDir = Some(s"$dir/m"),
+    textDdlRegistryDir = Some(s"$dir/reg"), barrierDir = Some(s"$dir/bar"),
+    redoEnabled = true)
+
+  test("full-option feed: the DDL control step is one job per microbatch") {
+    // Jobs the microbatch engine runs per batch (tagged with
+    // streaming.sql.batchId). On top of the plain feed's jobs, the
+    // full-option feed adds the control step's single scan (resolved ts
+    // and DDL rows together), the metrics write and the bind's
+    // broadcast: 5 jobs.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs.add((p.getProperty("sql.streaming.queryId"), b.toLong))
+    }
+    spark.sparkContext.addSparkListener(tap)
+    def perBatch(spec: ChangefeedSpec): Seq[Int] = {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[StreamEv]
+      val ids = ddlBatches.map { evs =>
+        mem.addData(evs: _*)
+        val q = Changefeed.start(spark, mem.toDF(), spec) { (b, _) =>
+          b.write.format("noop").mode("overwrite").save()
+        }
+        q.awaitTermination()
+        q.id.toString
+      }.toSet
+      org.apache.spark.graftbridge.SparkInternals
+        .waitListenerEmpty(spark.sparkContext)
+      val mine = jobs.toArray(Array.empty[(String, Long)]).filter(j => ids(j._1))
+      ddlBatches.indices.map(b => mine.count(_._2 == b))
+    }
+    try {
+      val plainDir = Files.createTempDirectory("graft_cfjobs0").toString
+      val plain = perBatch(
+        ChangefeedSpec(id = "cf-jobs-plain", checkpointDir = s"$plainDir/ckpt"))
+      val fullDir = Files.createTempDirectory("graft_cfjobs1").toString
+      val full = perBatch(fullSpec("cf-jobs-full", fullDir))
+      assert(full.zip(plain).map { case (f, p) => f - p } == Seq(5, 5, 5),
+        s"plain=$plain full=$full")
+    } finally spark.sparkContext.removeSparkListener(tap)
+  }
+
+  test("changefeed replay of a committed-then-lost batch rewrites nothing") {
+    // A crash after batch 1's side effects but before its commit: the
+    // restart re-runs batch 1 from its offsets. The barrier log and the
+    // DDL registry must come out byte-identical, and the sink must see
+    // the same schema-bound rows again.
+    val dir = Files.createTempDirectory("graft_cfreplay").toString
+    val spec = fullSpec("cf-replay", dir)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    val delivered = scala.collection.mutable.Map.empty[Long, Set[String]]
+    val versions = scala.collection.mutable.Map.empty[Long, Set[Int]]
+    def run(): Unit = {
+      val q = Changefeed.start(spark, mem.toDF(), spec) { (b, id) =>
+        delivered(id) = b.collect().map(_.toString).toSet
+        versions(id) = b.select("schema_version").as[Int].collect().toSet
+      }
+      q.awaitTermination()
+    }
+    ddlBatches.take(2).foreach { evs => mem.addData(evs: _*); run() }
+    def bytes(p: String) = Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
+    val log0 = bytes(s"$dir/reg/ddls.log")
+    val bar0 = bytes(s"$dir/bar/barriers.jsonl")
+    val rows1 = delivered(1L)
+    assert(versions(1L) == Set(2), "batch 1 rows bind after its ALTER")
+    delivered.clear()
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/ckpt/commits/$f")))
+    run()
+    assert(delivered.keySet == Set(1L), "the restart re-runs batch 1 only")
+    assert(delivered(1L) == rows1)
+    assert(versions(1L) == Set(2))
+    assert(bytes(s"$dir/reg/ddls.log") == log0)
+    assert(bytes(s"$dir/bar/barriers.jsonl") == bar0)
+  }
 }
