@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
  * tiflow keeps a snapshot list keyed by DDL commit ts and decodes every
  * event against the snapshot at ITS OWN commit ts
  * (cdc/entry/schema_storage.go:40-242). Spark analog: a small versioned
- * registry broadcast into an as-of range join — events bind to the latest
- * version with effective_from <= commit_ts.
+ * registry folded into the plan as a map literal — events bind to the
+ * latest version with effective_from <= commit_ts.
  */
 object SchemaRegistry {
 
@@ -64,33 +64,57 @@ object SchemaRegistry {
     }
   }
 
-  /** Registry → DataFrame of version intervals [from, to) for the range
-    * join; to = next version's from (open-ended tail). */
-  def versionIntervals(spark: SparkSession, versions: Seq[TableVersion]): DataFrame = {
-    import spark.implicits._
-    versions.groupBy(v => (v.schemaName, v.tableName)).toSeq
-      .flatMap { case ((s, t), vs) =>
-        val sorted = vs.sortBy(_.effectiveFrom)
-        sorted.zip(sorted.drop(1).map(_.effectiveFrom) :+ Long.MaxValue).map {
-          case (v, to) => (s, t, v.version, v.effectiveFrom, to)
-        }
-      }
-      .toDF("schema_name", "table_name", "schema_version", "v_from", "v_to")
+  /**
+   * The plan-literal as-of lookup shared by schema binding (J2) and
+   * barrier epochs (G5): `table` folds into one map literal keyed by each
+   * key part in turn (string keys, so no struct per row), and each row
+   * gets its key's entries whose effective ts (`from(entry)`) is at or
+   * below `ts`. Map-only — no join, no Spark job. A missing key, a NULL
+   * key part and a NULL ts give an empty array. A map literal, not a
+   * per-key when() chain, which would nest one CaseWhen per table and
+   * blow analysis/codegen on a changefeed with thousands of tables.
+   */
+  private[graft] def asOfEntries(table: Seq[(Seq[String], Seq[Column])],
+      key: Seq[Column], ts: Column, entryType: DataType)
+      (from: Column => Column): Column = {
+    val empty = array().cast(ArrayType(entryType, containsNull = false))
+    def nest(rows: Seq[(Seq[String], Column)]): Column =
+      if (rows.head._1.isEmpty) rows.head._2
+      else map(rows.groupBy(_._1.head).toSeq.sortBy(_._1).flatMap {
+        case (k, rs) => Seq(lit(k), nest(rs.map(r => (r._1.tail, r._2))))
+      }: _*)
+    if (table.isEmpty) empty
+    else {
+      val m = nest(table.map { case (k, es) => (k, array(es: _*)) })
+      filter(coalesce(key.foldLeft(m)(element_at), empty), e => from(e) <= ts)
+    }
   }
 
+  private val VersionEntry = new StructType()
+    .add("from", LongType, nullable = false)
+    .add("version", IntegerType, nullable = false)
+
   /**
-   * J2 — as-of bind: every event joins the schema version in force at its
-   * commit ts. The version table is tiny → broadcast; the range predicate
-   * makes this a broadcast nested-loop that Catalyst executes as a single
-   * map-side pass (no shuffle of the event stream — essential at scale).
+   * J2 — as-of bind: every event gets `schema_version`, the last version
+   * of its (schema, table) whose effectiveFrom is at or below its `tsCol`
+   * — tiflow's in-memory snapshot lookup at a commit ts
+   * (cdc/entry/schema_storage.go:122-152). The versions are control-plane
+   * data folded into the plan by [[asOfEntries]]: no join, no broadcast,
+   * no shuffle of the event stream. A ts before the first version, an
+   * unknown table, a NULL schema or a NULL ts binds NULL.
    */
-  def bindSchemaVersion(events: DataFrame, intervals: DataFrame): DataFrame =
-    events.join(broadcast(intervals),
-      events("schema_name") === intervals("schema_name") &&
-        events("table_name") === intervals("table_name") &&
-        events("commit_ts") >= intervals("v_from") &&
-        events("commit_ts") < intervals("v_to"),
-      "left")
-      .drop(intervals("schema_name")).drop(intervals("table_name"))
-      .drop("v_from", "v_to")
+  def bindSchemaVersion(events: DataFrame, versions: Seq[TableVersion],
+                        tsCol: String = "commit_ts"): DataFrame = {
+    val table = versions.groupBy(v => Seq(v.schemaName, v.tableName)).toSeq
+      .map { case (k, vs) =>
+        k -> vs.map(v =>
+          struct(lit(v.effectiveFrom).as("from"), lit(v.version).as("version")))
+      }
+    val passed = asOfEntries(table, Seq(col("schema_name"), col("table_name")),
+      col(tsCol), VersionEntry)(_.getField("from"))
+    // array_max over the (from, version) structs, not element_at(…, -1),
+    // which throws on an empty array under ANSI mode; on a ts tie (a
+    // split multi-change ALTER) the higher version wins
+    events.withColumn("schema_version", array_max(passed).getField("version"))
+  }
 }

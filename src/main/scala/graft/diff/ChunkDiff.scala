@@ -1,7 +1,6 @@
 package graft.diff
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -13,8 +12,9 @@ import org.apache.spark.sql.functions._
  * `COUNT + BIT_XOR(hash(row))` digests on each side, and for mismatched
  * chunks drill down to row level, emitting fix-SQL.
  *
- * Spark-first: chunking is a window `ntile` (or any deterministic bucketing)
- * instead of stats-guided range scans; the checksum is one hash aggregation
+ * Spark-first: chunking is a deterministic column expression over the key
+ * (equal-width arithmetic, key hash or shared split points) instead of
+ * stats-guided range scans; the checksum is one hash aggregation
  * per side; and the row-level drill-down is a single full-outer join on the
  * key — no binary search needed because the join IS the row-level diff at
  * scale (one shuffle, AQE handles skew). At 100 TB both sides stay fully
@@ -32,12 +32,6 @@ object ChunkDiff {
   def rowDigest(canonicalCols: Seq[Column]): Column =
     conv(substring(md5(concat_ws("|", canonicalCols: _*)), 1, 15), 16, 10)
       .cast("long")
-
-  /** V1 — deterministic chunking by ntile over the key order. Exact-size
-    * chunks and oracle-reproducible, but the global window serializes one
-    * partition — use [[withRangeChunk]] at scale. */
-  def withChunk(df: DataFrame, orderKeys: Seq[Column], nChunks: Int): DataFrame =
-    df.withColumn("chunk_id", ntile(nChunks).over(Window.orderBy(orderKeys: _*)))
 
   /**
    * V1 scale path: range-partition on the key (distributed sampling picks

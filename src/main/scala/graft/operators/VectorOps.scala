@@ -260,6 +260,14 @@ object VectorOps {
     } finally { q.unpersist(); () }
   }
 
+  /** Above this many packed centroid BYTES (k·d·8) the argmin kernel's
+    * reference arrays stop riding the serialized expression (they would
+    * bloat every task binary and plan string) and assignment cuts over to
+    * a one-row broadcast of the centroid array with a per-row array_min —
+    * same results, one broadcast per executor instead of a table per
+    * task. Small-k plans (every declared gate) are unchanged. */
+  private[operators] val CentroidPlanMaxBytes: Long = 4L << 20
+
   /**
    * Nearest-centroid assignment (all-integer, deterministic): the argmin
    * with centroid_id tie-break, map-only over the corpus.
@@ -274,16 +282,8 @@ object VectorOps {
    * `centroid` array column re-attaches through a broadcast join on the
    * k-row table for consumers that read it (IVF residuals).
    */
-  /** Above this many packed centroid BYTES (k·d·8) the argmin kernel's
-    * reference arrays stop riding the serialized expression (they would
-    * bloat every task binary and plan string) and assignment cuts over to
-    * the broadcast-join min(struct) strategy — same results, one
-    * broadcast per executor instead of a table per task. Small-k plans
-    * (every declared gate) are unchanged. */
-  private[operators] val CentroidPlanMaxBytes: Long = 4L << 20
-
   def assignCentroids(df: DataFrame, cents: DataFrame,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
+                      vecCol: String = "embedding",
                       maxPlanBytes: Long = CentroidPlanMaxBytes): DataFrame = {
     // centroid_id may arrive int-typed (label-derived cents); normalize to
     // long for the kernel — the join back recoerces, and the driver hash
@@ -327,22 +327,22 @@ object VectorOps {
           .withColumn("dist", col("_best.dist"))
           .drop("_best")
       } else {
-        // cutover: broadcast-join argmin over the SAME collected rows.
-        // min(struct(dist, cid)) replays the kernel's tie rule (strict <
-        // over ascending ids == lexicographic (dist, cid) min) and its
-        // degenerate rule (all-NULL dists sort first → lowest cid, NULL
-        // dist). Requires idCol unique, like the pre-kernel window form;
-        // Round21Spec pins both strategies equal.
-        val centArg = broadcast(centRows.toDF("_cid", "_cent"))
-        val best = df.select(col(idCol), quantize(col(vecCol)).as("_qv"))
-          .crossJoin(centArg)
-          .groupBy(idCol)
-          .agg(min(struct(sqDistQ(col("_qv"), col("_cent")).as("dist"),
-            col("_cid").as("centroid_id"))).as("_best"))
-          .select(col(idCol),
-            col("_best.centroid_id").cast(cidType).as("centroid_id"),
-            col("_best.dist").as("dist"))
-        df.join(best, Seq(idCol))
+        // cutover: the SAME collected rows broadcast as ONE array row, and
+        // a per-row array_min over (dist, cid) structs — map-only like the
+        // kernel, so every input row (NULL or repeated ids included) keeps
+        // its own assignment. The struct order replays the kernel's tie
+        // rule (strict < over ascending ids == lexicographic (dist, cid)
+        // min) and its degenerate rule (NULL dists sort first → lowest
+        // cid, NULL dist). Round21Spec pins both strategies equal.
+        val centArr = broadcast(Seq(centRows).toDF("_cents"))
+        df.withColumn("_qv", quantize(col(vecCol)))
+          .crossJoin(centArr)
+          .withColumn("_best", array_min(transform(col("_cents"), c =>
+            struct(sqDistQ(col("_qv"), c.getField("_2")).as("dist"),
+              c.getField("_1").as("centroid_id")))))
+          .withColumn("centroid_id", col("_best.centroid_id").cast(cidType))
+          .withColumn("dist", col("_best.dist"))
+          .drop("_qv", "_cents", "_best")
       }
     assigned
       .join(centLocal, Seq("centroid_id"))
@@ -363,11 +363,7 @@ object VectorOps {
    * Scale shape: centroids are control-plane data (k·d longs) — each
    * round is ONE map-only assignment pass (centroid literals folded into
    * the plan, no join/shuffle on the corpus) plus one partial-aggregated
-   * groupBy for the means; the corpus itself never shuffles. Past
-   * `literalMaxK` centroids (the √n-scale regime [[recommendedCells]]
-   * implies) the assignment switches to a broadcast-centroid join with a
-   * map-side-combinable struct-min argmin — same results, codegen-safe at
-   * any k; a spec pins both paths equal.
+   * groupBy for the means; the corpus itself never shuffles.
    *
    * Returns the final assignment (idCol, vecCol, centroid_id, dist)
    * against the centroids after `iters` recompute rounds — the vector
@@ -375,8 +371,7 @@ object VectorOps {
    * generation, IVF cell search) needs no join back.
    */
   def kmeans(df: DataFrame, k: Int, iters: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding",
-             literalMaxK: Int = 64): DataFrame = {
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 2 && iters >= 0)
     val spark = df.sparkSession
     val q = df.select(col(idCol), col(vecCol)).withColumn("qv", quantize(col(vecCol)))
@@ -387,14 +382,12 @@ object VectorOps {
     // r20: ONE assignment strategy for any k — the codegen'd argmin kernel
     // (centroids ship with the expression as a flat long[], early-exit
     // pruned inner loop, no join, no window, no per-candidate interpreted
-    // distance tree). Replaces BOTH former paths — the k ≤ literalMaxK
-    // literal fold (k separate sqDistQ struct exprs, codegen-method-limit
-    // bound) and the k > literalMaxK broadcast-join min(struct) agg (which
-    // shuffled one pre-aggregated row per id). Identical results: strict <
-    // over ascending cids == the (dist, cid) tuple min of both old forms
-    // (KmeansSpec pins kernel == legacy-join equality row for row;
-    // `literalMaxK` is retained for call compatibility and no longer
-    // selects anything).
+    // distance tree). Replaces BOTH former paths — the small-k literal
+    // fold (k separate sqDistQ struct exprs, codegen-method-limit bound)
+    // and the large-k broadcast-join min(struct) agg (which shuffled one
+    // pre-aggregated row per id). Identical results: strict < over
+    // ascending cids == the (dist, cid) tuple min of both old forms
+    // (KmeansSpec pins kernel == legacy-join equality row for row).
     def assign(cents: Seq[(Long, Seq[Long])]): DataFrame = {
       val sorted = cents.sortBy(_._1)
       val best = graft.functions.VectorKernels.nearestCell(

@@ -178,11 +178,10 @@ object DdlQueries {
           1005000L))
     } yield d
     val versions = DdlParser.applyToRegistry(Nil, ddls)
-    val intervals = SchemaRegistry.versionIntervals(spark, versions)
     val nCols = versions
       .map(v => (v.schemaName, v.tableName, v.version, v.schema.fields.length))
       .toDF("schema_name", "table_name", "schema_version", "n_cols")
-    SchemaRegistry.bindSchemaVersion(CdcStream.derive(spark, dir), intervals)
+    SchemaRegistry.bindSchemaVersion(CdcStream.derive(spark, dir), versions)
       .join(broadcast(nCols), Seq("schema_name", "table_name", "schema_version"))
       .groupBy("schema_name", "table_name", "schema_version", "n_cols")
       .agg(count(lit(1)).as("cnt"),

@@ -31,8 +31,7 @@ object ExtraQueries {
       (v, from) <- Seq((1, 0L), (2, 1002000L), (3, 1005000L))
     } yield SchemaRegistry.TableVersion(s, t, v, from,
       if (v == 1) base else base.add(s"c$v", StringType))
-    val intervals = SchemaRegistry.versionIntervals(spark, versions)
-    SchemaRegistry.bindSchemaVersion(CdcStream.derive(spark, dir), intervals)
+    SchemaRegistry.bindSchemaVersion(CdcStream.derive(spark, dir), versions)
       .groupBy("schema_name", "table_name", "schema_version")
       .agg(count(lit(1)).as("cnt"),
         min(col("commit_ts")).as("min_ts"), max(col("commit_ts")).as("max_ts"))

@@ -302,7 +302,8 @@ object StreamTwinQueries {
    * ts, and the epoch's opening barrier ts lower-bounds all its rows
    * (min_ts >= barrier_ts is pinned by the hash). Twin of the streaming
    * path's apply-DDLs-then-rows microbatch ordering
-   * ([[graft.streaming.DdlStream.withTextDdl]]).
+   * ([[graft.streaming.DdlStream.controlStep]] inside
+   * [[graft.streaming.Changefeed.start]]).
    */
   private val BarrierDdls = Seq(
     ("tbl_0", 1001500L), ("tbl_0", 1003000L),

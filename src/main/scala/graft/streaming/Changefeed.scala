@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.SchemaRegistry
 import graft.operators._
 
 /**
@@ -27,10 +28,9 @@ final case class ChangefeedSpec(
     compact: Boolean = true,
     safeModeUntilTs: Option[Long] = None,
     checkpointDir: String,
-    maxEventsPerTrigger: Option[Long] = None,
     // first-class runtime options mirroring the reference's ReplicaConfig
     // surface (pkg/config/replica_config.go:45-110): per-table DML metrics
-    // and the textual-DDL control path, previously compose-only wrappers.
+    // and the textual-DDL control path.
     metricsDir: Option[String] = None,
     textDdlRegistryDir: Option[String] = None,
     textDdlDefaultSchema: String = "",
@@ -51,7 +51,6 @@ object Changefeed {
     * over-blocking default. */
   def ddlAction(sql: String, defaultSchema: String = ""): Seq[String] = {
     import graft.core.DdlParser._
-    import graft.core.SchemaRegistry
     try parse(sql, defaultSchema).map {
       case _: CreateTable => "create_table"
       case _: DropTable => "drop_table"
@@ -181,14 +180,13 @@ object Changefeed {
               .withColumnRenamed("target_schema", "schema_name")
               .withColumnRenamed("target_table", "table_name")
           else data
-        // the user sink receives schema-bound rows; metrics record the
-        // batch as produced by the pipeline (the reference's sink-level
-        // DML counters) — before the bind, whose broadcast would otherwise
-        // cost them one more job
-        val bound: (DataFrame, Long) => Unit = (df, id) =>
-          sink(versions.fold(df)(DdlStream.bindVersions(spark, df, _)), id)
-        spec.metricsDir.fold(bound)(Metrics.withDmlMetrics(spark, _)(bound))(
-          b, batchId)
+        // the batch binds once, as a map-only plan literal (no job), so
+        // the metrics wrapper and the user sink see the same schema-bound
+        // rows; compacted batches bind on their last_commit_ts
+        val bound = versions.fold(b)(SchemaRegistry.bindSchemaVersion(b, _,
+          if (spec.compact) "last_commit_ts" else "commit_ts"))
+        spec.metricsDir.fold(sink)(Metrics.withDmlMetrics(spark, _)(sink))(
+          bound, batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()

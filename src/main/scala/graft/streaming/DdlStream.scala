@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.{DdlParser, SchemaRegistry}
 
@@ -58,29 +59,19 @@ object DdlStream {
    * opening DDL ts, 0 for the initial epoch) is a lower bound on every
    * row ts in the epoch.
    *
-   * Scale shape: the DDL set is control-plane data (collected, sorted,
-   * folded into a literal per-table array), so epoch assignment is a pure
-   * map-only column expression over the row stream — no join, no shuffle;
-   * the arrays are a handful of longs so the interpreted higher-order
-   * filter is negligible.
+   * Scale shape: the DDL set is control-plane data (collected and
+   * folded into a literal per-table array by
+   * [[graft.core.SchemaRegistry.asOfEntries]], the lookup schema binding
+   * uses), so epoch assignment is a pure map-only column expression over
+   * the row stream — no join, no shuffle; the arrays are a handful of
+   * longs so the interpreted higher-order filter is negligible.
    */
   def barrierEpochs(rows: DataFrame, ddls: DataFrame): DataFrame = {
-    val byTable: Map[String, Seq[Long]] = ddls.select("table_name", "ddl_ts")
-      .collect().groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getLong(1)).toSeq.sorted).toMap
-    val emptyArr = array().cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType, containsNull = false))
-    // flat map-literal lookup — a per-table when() chain would nest one
-    // CaseWhen PER TABLE and blow analysis/codegen on a changefeed with
-    // thousands of tables
-    val sorted = byTable.toSeq.sortBy(_._1)
-    val tsArr =
-      if (sorted.isEmpty) emptyArr
-      else coalesce(element_at(
-        map(sorted.flatMap { case (t, tss) =>
-          Seq(lit(t), array(tss.map(lit): _*))
-        }: _*), col("table_name")), emptyArr)
-    val passed = filter(tsArr, ts => ts <= col("commit_ts"))
+    val byTable = ddls.select("table_name", "ddl_ts")
+      .collect().groupBy(_.getString(0)).toSeq
+      .map { case (t, rs) => Seq(t) -> rs.toSeq.map(r => lit(r.getLong(1))) }
+    val passed = SchemaRegistry.asOfEntries(byTable, Seq(col("table_name")),
+      col("commit_ts"), LongType)(identity)
     rows
       .withColumn("epoch", size(passed).cast("long"))
       .withColumn("barrier_ts", coalesce(array_max(passed), lit(0L)))
@@ -141,33 +132,4 @@ object DdlStream {
   private[streaming] def dataRows(batch: DataFrame): DataFrame =
     if (batch.columns.contains("op")) batch.filter(col("op") =!= DdlOp)
     else batch
-
-  /** Bind each row to the schema version in force at its ts;
-    * post-compaction batches carry last_commit_ts, so bind on whichever
-    * event-time column the batch has. */
-  private[streaming] def bindVersions(spark: SparkSession, data: DataFrame,
-      vs: Seq[SchemaRegistry.TableVersion]): DataFrame =
-    if (vs.isEmpty) data.withColumn("schema_version", lit(null).cast("int"))
-    else {
-      val withTs =
-        if (data.columns.contains("commit_ts")) data
-        else data.withColumn("commit_ts", col("last_commit_ts"))
-      val b = SchemaRegistry.bindSchemaVersion(withTs,
-        SchemaRegistry.versionIntervals(spark, vs))
-      if (data.columns.contains("commit_ts")) b else b.drop("commit_ts")
-    }
-
-  /**
-   * Wrap a sink so each microbatch first applies its DDL control rows,
-   * then delivers data rows bound to their schema version. Batch replays
-   * re-apply nothing (the (ts, sql) pair set is the idempotence key, the
-   * same way the reference skips already-synced DDL locations).
-   */
-  def withTextDdl(spark: SparkSession, registryDir: String,
-                  defaultSchema: String = "")
-                 (sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      val vs = controlStep(batch, batchId, registryDir, defaultSchema)
-      sink(bindVersions(spark, dataRows(batch), vs), batchId)
-  }
 }

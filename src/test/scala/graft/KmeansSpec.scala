@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
-import graft.streaming.{DdlStream, Sinks}
+import graft.streaming.Sinks
 
-/** Unit semantics for the round-6 operators: k-means Lloyd iterations,
-  * DDL-barrier epochs, and sink-progress checkpoint algebra. */
+/** Unit semantics for the round-6 operators: k-means Lloyd iterations
+  * and sink-progress checkpoint algebra. */
 class KmeansSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,22 +24,6 @@ class KmeansSpec extends SparkSpec {
     val again = VectorOps.kmeans(vecs, k = 2, iters = 2)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     assert(again == got)
-  }
-
-  test("barrierEpochs: epoch counts DDLs at or below the row ts") {
-    val rows = Seq(
-      ("t1", 100L), ("t1", 150L), ("t1", 200L), ("t1", 250L),
-      ("t2", 120L)).toDF("table_name", "commit_ts")
-    val ddls = Seq(("t1", 150L), ("t1", 240L)).toDF("table_name", "ddl_ts")
-    val got = DdlStream.barrierEpochs(rows, ddls)
-      .select("table_name", "commit_ts", "epoch", "barrier_ts")
-      .as[(String, Long, Long, Long)].collect().toSet
-    assert(got == Set(
-      ("t1", 100L, 0L, 0L),   // before any DDL
-      ("t1", 150L, 1L, 150L), // at the barrier → after it applies
-      ("t1", 200L, 1L, 150L),
-      ("t1", 250L, 2L, 240L),
-      ("t2", 120L, 0L, 0L)))  // no DDLs for t2
   }
 
   test("kmeans kernel assignment equals the legacy broadcast-join argmin exactly") {

@@ -127,33 +127,42 @@ class Round21Spec extends SparkSpec {
     assert(kernel === legacy)
   }
 
-  // ---- assignCentroids: kernel path == broadcast-join cutover ---------
+  // ---- assignCentroids: kernel path == broadcast cutover ---------------
 
   test("assignCentroids strategies agree across the plan-bytes threshold") {
     def f(i: Long, d: Int): Float =
       ((i * 1103515245L + d * 12345L) % 2048L).toFloat / 1024f - 1f
     val dim = 6
+    def emb(src: Long): Array[java.lang.Float] =
+      Array.tabulate(dim)(d => java.lang.Float.valueOf(f(src, d)))
     val vecs = (0L until 80L).map { i =>
       val src = if (i >= 40 && i < 44) 11L else i // planted distance ties
-      val arr: Array[java.lang.Float] =
-        if (i == 13L) null // NULL embedding must keep the row, lowest cid
-        else Array.tabulate(dim)(d => java.lang.Float.valueOf(f(src, d)))
-      (i, arr)
+      // NULL embedding must keep the row, lowest cid
+      (Option(i), if (i == 13L) null else emb(src))
     }.toDF("vec_id", "embedding")
+    // a NULL id and a repeated id (5 again, another vector): both paths
+    // must keep every input row with its own assignment
+    val input = vecs.union(
+      Seq((Option.empty[Long], emb(17L)), (Option(5L), emb(70L)))
+        .toDF("vec_id", "embedding"))
     val cents = VectorOps.centroids(
       vecs.filter(col("embedding").isNotNull)
         .withColumn("label", col("vec_id") % 5), "label", "embedding")
     def run(maxBytes: Long) =
-      VectorOps.assignCentroids(vecs, cents, maxPlanBytes = maxBytes)
+      VectorOps.assignCentroids(input, cents, maxPlanBytes = maxBytes)
         .select(col("vec_id"), col("centroid_id"), col("centroid"), col("dist"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          Option(r.getSeq[Long](2)).map(_.toSeq), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toSet
+        .collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+          r.getLong(1), Option(r.getSeq[Long](2)).map(_.toSeq),
+          if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toSeq.sortBy(_.toString)
     val kernelPath = run(Long.MaxValue)
-    val joinPath = run(0L)
-    assert(kernelPath === joinPath)
+    val broadcastPath = run(0L)
+    assert(kernelPath === broadcastPath)
+    assert(kernelPath.size === 82)
     // the NULL-embedding row is present with the lowest cid and NULL dist
-    assert(kernelPath.exists { case (id, cid, _, d) => id == 13L && d.isEmpty })
+    assert(kernelPath.exists { case (id, _, _, d) => id.contains(13L) && d.isEmpty })
+    assert(kernelPath.count(_._1.isEmpty) === 1)
+    assert(kernelPath.count(_._1.contains(5L)) === 2)
   }
 
   // ---- dupClusters: mid-loop short-circuit == full distributed loop ---

@@ -4,7 +4,8 @@ import org.apache.spark.sql.types._
 import graft.core.SchemaRegistry
 import graft.core.SchemaRegistry._
 
-/** DDL application and optimistic schema-lattice join (G1/G3). */
+/** DDL application, optimistic schema-lattice join and as-of schema
+  * binding (G1/G3/J2). */
 class SchemaSpec extends SparkSpec {
 
   private val base = new StructType().add("pk", LongType).add("v", DoubleType)
@@ -36,14 +37,37 @@ class SchemaSpec extends SparkSpec {
     assert(conflict.types.toSet == Set(StringType, LongType))
   }
 
-  test("version intervals are contiguous and open-ended") {
+  test("bindSchemaVersion: as-of lookup at the boundary timestamps") {
+    import spark.implicits._
     val vs = Seq(
       TableVersion("db", "t", 1, 0L, base),
       TableVersion("db", "t", 2, 100L, base),
-      TableVersion("db", "t", 3, 200L, base))
-    val rows = SchemaRegistry.versionIntervals(spark, vs)
-      .orderBy("v_from").collect()
-    assert(rows.map(_.getLong(3)).toSeq == Seq(0L, 100L, 200L))
-    assert(rows.map(_.getLong(4)).toSeq == Seq(100L, 200L, Long.MaxValue))
+      TableVersion("db", "t", 3, 200L, base),
+      // a multi-change ALTER splits into two versions at one ts
+      TableVersion("db", "s", 1, 0L, base),
+      TableVersion("db", "s", 2, 10L, base),
+      TableVersion("db", "s", 3, 10L, base))
+    val events = Seq[(Option[String], String, Option[Long])](
+      (Some("db"), "t", Some(-1L)),            // before the first version
+      (Some("db"), "t", Some(0L)),
+      (Some("db"), "t", Some(99L)),
+      (Some("db"), "t", Some(100L)),           // at effectiveFrom → new version
+      (Some("db"), "t", Some(200L)),
+      (Some("db"), "t", Some(Long.MaxValue)),  // last version stays open
+      (Some("db"), "t", None),                 // NULL ts
+      (Some("db"), "x", Some(150L)),           // unknown table
+      (None, "t", Some(150L)),                 // NULL schema
+      (Some("db"), "s", Some(10L)))
+      .zipWithIndex.map { case ((s, t, ts), i) => (i, s, t, ts) }
+      .toDF("i", "schema_name", "table_name", "commit_ts")
+    def bind(versions: Seq[TableVersion]) = {
+      val b = SchemaRegistry.bindSchemaVersion(events, versions)
+      assert(b.schema("schema_version").dataType === IntegerType)
+      b.orderBy("i").select("schema_version").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
+    }
+    assert(bind(vs) === Seq(None, Some(1), Some(1), Some(2), Some(3), Some(3),
+      None, None, None, Some(3)))
+    assert(bind(Nil) === Seq.fill(10)(None))
   }
 }

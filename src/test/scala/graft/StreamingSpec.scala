@@ -562,8 +562,8 @@ class StreamingSpec extends SparkSpec {
     // Jobs the microbatch engine runs per batch (tagged with
     // streaming.sql.batchId). On top of the plain feed's jobs, the
     // full-option feed adds the control step's single scan (resolved ts
-    // and DDL rows together), the metrics write and the bind's
-    // broadcast: 5 jobs.
+    // and DDL rows together) and the metrics write; the schema bind is a
+    // plan literal and runs no job: 4 jobs.
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
     val tap = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -595,7 +595,7 @@ class StreamingSpec extends SparkSpec {
         ChangefeedSpec(id = "cf-jobs-plain", checkpointDir = s"$plainDir/ckpt"))
       val fullDir = Files.createTempDirectory("graft_cfjobs1").toString
       val full = perBatch(fullSpec("cf-jobs-full", fullDir))
-      assert(full.zip(plain).map { case (f, p) => f - p } == Seq(5, 5, 5),
+      assert(full.zip(plain).map { case (f, p) => f - p } == Seq(4, 4, 4),
         s"plain=$plain full=$full")
     } finally spark.sparkContext.removeSparkListener(tap)
   }
