@@ -38,6 +38,9 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, n)
   }
 
+  private def printFail(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] FAIL $what: ${e.getClass.getName}: ${e.getMessage}")
+
   /** A full run's sidecar file. BENCH_FULL.json is the sf0.1, 32-core
     * committed-prior contract; any other scale or core count gets a
     * suffixed name (`_<sf>`, `_c<cpus>`) so it can never clobber the
@@ -148,46 +151,40 @@ object Bench {
         override def onQueryTerminated(
             e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       })
-    def gcSettle(): Unit = { System.gc(); Thread.sleep(300); System.gc() }
     // Shuffle-volume attribution: aggregate stage shuffle write bytes per
-    // gate (listener drained at each boundary so async events land on the
-    // right gate). "Is there a shuffle here that becomes the bottleneck at
-    // 100×" answered by measurement — the per-gate MB ship in BENCH_FULL.
-    val shuffleWrite = BenchMetrics.install(spark.sparkContext).bytes
-    def drain(): Unit = BenchMetrics.drain(spark.sparkContext)
+    // gate (BenchMetrics.measure drains the listener at each boundary so
+    // async events land on the right gate). "Is there a shuffle here that
+    // becomes the bottleneck at 100×" answered by measurement — the
+    // per-gate MB ship in BENCH_FULL.
+    val sc = spark.sparkContext
     val shuffleByGate = scala.collection.mutable.Map.empty[String, Long]
     val failedGates = scala.collection.mutable.ArrayBuffer.empty[String]
+    def gate(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): () => Long =
+      () => BenchMetrics.materialize(fn(spark, sfDir))
     // The q60-q68 LLM-tier block sits right where the pure phase's driver
     // churn peaks; three rounds of phantom 2-5x inflation (q65/q66 in-suite
     // vs isolated) trace to collections landing there — settle right before
     // it so the block starts from a clean heap.
-    def run(entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-            settleAfterEach: Boolean) =
-      entries.zipWithIndex.map { case ((name, fn), i) =>
+    def run(entries: Seq[(String, () => Long)], settleAfterEach: Boolean) =
+      entries.zipWithIndex.map { case ((name, body), i) =>
         // periodic settle in the pure phase too (between gates, unbilled):
         // ~140 map-only gates accumulate enough young-gen garbage that a
         // collection lands mid-gate 2-5x inflating whichever one draws it
         // (r8: q130 6.3 s in-suite vs 2.65 isolated, q28b 5.7 vs 1.3)
         if (!settleAfterEach &&
-            ((i % 25 == 0 && i > 0) || name.startsWith("q60"))) gcSettle()
+            ((i % 25 == 0 && i > 0) || name.startsWith("q60"))) BenchMetrics.settle()
         val starts0 = streamStarts.get()
-        drain(); val sh0 = shuffleWrite.get()
-        val t0 = System.nanoTime()
         // LOUD failure: a crashing gate must not hide behind a small wall
         // time — record it and print the cause; the JSON carries "failed"
-        try { BenchMetrics.materialize(fn(spark, sfDir)); () } catch {
-          case e: Throwable =>
-            failedGates += name
-            System.err.println(s"[bench] FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        drain(); shuffleByGate(name) = shuffleWrite.get() - sh0
+        val r = BenchMetrics.measure(sc)(body())
+        r.error.foreach { e => failedGates += name; printFail(name, e) }
+        shuffleByGate(name) = r.shuffleBytes
         if (!settleAfterEach && streamStarts.get() != starts0)
           System.err.println(
             s"[bench] WARN: pure-phase gate $name started a StreamingQuery —" +
               " tag it heavy = true at its GateQuery definition")
-        if (settleAfterEach) gcSettle()
-        name -> sec
+        if (settleAfterEach) BenchMetrics.settle()
+        name -> r.sec
       }
     // Prebuild phase: the dir-keyed shared caches (diff table, chunk-
     // compare facts, LSH candidates, CC labels) run FIRST as their own
@@ -196,26 +193,17 @@ object Bench {
     // (r17: q243 billed 6.94 s of cmpCache build that its repeats never
     // paid). Skipped on filtered local runs — those measure whatever the
     // named gate actually does, cold caches included.
-    val buildPhase =
-      if (args.nonEmpty) Seq.empty[(String, Double)]
+    val builds =
+      if (args.nonEmpty) Seq.empty
       else graft.queries.Gate.builds.map { case (name, warm) =>
-        drain(); val sh0 = shuffleWrite.get()
-        val t0 = System.nanoTime()
-        try warm(spark, sfDir) catch {
-          case e: Throwable =>
-            failedGates += name
-            System.err.println(
-              s"[bench] FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        drain(); shuffleByGate(name) = shuffleWrite.get() - sh0
-        gcSettle()
-        name -> sec
+        name -> (() => { warm(spark, sfDir); 0L })
       }
+    val buildPhase = run(builds, settleAfterEach = true)
     val buildNames = buildPhase.map(_._1).toSet
-    val (heavyQs, pureQs) = sel.toSeq.sortBy(_._1).partition(kv => heavy(kv._1))
+    val (heavyQs, pureQs) = sel.toSeq.sortBy(_._1)
+      .map { case (n, fn) => n -> gate(fn) }.partition(kv => heavy(kv._1))
     val purePhase = run(pureQs, settleAfterEach = false)
-    gcSettle()
+    BenchMetrics.settle()
     val gatesRaw =
       (buildPhase ++ purePhase ++ run(heavyQs, settleAfterEach = true))
         .sortBy(_._1)
@@ -243,20 +231,17 @@ object Bench {
         !failedGates.contains(name) && !buildNames.contains(name)
       if (!outlier) name -> raw
       else {
-        gcSettle()
-        val fn = sel(name)
+        BenchMetrics.settle()
+        val body = gate(sel(name))
         var repFailed = false
         val reps = (0 until 3).map { _ =>
-          val t0 = System.nanoTime()
-          try { BenchMetrics.materialize(fn(spark, sfDir)); () } catch {
-            case e: Throwable =>
-              repFailed = true
-              System.err.println(s"[bench] FAIL $name during adjudication " +
-                s"repeat: ${e.getClass.getName}: ${e.getMessage}")
+          val r = BenchMetrics.measure(sc)(body())
+          r.error.foreach { e =>
+            repFailed = true
+            printFail(s"$name during adjudication repeat", e)
           }
-          val s = (System.nanoTime() - t0) / 1e9
-          if (heavy(name)) gcSettle()
-          s
+          if (heavy(name)) BenchMetrics.settle()
+          r.sec
         }.sorted
         if (repFailed) {
           // a failing repeat's wall time is meaningless — keep the raw
@@ -283,11 +268,18 @@ object Bench {
         }
       }
     }
+    // a failing ingest is a failed entry like a gate: its cause printed,
+    // its -1.0 s marker kept out of the total
     val (ingestSec, ingestRows) =
       if (args.nonEmpty) (0.0, 0L)
-      else try streamIngest(spark, sfDir) catch { case _: Throwable => (-1.0, 0L) }
+      else try streamIngest(spark, sfDir) catch {
+        case e: Throwable =>
+          failedGates += "s0_stream_ingest"
+          printFail("s0_stream_ingest", e)
+          (-1.0, 0L)
+      }
     val results = gates :+ ("s0_stream_ingest" -> ingestSec)
-    val total = results.map(_._2).sum
+    val total = gates.map(_._2).sum + math.max(ingestSec, 0.0)
 
     // Full-name per-query timings go to a sidecar file; the stdout line uses
     // the short qNN tokens so the whole JSON fits in the driver's bounded

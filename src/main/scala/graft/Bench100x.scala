@@ -303,12 +303,6 @@ object Bench100x {
     spark.range(1000000).select((col("id") % 7).as("k"))
       .dropDuplicates("k").groupBy("k").agg(count(lit(1))).count()
 
-    // per-entry shuffle WRITE volume (the ONE listener + drain discipline
-    // shared with Bench): scale claims ("one shuffle", "map-only") become
-    // numbers measured identically in both artifacts
-    val shuffleWrite = BenchMetrics.install(spark.sparkContext).bytes
-    def drain(): Unit = BenchMetrics.drain(spark.sparkContext)
-
     // Clean-room discipline (r11: q85_ivf_index 199 s in-suite vs 73 s
     // isolated, zero source diff): gates persist/localCheckpoint inside
     // their plans and never unpersist — 40 entries of leftovers evict the
@@ -326,7 +320,7 @@ object Bench100x {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      System.gc(); Thread.sleep(300); System.gc()
+      BenchMetrics.settle()
       // Flush dirty pages between entries (r12 adjudication: the two
       // big-shuffle entries read 1.5-1.7× their isolated numbers with
       // bit-identical plans — the previous entry's unflushed shuffle spill
@@ -337,26 +331,32 @@ object Bench100x {
       catch { case _: Exception => () }
     }
 
-    val times = sel.map { case (name, mk) =>
-      if (sharesIvfIndex(name)) { System.gc(); Thread.sleep(300); System.gc() }
+    // per-entry wall and shuffle WRITE volume through the ONE measurement
+    // shared with Bench: scale claims ("one shuffle", "map-only") become
+    // numbers measured identically in both artifacts. A throwing entry is
+    // printed and counted in "failed"; the run goes on.
+    val readings = sel.map { case (name, mk) =>
+      if (sharesIvfIndex(name)) BenchMetrics.settle()
       else cleanRoom()
-      drain(); val sh0 = shuffleWrite.get()
-      val t0 = System.nanoTime()
-      val rows = BenchMetrics.materialize(mk())
-      val secs = (System.nanoTime() - t0) / 1e9
-      drain(); val shMb = (shuffleWrite.get() - sh0) / 1048576.0
-      System.err.println(
-        f"[bench100x] $name%-22s $secs%8.2f s  $shMb%9.1f MB shuffle  ($rows rows)")
-      (name, secs, shMb)
+      val r = BenchMetrics.measure(spark.sparkContext)(BenchMetrics.materialize(mk()))
+      r.error match {
+        case Some(e) => System.err.println(
+          s"[bench100x] FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
+        case None => System.err.println(
+          f"[bench100x] $name%-22s ${r.sec}%8.2f s  ${r.shuffleBytes / 1048576.0}%9.1f MB shuffle  (${r.rows} rows)")
+      }
+      name -> r
     }
     val diskMbps = BenchMetrics.diskMbps()
     System.err.println(f"[bench100x] disk probe: $diskMbps%.0f MB/s direct write")
-    val qjson = times.map { case (n, s, _) => s""""$n":${f"$s%.2f"}""" }
+    val qjson = readings.map { case (n, r) => s""""$n":${f"${r.sec}%.2f"}""" }
       .mkString(",")
-    val shjson = times.map { case (n, _, m) => s""""$n":${f"$m%.3f"}""" }
-      .mkString(",")
+    val shjson = readings.map { case (n, r) =>
+      s""""$n":${f"${r.shuffleBytes / 1048576.0}%.3f"}""" }.mkString(",")
     println(s"""{"metric":"bench100x","unit":"sec","dir":"$dir",""" +
-      s""""value":${f"${times.map(_._2).sum}%.2f"},"disk_mbps":${f"$diskMbps%.0f"},""" +
+      s""""value":${f"${readings.map(_._2.sec).sum}%.2f"},""" +
+      s""""failed":${readings.count(_._2.error.isDefined)},""" +
+      s""""disk_mbps":${f"$diskMbps%.0f"},""" +
       s""""queries":{$qjson},"shuffle_mb":{$shjson}}""")
     spark.stop()
   }

@@ -6,15 +6,17 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /**
- * Shared shuffle-volume instrumentation for Bench and Bench100x: ONE
- * stage-metrics listener + the listener-bus drain discipline, so the two
- * artifacts can't silently measure differently. Readings are attributed
- * per gate by draining the async bus at each boundary and diffing the
- * cumulative counter.
+ * The one per-entry measurement of Bench, Bench100x and BenchRepeat:
+ * [[measure]] drains the listener bus, snapshots the shuffle-write
+ * counter, times only the entry's body and drains again, so every
+ * artifact attributes wall seconds and shuffle bytes the same way and a
+ * throwing entry is recorded instead of escaping. [[settle]] is the
+ * unbilled GC pause between entries. [[materialize]] and [[diskMbps]]
+ * are shared with perfbench.
  */
 object BenchMetrics {
 
-  final class ShuffleListener extends SparkListener {
+  private final class ShuffleListener extends SparkListener {
     val bytes = new AtomicLong(0)
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       // taskMetrics can be null on failed/skipped stages
@@ -24,10 +26,15 @@ object BenchMetrics {
     }
   }
 
-  def install(sc: SparkContext): ShuffleListener = {
-    val l = new ShuffleListener
-    sc.addSparkListener(l)
-    l
+  // one listener per SparkContext, installed on the first measurement
+  private var installed: Option[(SparkContext, ShuffleListener)] = None
+  private def listener(sc: SparkContext): ShuffleListener = synchronized {
+    installed.collect { case (c, l) if c eq sc => l }.getOrElse {
+      val l = new ShuffleListener
+      sc.addSparkListener(l)
+      installed = Some(sc -> l)
+      l
+    }
   }
 
   /** Flush the async listener bus so pending stage events land on the
@@ -37,6 +44,31 @@ object BenchMetrics {
     try org.apache.spark.graftbridge.SparkInternals.waitListenerEmpty(sc)
     catch { case _: Throwable => () }
 
+  /** One entry's reading: wall seconds of the body alone, the shuffle
+    * bytes its stages wrote, the rows it returned (0 when it threw) and
+    * the error, if any. */
+  final case class Reading(sec: Double, shuffleBytes: Long, rows: Long,
+                           error: Option[Throwable])
+
+  /** Time `body` (typically `materialize(df)`) between two bus drains.
+    * LOUD failure is the caller's job: a throwing body comes back as
+    * `error` with the wall time it spent, never as an exception. */
+  def measure(sc: SparkContext)(body: => Long): Reading = {
+    val bytes = listener(sc).bytes
+    drain(sc)
+    val sh0 = bytes.get()
+    val t0 = System.nanoTime()
+    val (rows, error) =
+      try (body, None) catch { case e: Throwable => (0L, Some(e)) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    drain(sc)
+    Reading(sec, bytes.get() - sh0, rows, error)
+  }
+
+  /** GC settle between entries, unbilled: a collection of the previous
+    * entry's garbage must not land mid-measurement of the next one. */
+  def settle(): Unit = { System.gc(); Thread.sleep(300); System.gc() }
+
   /**
    * Materialize EVERY output column of a gate (r16 finding): a logical
    * `.count()` lets the optimizer PRUNE computed columns — q50's bit_xor
@@ -45,8 +77,8 @@ object BenchMetrics {
    * aggregate constant-folds to 1 row via OptimizeOneRowPlan,
    * eliminating the whole subtree. Executing the gate's own physical
    * plan and counting InternalRows measures the work the gate actually
-   * claims. Shared by Bench / Bench100x / BenchRepeat so the three
-   * artifacts can't silently measure differently.
+   * claims. Shared by the bench mains and perfbench so the artifacts
+   * can't silently measure differently.
    */
   def materialize(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()

@@ -19,11 +19,11 @@ object BenchRepeat {
     spark.sparkContext.setLogLevel("ERROR")
     val q = SparkEntry.queries(name)
     val times = (0 until n).map { i =>
-      val t0 = System.nanoTime()
-      val rows = BenchMetrics.materialize(q(spark, sfDir))
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[repeat] $name run$i: $s%.2f s ($rows rows)")
-      s
+      val r = BenchMetrics.measure(spark.sparkContext)(
+        BenchMetrics.materialize(q(spark, sfDir)))
+      r.error.foreach(e => throw e)
+      println(f"[repeat] $name run$i: ${r.sec}%.2f s (${r.rows} rows)")
+      r.sec
     }
     val sorted = times.sorted
     println(f"""{"gate":"$name","n":$n,"min":${sorted.head}%.2f,""" +

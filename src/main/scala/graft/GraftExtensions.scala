@@ -31,9 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // custom logical operator: AS-OF JOIN (graft.plans.AsOfJoin) rewrites
     // to the single-shuffle union-window plan during resolution
     ext.injectResolutionRule(_ => graft.plans.RewriteAsOfJoin)
-    // opt-in optimizer rewrite: keyless range joins plan as binned
-    // equi-joins when spark.graft.rangeJoin.binSize is set
-    ext.injectOptimizerRule(_ => graft.plans.RewriteRangeJoin)
     ext.injectFunction(fn("avro_encode_envelope",
       args => AvroEncodeEnvelope(args.head, schemaId(args, 1))))
     ext.injectFunction(fn("avro_decode_envelope",

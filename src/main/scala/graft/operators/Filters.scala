@@ -199,9 +199,9 @@ object Filters {
   }
 
   /** W7 — BDR/bidirectional filter: drop events originated by self. */
-  def bdrFilter(df: DataFrame, dropSourceIds: Seq[Int]): DataFrame =
-    if (dropSourceIds.isEmpty) df
-    else df.filter(!col("source_id").isin(dropSourceIds: _*))
+  def bdrFilter(df: DataFrame, selfSourceIds: Seq[Int]): DataFrame =
+    if (selfSourceIds.isEmpty) df
+    else df.filter(!col("source_id").isin(selfSourceIds: _*))
 
   /** F2 (ignore-sql branch) / F5 — DDL statement filter: drop control-
     * stream DDL whose SQL matches any ignore regex (reference

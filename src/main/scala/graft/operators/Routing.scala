@@ -280,15 +280,10 @@ object Routing {
    * Under Spark microbatch semantics the DAG collapses to: derive a
    * causality key per row; `repartition` on it; apply each partition
    * sequentially ordered by commit_ts — same-key rows land in the same
-   * partition in order, different keys parallelize.
+   * partition in order, different keys parallelize. `Sinks.sqlFileSink`
+   * does exactly that with this slot.
    */
   val DefaultSlots = 16384
   def causalitySlot(key: Column, slots: Int = DefaultSlots): Column =
     pmod(hash32(key), lit(slots.toLong))
-
-  def partitionByCausality(df: DataFrame, numPartitions: Int,
-                           slots: Int = DefaultSlots): DataFrame =
-    df.withColumn("causality_slot", causalitySlot(col("pk"), slots))
-      .repartition(numPartitions, col("causality_slot"))
-      .sortWithinPartitions(col("commit_ts"), col("seq"))
 }

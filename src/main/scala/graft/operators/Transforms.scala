@@ -138,13 +138,11 @@ object Transforms {
   }
 
   /**
-   * D8 — column value mapping (DM's deprecated column-mapping:
-   * pkg/column-mapping/column.go:43-72): add prefix/suffix, and
-   * "partition id" — embed a shard index into the high bits of a bigint key
-   * (reference partitionID at pkg/column-mapping/column.go:442-530).
+   * D8 — column value mapping (DM's deprecated column-mapping,
+   * pkg/column-mapping/column.go:43-72): "partition id" embeds a shard
+   * index into the high bits of a bigint key (reference partitionID at
+   * pkg/column-mapping/column.go:442-530).
    */
-  def addPrefix(c: Column, prefix: String): Column = concat(lit(prefix), c)
-  def addSuffix(c: Column, suffix: String): Column = concat(c, lit(suffix))
   def partitionId(instanceId: Int, c: Column, bits: Int = 44): Column =
     shiftleft(lit(instanceId.toLong), bits).bitwiseOR(c)
 }

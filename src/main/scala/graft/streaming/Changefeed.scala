@@ -22,7 +22,6 @@ final case class ChangefeedSpec(
     eventRules: Seq[Filters.EventRule] = Nil,
     exprRules: Seq[Filters.ExprRule] = Nil,
     ignoredStartTs: Seq[Long] = Nil,
-    dropSourceIds: Seq[Int] = Nil,
     routes: Seq[Routing.RouteRule] = Nil,
     splitUpdates: Boolean = true,
     compact: Boolean = true,
@@ -142,7 +141,6 @@ object Changefeed {
     d = Filters.eventFilter(d, spec.eventRules)
     d = Filters.exprFilter(d, spec.exprRules)
     d = Filters.startTsFilter(d, spec.ignoredStartTs)
-    d = Filters.bdrFilter(d, spec.dropSourceIds)
     d = Routing.route(d, spec.routes)
     spec.safeModeUntilTs.foreach(ts => d = Transforms.safeMode(d, ts))
     if (spec.splitUpdates) d = Transforms.updateSplit(d)

@@ -150,8 +150,8 @@ object Sinks {
 
   /** Bucket dirs holding at least one parquet file (a bucket whose keys
     * were all deleted leaves an empty version dir). */
-  private def liveBucketPaths(stateDir: String, p: StatePointer): Seq[String] =
-    p.versions.toSeq.sorted.map { case (b, v) => s"$stateDir/b$b/v$v" }
+  private def liveBucketPaths(stateDir: String, versions: Map[Int, Long]): Seq[String] =
+    versions.toSeq.sorted.map { case (b, v) => s"$stateDir/b$b/v$v" }
       .filter(d => Option(new java.io.File(d).listFiles())
         .exists(_.exists(_.getName.endsWith(".parquet"))))
 
@@ -187,9 +187,8 @@ object Sinks {
     val upserts = keyed.filter(col("net_op") =!= "D")
       .select(keyCols.map(col) ++ Seq(col("final_val"), col("last_commit_ts"),
         col("_bucket")): _*)
-    val existing = touched.toSeq.flatMap(b => versions.get(b).map(v => s"$stateDir/b$b/v$v"))
-      .filter(d => Option(new java.io.File(d).listFiles())
-        .exists(_.exists(_.getName.endsWith(".parquet"))))
+    val existing = liveBucketPaths(stateDir,
+      versions.filter { case (b, _) => touched.contains(b) })
     val merged =
       if (existing.isEmpty) upserts
       else {
@@ -223,7 +222,7 @@ object Sinks {
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
     val p = readPointer(Paths.get(s"$stateDir/CURRENT"))
       .getOrElse(throw new IllegalStateException(s"no state at $stateDir"))
-    val paths = liveBucketPaths(stateDir, p)
+    val paths = liveBucketPaths(stateDir, p.versions)
     if (paths.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(paths: _*)
   }

@@ -58,16 +58,6 @@ class Round11Spec extends SparkSpec {
     // the opaque billion-element Sequence failure is replaced by guidance
     assert(err.getMessage.contains("cap sentinel end values"),
       err.getMessage)
-    // and the optimizer rule guards the same way
-    import graft.plans.RewriteRangeJoin.BinSizeKey
-    spark.conf.set(BinSizeKey, "1000")
-    try {
-      val err2 = intercept[Exception] {
-        points.join(wide, col("p") >= col("s") && col("p") < col("e")).count()
-      }
-      assert(err2.getMessage.contains("cap sentinel end values"),
-        err2.getMessage)
-    } finally spark.conf.unset(BinSizeKey)
   }
 
   test("k-center stops early instead of emitting duplicate seeds") {
@@ -85,56 +75,6 @@ class Round11Spec extends SparkSpec {
     val got = Ranges.pointInInterval(points, "p", intervals, "s", "e", 4L)
       .select("pid", "iid").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 100L), (2L, 100L)))
-  }
-
-  test("RewriteRangeJoin: conf-gated rewrite kills the nested loop, keeps results") {
-    import graft.plans.RewriteRangeJoin.BinSizeKey
-    val rnd = new scala.util.Random(422L)
-    val points = Seq.tabulate(300)(i => (i.toLong, rnd.nextInt(5000).toLong))
-      .toDF("pid", "p")
-    val intervals = Seq.tabulate(40) { i =>
-      val s = rnd.nextInt(5000).toLong
-      (2000L + i, s, s + rnd.nextInt(400).toLong)
-    }.toDF("iid", "s", "e")
-    // the four operator combos × both join orientations
-    val conds = Seq(
-      col("p") >= col("s") && col("p") < col("e"),
-      col("p") > col("s") && col("p") <= col("e"),
-      col("s") <= col("p") && col("e") > col("p"))
-    for (cond <- conds; flip <- Seq(false, true)) {
-      def join() = if (flip) intervals.join(points, cond)
-        else points.join(intervals, cond)
-      val want = join().select("pid", "iid").as[(Long, Long)].collect().toSet
-      spark.conf.set(BinSizeKey, "128")
-      try {
-        val df = join()
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"), s"plan:\n$plan")
-        val got = df.select("pid", "iid").as[(Long, Long)].collect()
-        assert(got.toSet == want && got.length == got.toSet.size,
-          s"cond=$cond flip=$flip")
-      } finally spark.conf.unset(BinSizeKey)
-    }
-    // conf off → untouched: the nested loop is back
-    val naive = points.join(intervals, conds.head)
-      .queryExecution.executedPlan.toString
-    assert(naive.contains("BroadcastNestedLoopJoin") ||
-      naive.contains("CartesianProduct"))
-  }
-
-  test("RewriteRangeJoin leaves equi-keyed interval joins alone") {
-    import graft.plans.RewriteRangeJoin.BinSizeKey
-    val a = Seq((1L, 10L), (2L, 20L)).toDF("k", "p")
-    val b = Seq((1L, 5L, 15L), (2L, 30L, 40L)).toDF("k2", "s", "e")
-    spark.conf.set(BinSizeKey, "8")
-    try {
-      val df = a.join(b, col("k") === col("k2") &&
-        col("p") >= col("s") && col("p") < col("e"))
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("_g_ivbin"), s"plan:\n$plan")
-      assert(df.select("k").as[Long].collect().toSeq == Seq(1L))
-    } finally spark.conf.unset(BinSizeKey)
   }
 
   // ---- z-order layout -----------------------------------------------

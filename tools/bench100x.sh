@@ -9,6 +9,10 @@
 # the isolated number in-file keeps the committed totals from
 # overstating the steady state.
 #
+# A throwing entry does not stop the pass: Bench100x prints its cause on
+# stderr, keeps its wall time in "queries" and counts it in the line's
+# "failed" field, which the merged artifact carries unchanged.
+#
 # Usage: tools/bench100x.sh <scaledDir> [outJson]
 # Run EXCLUSIVE: no concurrent sbt/verify in this repo (NOTES gotcha).
 set -euo pipefail
