@@ -98,20 +98,14 @@ object Bench {
     }).getOrElse(Map.empty)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.local(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warm-up: touch the three hot read paths (lineitem, the derived CDC
-    // stream, documents) so session/codegen/parquet-footer startup is not
-    // billed to whichever gate happens to run first — the r5 "q55
-    // regression" was exactly this cold-start cost moving between gates.
-    // Each touch is guarded: a scale dir missing a table (e.g. a CDC-only
-    // fixture) must not crash Bench before a single gate runs.
-    def warm(body: => Unit): Unit =
-      try body catch { case _: Throwable => () }
+  /** Warm-up: touch the three hot read paths (lineitem, the derived CDC
+    * stream, documents) so session/codegen/parquet-footer startup is not
+    * billed to whichever gate happens to run first — the r5 "q55
+    * regression" was exactly this cold-start cost moving between gates.
+    * Each touch is guarded: a scale dir missing a table (e.g. a CDC-only
+    * fixture) must not crash Bench before a single gate runs. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import BenchMetrics.warm
     warm(graft.core.Tables.load(spark, sfDir, "lineitem").count())
     warm(graft.core.CdcStream.derive(spark, sfDir).count())
     warm(graft.core.Tables.load(spark, sfDir, "documents").count())
@@ -122,6 +116,15 @@ object Bench {
     warm(graft.core.CdcStream.derive(spark, sfDir).limit(10000)
       .dropDuplicates("seq").groupBy("table_name")
       .agg(countDistinct(col("seq"))).count())
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Session.local(cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
+
+    warmUp(spark, sfDir)
 
     // optional args: restrict to named queries (local iteration; the
     // driver always runs the full set with no args)
@@ -279,7 +282,7 @@ object Bench {
           (-1.0, 0L)
       }
     val results = gates :+ ("s0_stream_ingest" -> ingestSec)
-    val total = gates.map(_._2).sum + math.max(ingestSec, 0.0)
+    val total = BenchMetrics.completedTotal(results, failedGates.contains)
 
     // Full-name per-query timings go to a sidecar file; the stdout line uses
     // the short qNN tokens so the whole JSON fits in the driver's bounded

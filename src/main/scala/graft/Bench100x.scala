@@ -260,6 +260,42 @@ object Bench100x {
     "q310_debezium_envelope", "q311_debezium_decoder",
     "q312_checker_dispatch")
 
+  /** Warm-up (same rationale as Bench's): compile the scan + shuffle/agg
+    * whole-stage-codegen paths and fault in parquet footers BEFORE any
+    * timed entry, so the first one doesn't absorb ~2-4 s of one-off JIT —
+    * the reason isolated single-gate runs read high vs in-suite (NOTES r9).
+    * Each touch is guarded: a scale dir without `lineitem` or `documents`
+    * still runs the entries that do not read them. */
+  def warmUp(spark: SparkSession, dir: String): Unit = {
+    import BenchMetrics.warm
+    warm(Tables.load(spark, dir, "lineitem")
+      .filter(col("l_orderkey") % 97 === 0)
+      .groupBy("l_returnflag").agg(count(lit(1))).count())
+    warm(Tables.load(spark, dir, "documents")
+      .select(sum(length(col("text")))).count())
+    warm(spark.range(1000000).select((col("id") % 7).as("k"))
+      .dropDuplicates("k").groupBy("k").agg(count(lit(1))).count())
+  }
+
+  /** The run's one JSON line. `"value"` sums the entries that completed;
+    * a failed entry keeps its reading under `"queries"` and is counted in
+    * `"failed"`. */
+  def summary(dir: String, readings: Seq[(String, BenchMetrics.Reading)],
+      diskMbps: Double): String = {
+    val qjson = readings.map { case (n, r) => s""""$n":${f"${r.sec}%.2f"}""" }
+      .mkString(",")
+    val shjson = readings.map { case (n, r) =>
+      s""""$n":${f"${r.shuffleBytes / 1048576.0}%.3f"}""" }.mkString(",")
+    val failed = readings.collect { case (n, r) if r.error.isDefined => n }.toSet
+    val total = BenchMetrics.completedTotal(
+      readings.map { case (n, r) => n -> r.sec }, failed)
+    s"""{"metric":"bench100x","unit":"sec","dir":"$dir",""" +
+      s""""value":${f"$total%.2f"},""" +
+      s""""failed":${failed.size},""" +
+      s""""disk_mbps":${f"$diskMbps%.0f"},""" +
+      s""""queries":{$qjson},"shuffle_mb":{$shjson}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_sf10")
@@ -291,17 +327,7 @@ object Bench100x {
     val only = args.lift(1).map(_.split(',').toSet)
     val sel = entries.filter(e => only.forall(_.contains(e._1)))
 
-    // Warm-up (same rationale as Bench's): compile the scan + shuffle/agg
-    // whole-stage-codegen paths and fault in parquet footers BEFORE any
-    // timed gate, so the first gate doesn't absorb ~2-4 s of one-off JIT —
-    // the reason isolated single-gate runs read high vs in-suite (NOTES r9)
-    Tables.load(spark, dir, "lineitem")
-      .filter(col("l_orderkey") % 97 === 0)
-      .groupBy("l_returnflag").agg(count(lit(1))).count()
-    Tables.load(spark, dir, "documents")
-      .select(sum(length(col("text")))).count()
-    spark.range(1000000).select((col("id") % 7).as("k"))
-      .dropDuplicates("k").groupBy("k").agg(count(lit(1))).count()
+    warmUp(spark, dir)
 
     // Clean-room discipline (r11: q85_ivf_index 199 s in-suite vs 73 s
     // isolated, zero source diff): gates persist/localCheckpoint inside
@@ -349,15 +375,7 @@ object Bench100x {
     }
     val diskMbps = BenchMetrics.diskMbps()
     System.err.println(f"[bench100x] disk probe: $diskMbps%.0f MB/s direct write")
-    val qjson = readings.map { case (n, r) => s""""$n":${f"${r.sec}%.2f"}""" }
-      .mkString(",")
-    val shjson = readings.map { case (n, r) =>
-      s""""$n":${f"${r.shuffleBytes / 1048576.0}%.3f"}""" }.mkString(",")
-    println(s"""{"metric":"bench100x","unit":"sec","dir":"$dir",""" +
-      s""""value":${f"${readings.map(_._2.sec).sum}%.2f"},""" +
-      s""""failed":${readings.count(_._2.error.isDefined)},""" +
-      s""""disk_mbps":${f"$diskMbps%.0f"},""" +
-      s""""queries":{$qjson},"shuffle_mb":{$shjson}}""")
+    println(summary(dir, readings, diskMbps))
     spark.stop()
   }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
  * counter, times only the entry's body and drains again, so every
  * artifact attributes wall seconds and shuffle bytes the same way and a
  * throwing entry is recorded instead of escaping. [[settle]] is the
- * unbilled GC pause between entries. [[materialize]] and [[diskMbps]]
+ * unbilled GC pause between entries, [[warm]] the guarded warm-up touch
+ * and [[completedTotal]] the run total. [[materialize]] and [[diskMbps]]
  * are shared with perfbench.
  */
 object BenchMetrics {
@@ -64,6 +65,17 @@ object BenchMetrics {
     drain(sc)
     Reading(sec, bytes.get() - sh0, rows, error)
   }
+
+  /** Sum of the wall seconds of the entries that completed: a failed
+    * entry's partial time (or its -1 marker) would make a run that died
+    * early look faster. Failed entries are reported by count instead. */
+  def completedTotal(secs: Seq[(String, Double)], failed: String => Boolean): Double =
+    secs.collect { case (n, s) if !failed(n) => s }.sum
+
+  /** An unbilled warm-up touch, guarded: a scale dir missing a table must
+    * not kill a bench run before its first entry. */
+  def warm(body: => Unit): Unit =
+    try body catch { case _: Throwable => () }
 
   /** GC settle between entries, unbilled: a collection of the previous
     * entry's garbage must not land mid-measurement of the next one. */

@@ -160,31 +160,44 @@ object Changefeed {
       .queryName(spec.id)
       .option("checkpointLocation", spec.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // DDL + OWNER BARRIER (W1/G5): the batch's control step logs the
-        // barrier and advances the registry BEFORE any row is delivered;
-        // data rows bind against the versions it returns.
-        val versions = spec.textDdlRegistryDir.map(d =>
-          DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
-            spec.barrierDir, spec.redoEnabled))
-        val data = if (versions.isEmpty) batch else DdlStream.dataRows(batch)
-        // Compaction keys on the ROUTED identity: after shard-merge several
-        // source tables share one target, and net effects must fold across
-        // them (dm shard-merge semantics). Renamed back so sinks see the
-        // canonical envelope names.
-        val b =
-          if (spec.compact)
-            Compaction.compact(data,
-                keyCols = Seq("target_schema", "target_table", "pk"))
-              .withColumnRenamed("target_schema", "schema_name")
-              .withColumnRenamed("target_table", "table_name")
-          else data
-        // the batch binds once, as a map-only plan literal (no job), so
-        // the metrics wrapper and the user sink see the same schema-bound
-        // rows; compacted batches bind on their last_commit_ts
-        val bound = versions.fold(b)(SchemaRegistry.bindSchemaVersion(b, _,
-          if (spec.compact) "last_commit_ts" else "commit_ts"))
-        spec.metricsDir.fold(sink)(Metrics.withDmlMetrics(spark, _)(sink))(
-          bound, batchId)
+        // The batch is computed once: a frame is cached only where two
+        // readers share it (the control step and compaction share the raw
+        // batch; the metrics counters and the sink the bound one). A cache
+        // fill is a job of its own, so a one-reader feed caches nothing.
+        val cacheRaw = spec.textDdlRegistryDir.isDefined && batch.columns.contains("op")
+        if (cacheRaw) batch.persist()
+        try {
+          // DDL + OWNER BARRIER (W1/G5): the batch's control step logs the
+          // barrier and advances the registry BEFORE any row is delivered;
+          // data rows bind against the versions it returns.
+          val versions = spec.textDdlRegistryDir.map(d =>
+            DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
+              spec.barrierDir, spec.redoEnabled))
+          val data = if (versions.isEmpty) batch else DdlStream.dataRows(batch)
+          // Compaction keys on the ROUTED identity: after shard-merge several
+          // source tables share one target, and net effects must fold across
+          // them (dm shard-merge semantics). Renamed back so sinks see the
+          // canonical envelope names.
+          val b =
+            if (spec.compact)
+              Compaction.compact(data,
+                  keyCols = Seq("target_schema", "target_table", "pk"))
+                .withColumnRenamed("target_schema", "schema_name")
+                .withColumnRenamed("target_table", "table_name")
+            else data
+          // the batch binds once, as a map-only plan literal (no job), so
+          // the metrics wrapper and the user sink see the same schema-bound
+          // rows; compacted batches bind on their last_commit_ts
+          val bound = versions.fold(b)(SchemaRegistry.bindSchemaVersion(b, _,
+            if (spec.compact) "last_commit_ts" else "commit_ts"))
+          spec.metricsDir match {
+            case None => sink(bound, batchId)
+            case Some(m) =>
+              bound.persist()
+              try Metrics.withDmlMetrics(spark, m)(sink)(bound, batchId)
+              finally { bound.unpersist(); () }
+          }
+        } finally if (cacheRaw) { batch.unpersist(); () }
       }
       .trigger(Trigger.AvailableNow())
       .start()

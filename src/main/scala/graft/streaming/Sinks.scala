@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * foreachBatch sinks (SURVEY.md §2.8). Each receives a compacted net-effect
@@ -160,9 +161,13 @@ object Sinks {
    * by key (delete on D, upsert otherwise). Production target is a format
    * with native MERGE (Delta/Iceberg — transactional, partition-pruned);
    * on plain parquet the state is HASH-BUCKETED by key and only the
-   * buckets a batch touches are re-merged and rewritten — per-batch I/O is
-   * O(touched buckets), not O(state), which is what survives a 100 TB
-   * materialized table. Each bucket is independently versioned; an atomic
+   * buckets a batch touches are re-merged and rewritten. Hashing spreads a
+   * batch of m keys over nb·(1 − (1 − 1/nb)^m) of the nb buckets on
+   * average — every bucket once m is a few times nb — so per-batch I/O is
+   * O(state) for all but batches much smaller than nb. The merge is one
+   * shuffle on the bucket: each bucket is merged and written by one task,
+   * so each new bucket version is one parquet file, and nb bounds the
+   * write parallelism. Each bucket is independently versioned; an atomic
    * pointer swap publishes the batch.
    */
   def parquetStateSink(spark: SparkSession, stateDir: String,
@@ -178,44 +183,60 @@ object Sinks {
     val versions = cur.map(_.versions).getOrElse(Map.empty[Int, Long])
 
     def bucketOf = pmod(hash(keyCols.map(col): _*), lit(nb))
-    val keyed = batch.withColumn("_bucket", bucketOf)
-    // ≤ nb small ints — driver-safe
-    val touched = keyed.select("_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) { writePointer(stateDir, StatePointer(batchId, nb, versions)); return }
+    // the touched set and the merge both read the batch: cache it, unless
+    // the caller already has
+    val own = batch.storageLevel == StorageLevel.NONE
+    if (own) batch.persist()
+    try {
+      val stateCols = (keyCols ++ Seq("final_val", "last_commit_ts")).map(col)
+      val incoming = batch.select(stateCols ++ Seq(bucketOf.as("_bucket"),
+        lit(1).as("_src"), (col("net_op") === "D").as("_del")): _*)
+      // one scan folds each partition to its bucket set (≤ nb small ints)
+      val touched = incoming.select(col("_bucket")).rdd
+        .mapPartitions(it => Iterator(it.map(_.getInt(0)).toSet))
+        .collect().flatten.distinct.sorted
+      if (touched.isEmpty) { writePointer(stateDir, StatePointer(batchId, nb, versions)); return }
 
-    val upserts = keyed.filter(col("net_op") =!= "D")
-      .select(keyCols.map(col) ++ Seq(col("final_val"), col("last_commit_ts"),
-        col("_bucket")): _*)
-    val existing = liveBucketPaths(stateDir,
-      versions.filter { case (b, _) => touched.contains(b) })
-    val merged =
-      if (existing.isEmpty) upserts
-      else {
-        // read ONLY the touched buckets' live state; anti-join removes keys
-        // replaced or deleted this batch, then the new images are appended
-        spark.read.parquet(existing: _*)
-          .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .withColumn("_bucket", bucketOf)
-          .unionByName(upserts)
+      val existing = liveBucketPaths(stateDir,
+        versions.filter { case (b, _) => touched.contains(b) })
+      // read ONLY the touched buckets' live state, with the state's known
+      // schema (inferring it from the footers would cost a job)
+      val rows =
+        if (existing.isEmpty) incoming
+        else spark.read.schema(incoming.select(stateCols: _*).schema)
+          .parquet(existing: _*)
+          .select(stateCols ++ Seq(bucketOf.as("_bucket"), lit(0).as("_src"),
+            lit(false).as("_del")): _*)
+          .unionByName(incoming)
+      // last writer per key: the batch (_src 1) over the state (_src 0),
+      // then tombstones dropped. Hash partitioning on the bucket already
+      // clusters the grouping, so this is the only shuffle, and each bucket
+      // lands in one task.
+      val merged = rows.repartition(col("_bucket"))
+        .groupBy(col("_bucket") +: keyCols.map(col): _*)
+        .agg(max_by(struct(col("final_val"), col("last_commit_ts"), col("_del")),
+          col("_src")).as("_w"))
+        .filter(!col("_w._del"))
+        .select(keyCols.map(col) ++ Seq(col("_w.final_val").as("final_val"),
+          col("_w.last_commit_ts").as("last_commit_ts"), col("_bucket")): _*)
+      // stage partitioned by bucket, then publish each touched bucket as its
+      // next version (staging is a sibling dir: the merge reads the current
+      // versions lazily, so writing in place would destroy its own input)
+      val staging = s"$stateDir/.staging"
+      merged.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(staging)
+      val nextVersions = versions ++ touched.map { b =>
+        val next = versions.getOrElse(b, -1L) + 1
+        val dst = Paths.get(s"$stateDir/b$b/v$next")
+        Files.createDirectories(dst.getParent)
+        if (Files.exists(dst)) rmTree(dst.toFile) // leftover of a failed attempt
+        val src = Paths.get(s"$staging/_bucket=$b")
+        if (Files.exists(src)) Files.move(src, dst)
+        else Files.createDirectories(dst) // bucket fully deleted → empty state
+        b -> next
       }
-    // stage partitioned by bucket, then publish each touched bucket as its
-    // next version (staging is a sibling dir: the merge reads the current
-    // versions lazily, so writing in place would destroy its own input)
-    val staging = s"$stateDir/.staging"
-    merged.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(staging)
-    val nextVersions = versions ++ touched.map { b =>
-      val next = versions.getOrElse(b, -1L) + 1
-      val dst = Paths.get(s"$stateDir/b$b/v$next")
-      Files.createDirectories(dst.getParent)
-      if (Files.exists(dst)) rmTree(dst.toFile) // leftover of a failed attempt
-      val src = Paths.get(s"$staging/_bucket=$b")
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst) // bucket fully deleted → empty state
-      b -> next
-    }
-    rmTree(new java.io.File(staging))
-    writePointer(stateDir, StatePointer(batchId, nb, nextVersions))
+      rmTree(new java.io.File(staging))
+      writePointer(stateDir, StatePointer(batchId, nb, nextVersions))
+    } finally if (own) { batch.unpersist(); () }
   }
 
   /** Read the current materialized state (union of live bucket versions). */

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
@@ -49,5 +51,28 @@ class BenchSpec extends SparkSpec {
     assert(Bench.sidecar("/data/sf0.1", "8") == "BENCH_FULL_c8.json")
     assert(Bench.sidecar("/data/sf0.001", "32") == "BENCH_FULL_sf0.001.json")
     assert(Bench.sidecar("/data/sf0.001", "4") == "BENCH_FULL_sf0.001_c4.json")
+  }
+
+  test("run totals leave a failed entry's partial wall time out") {
+    val ok = BenchMetrics.Reading(1.5, 0L, 3L, None)
+    val died = BenchMetrics.Reading(0.04, 0L, 0L, Some(new IllegalStateException("boom")))
+    val line = Bench100x.summary("/d", Seq("q01_a" -> ok, "q183_b" -> died), 100.0)
+    assert(line.contains("\"value\":1.50,"), line)
+    assert(line.contains("\"failed\":1,"), line)
+    // the failed entry's reading is still reported, only not summed
+    assert(line.contains("\"q183_b\":0.04"), line)
+    // Bench's total: a failed gate and the failed ingest's -1.0 marker
+    val total = BenchMetrics.completedTotal(
+      Seq("q01" -> 2.0, "q183" -> 0.04, "s0_stream_ingest" -> -1.0),
+      Set("q183", "s0_stream_ingest"))
+    assert(total == 2.0)
+  }
+
+  test("warm-ups survive a scale dir without documents or the CDC events") {
+    val dir = Files.createTempDirectory("bench_warm").toString
+    spark.range(100).select(col("id").as("l_orderkey"), lit("A").as("l_returnflag"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    Bench100x.warmUp(spark, dir)
+    Bench.warmUp(spark, dir)
   }
 }

@@ -600,6 +600,27 @@ class StreamingSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(tap)
   }
 
+  test("full-option feed reads its source once per microbatch") {
+    // Every scan of a microbatch's source adds to its progress numInputRows
+    // (perfbench's changefeed.source_reread): the control step, the
+    // metrics counters and the state sink must share one computed batch.
+    val dir = Files.createTempDirectory("graft_cfonce").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    val read = ddlBatches.map { evs =>
+      mem.addData(evs: _*)
+      val q = Changefeed.start(spark, mem.toDF(), fullSpec("cf-once", dir))(
+        Sinks.parquetStateSink(spark, s"$dir/state", numBuckets = 4))
+      q.awaitTermination()
+      q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        .map(_.numInputRows).sum
+    }
+    assert(read == ddlBatches.map(_.size.toLong))
+    val state = Sinks.readState(spark, s"$dir/state")
+      .select("pk", "final_val").as[(Long, Double)].collect().toMap
+    assert(state == Map(1L -> 11.0, 3L -> 31.0, 4L -> 40.0))
+  }
+
   test("changefeed replay of a committed-then-lost batch rewrites nothing") {
     // A crash after batch 1's side effects but before its commit: the
     // restart re-runs batch 1 from its offsets. The barrier log and the
