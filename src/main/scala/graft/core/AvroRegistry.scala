@@ -158,7 +158,4 @@ final class GlueSchemaRegistry(val registryName: String,
   def lookup(schemaName: String, versionNumber: Int): Option[GlueRegistered] =
     synchronized(entries.find(e =>
       e.schemaName == schemaName && e.versionNumber == versionNumber))
-
-  def schemaNames: Seq[String] =
-    synchronized(entries.map(_.schemaName).distinct.toSeq)
 }

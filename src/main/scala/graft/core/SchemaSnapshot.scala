@@ -61,7 +61,6 @@ object SchemaSnapshot {
     private var currentTsVar = 0L
 
     def currentTs: Long = currentTsVar
-    def schemaById(id: Long): Option[DbInfo] = schemasById.get(id)
     def schemaIdByName(name: String): Option[Long] =
       schemaIdByNameM.get(name)
     def tableIdByName(schema: String, table: String): Option[Long] =
@@ -74,8 +73,6 @@ object SchemaSnapshot {
     def isIneligibleTableId(id: Long): Boolean = ineligible.contains(id)
     def isTruncateTableId(id: Long): Boolean = truncated.contains(id)
     def tables: Seq[TableDefn] = tablesById.values.toSeq
-    def eligibleTables: Seq[TableDefn] =
-      tables.filterNot(t => ineligible.contains(t.id))
     def tablesInSchema(schema: String): Seq[Long] =
       schemaIdByName(schema).toSeq.flatMap(sid =>
         tableIdByNameM.collect { case ((s, _), id) if s == sid => id })

@@ -15,7 +15,7 @@ import scala.collection.mutable.ArrayBuffer
  *
  * The behavior contract is the reference's own
  * `TestAddSpecialComment` table (cdc/owner/ddl_sink_test.go:172-575,
- * 54 query→result pairs): Round17Spec PARSES that table out of the
+ * 54 query→result pairs): SpecialCommentSpec PARSES that table out of the
  * test source and asserts this renderer reproduces every pair, and the
  * q287 gate's DuckDB oracle re-parses the same file — so none of the
  * expected strings is ever re-typed in this repo.

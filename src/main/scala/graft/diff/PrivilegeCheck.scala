@@ -49,7 +49,8 @@ object PrivilegeCheck {
     * sort key under sortmap.Sort; `render` is the Priv2Str name. The
     * relative orderings the reference tests pin (Select < RELOAD,
     * REPLICATION CLIENT < REPLICATION SLAVE, Create < Update) are
-    * asserted in Round20Spec against the reference's expected strings. */
+    * asserted in PrivilegeCheckSpec against the reference's expected
+    * strings. */
   final case class PrivT(order: Int, render: String) {
     override def toString: String = render
   }

@@ -240,7 +240,7 @@ object Filters {
     * FULL taxonomy, not an `otherwise`: an event OUTSIDE every list is the
     * reference's classify ERROR (→ Ignore), and the empty NullEvent skips
     * the event block entirely (filter.go:196,350). Pinned against the
-    * parsed reference source in Round16Spec. */
+    * parsed reference source in TableFilterSpec. */
   val BinlogIncompatibleDdl: Seq[String] = Seq(
     "value range decrease", "precision decrease", "modify column",
     "rename column", "rename index", "drop column", "drop primary key",

@@ -175,16 +175,6 @@ object TextOps {
     lit(1d) - size(array_distinct(t)).cast("double") / size(t).cast("double")
   }
 
-  /** Word n-grams as an array column (empty when the doc is shorter). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 2, "n-grams need n >= 2")
-    val t = tokens(text)
-    when(size(t) >= n,
-      transform(sequence(lit(0), size(t) - n),
-        i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k + 1)): _*)))
-      .otherwise(lit(Array.empty[String]))
-  }
-
   /** Occurrence fraction of a doc's most frequent word n-gram — the
     * codegen'd [[graft.functions.TextRuns]] kernel over the token array
     * (token-hash combine + primitive sort + longest run, inside the row).

@@ -63,10 +63,6 @@ object UrlOps {
     array_join(array_sort(kept), "&")
   }
 
-  /** Lowercased host(:port) with `www.` and the scheme-default port
-    * stripped. */
-  def canonicalHost(url: Column): Column = withParts(url)(hostOf)
-
   /** The canonical form — equal strings ⇔ same page under the rules. */
   def canonicalUrl(url: Column): Column = withParts(url) { p =>
     val q = queryOf(p)

@@ -1649,7 +1649,7 @@ object DiffQueries {
    * FLUSH_TABLES equivalences, literal-name revoke restores — plus the
    * goyacc-shaped parse errors and per-checker instructions. Exercises
    * every decision family of privilege_test.go (whose 60+ vectors
-   * Round20Spec replays verbatim from the Go source).
+   * PrivilegeCheckSpec replays verbatim from the Go source).
    */
   val privilegeCheck = GateQuery(
     "q308_privilege_check",

@@ -731,7 +731,7 @@ object RedoQueries {
   /** Seed cases: (sid, locations as (ord, name, pos, gtid, enableGtid)).
     * GTID cases use single-uuid `u:1-N` sets so the oracle's containment
     * reduces to range-end comparison (the kernel's full interval algebra
-    * is property-tested in Round17Spec). */
+    * is property-tested in RelayControlSpec). */
   val seedCases: Seq[(Long, Seq[(Long, String, Long, String, Int)])] = Seq(
     // both suffixed: RAW compare picks the smaller seq; name strips the
     // subdir suffix, the uuid suffix parses from the RAW winner

@@ -20,7 +20,7 @@ import graft.streaming.SourceScheduler.{Kernel, SourceCfg}
  * load-task transfer probes; q297 the dmctl member-ops surface; q298 the
  * bootstrap recovery reconciliation. Error tokens are the reference's
  * terror identifiers, parsed from dm/pkg/terror/error_list.go in
- * Round18Spec so they cannot drift; Round18Spec also replays the
+ * SourceSchedulerSpec so they cannot drift; Round18Spec replays the
  * reference's own worker/transfer/relay/bootstrap test sequences against
  * the kernel, step-for-step.
  */
@@ -400,7 +400,7 @@ object SchedulerQueries {
    * the sorted bounds/free/relay/unbound snapshot. Timestamps don't
    * exist in this algebra, so the oracle is the expected transition
    * table (q276 form); every terror identifier it shares with the gate
-   * is parsed from dm/pkg/terror/error_list.go in Round18Spec.
+   * is parsed from dm/pkg/terror/error_list.go in SourceSchedulerSpec.
    */
   val schedulerRelayOps = GateQuery(
     "q294_scheduler_relay_ops",
@@ -630,7 +630,7 @@ object SchedulerQueries {
    * the scheduler's RemoveWorker), and the leader-op token mapping.
    * The etcd master/leader listing is wire-protocol (COVERAGE rows);
    * the Ops strings and pb.LeaderOp values are parsed from the
-   * reference in Round18Spec.
+   * reference in MemberOpsSpec.
    */
   val memberOps = GateQuery(
     "q297_member_ops",

@@ -485,7 +485,6 @@ final class ApiServer(spark: SparkSession,
   // whoever drives the coordination (test harness / gate script)
   @volatile private var ddlLocks: Seq[ShardDdl.PessLock] = Seq.empty
   def setDdlLocks(locks: Seq[ShardDdl.PessLock]): Unit = ddlLocks = locks
-  def currentDdlLocks: Seq[ShardDdl.PessLock] = ddlLocks
 
   private def lockJson(v: ShardDdl.LockView): Map[String, Any] = Map(
     "ID" -> v.id, "task" -> v.task, "mode" -> v.mode, "owner" -> v.owner,

@@ -155,6 +155,10 @@ object Changefeed {
    */
   def start(spark: SparkSession, source: DataFrame, spec: ChangefeedSpec)
            (sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    // only the DDL control step writes the barrier, so a barrier dir
+    // without the textual-DDL path would silently never be written
+    require(spec.barrierDir.isEmpty || spec.textDdlRegistryDir.isDefined,
+      s"changefeed ${spec.id}: barrierDir requires textDdlRegistryDir")
     val shaped = pipeline(source, spec)
     shaped.writeStream
       .queryName(spec.id)

@@ -234,19 +234,12 @@ final class ChangefeedManager(spark: SparkSession,
   def feedError(id: String): Option[FeedStateMachine.RunningError] =
     feeds.get(id).flatMap(e => Option(e.machine)).flatMap(_.lastError)
 
-  /** Report processor errors/warnings into a feed's state machine and
+  /** Report processor errors into a feed's state machine and
     * tick it (the owner's HandleError/HandleWarning path). */
   def reportError(id: String, code: String, message: String = ""): Unit =
     feeds.get(id).foreach { e =>
       if (e.machine != null) {
         e.machine.reportErrors(FeedStateMachine.RunningError(code, message))
-        machineTick(e)
-      }
-    }
-  def reportWarning(id: String, code: String, message: String = ""): Unit =
-    feeds.get(id).foreach { e =>
-      if (e.machine != null) {
-        e.machine.reportWarnings(FeedStateMachine.RunningError(code, message))
         machineTick(e)
       }
     }

@@ -155,7 +155,6 @@ final class FeedStateMachine(
   // ---- the ChangefeedState the Go manager patches ------------------------
   private var infoState: String = UnInitialized
   private var infoError: Option[RunningError] = None
-  private var infoWarning: Option[RunningError] = None
   private var epochBumps: Long = 0L
   private var resumeOverwrite: Option[Long] = None
 
@@ -188,8 +187,6 @@ final class FeedStateMachine(
   def shouldRunning: Boolean = shouldBeRunning
   def shouldRemoved: Boolean = shouldBeRemoved
   def lastError: Option[RunningError] = infoError
-  def lastWarning: Option[RunningError] = infoWarning
-  def epochBumpCount: Long = epochBumps
   def backoffMs: Long = backoffIntervalMs
   def retrying: Boolean = isRetrying
 
@@ -411,7 +408,6 @@ final class FeedStateMachine(
         Left(handleErrorInternal(Seq(synthesized)).getOrElse(""))
       } else {
         patchState(Warning)
-        infoWarning = Some(lastWarn)
         Right(Some(lastWarn.code))
       }
     }

@@ -134,18 +134,6 @@ object KeySpanSplit {
     SplitInfo(counts.toSeq, weights.toSeq, writeKeys.toSeq, spans.toSeq)
   }
 
-  /** The write splitter's outer decision (splitter_write.go:53-97):
-    * threshold 0 disables splitting entirely (None); a span budget of ≤1
-    * keeps the whole span. */
-  def writeSplit(span: Span, regions: Seq[Region], captureNum: Int,
-                 writeKeyThreshold: Long): Option[Seq[Span]] = {
-    if (writeKeyThreshold == 0) return None
-    val num = spansNumber(regions.size, captureNum)
-    if (num <= 1) return Some(Seq(span))
-    Some(splitByWrittenKeys(span.tableId, regions, num,
-      writeKeyThreshold).spans)
-  }
-
   /** The evenly-split stepper (splitter_region_count.go:128-160):
     * base step = regions/pages; the remainder is front-loaded
     * ceil(remain/pages) at a time; a page budget beyond the region

@@ -82,7 +82,6 @@ final class RelayMeta(fs: RelayMeta.Fs) {
   private var gset: String = ""
   private var dirtyFlag: Boolean = false
 
-  def subDir: String = currentSubDir
   def pos: (String, String, Long) = (currentSubDir, binLogName, binLogPos)
   def gtidView: (String, String) = (currentSubDir, gset)
   def fileGtid: String = binlogGtid

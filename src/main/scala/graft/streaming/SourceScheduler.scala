@@ -33,7 +33,7 @@ import scala.collection.mutable
  * clause-for-clause the reference's.
  *
  * Errors are returned as the reference's terror identifier names
- * (dm/pkg/terror/error_list.go:1390-1424); Round18Spec parses those
+ * (dm/pkg/terror/error_list.go:1390-1424); SourceSchedulerSpec parses those
  * identifiers from the reference source so the tokens cannot drift.
  */
 object SourceScheduler {

@@ -82,7 +82,7 @@ object TaskChecker {
     "get event err EOF")
 
   // un-resumable code sets (retry/errors.go:66-84); numbers are the
-  // iota-derived terror codes, PARSED from error_list.go in Round17Spec
+  // iota-derived terror codes, PARSED from error_list.go in TaskCheckerSpec
   val UnresumableErrCodes: Set[Long] =
     Set(36008L, 32004L, 32001L, 36027L, 11129L, 34020L, 34021L)
   val UnresumableRelayErrCodes: Set[Long] =

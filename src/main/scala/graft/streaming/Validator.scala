@@ -190,9 +190,4 @@ object Validator {
     if (filterState == InvalidErr) folded
     else folded.filter(col("status") === filterState)
   }
-
-  /** loadErrorCount's per-state tally (validator_checkpoint.go:604-632). */
-  def errorCounts(errors: DataFrame, ops: Seq[ErrorOp]): DataFrame =
-    errorView(errors, ops).groupBy("status")
-      .agg(count(lit(1)).as("cnt"))
 }

@@ -95,4 +95,39 @@ class CreatorFixSpec extends AnyFunSuite {
     assert(f.sinkUri == "kafka://h:9092/t?aa=2&protocol=open-protocol&zz=1")
     assert(f.configProtocol.contains("open-protocol"))
   }
+
+  // ---- scheme and protocol sets parsed from the reference source --------
+
+  test("sink scheme sets match sink_type.go, parsed from source") {
+    val src = RefSource.source("pkg/sink/sink_type.go")
+    val consts = """(\w+Scheme)\s*=\s*"([^"]+)"""".r
+      .findAllMatchIn(src).map(m => m.group(1) -> m.group(2)).toMap
+    def schemesOf(fn: String): Set[String] = {
+      val start = src.indexOf(s"func $fn(scheme string) bool {")
+      assert(start >= 0, s"$fn not found")
+      val body = src.substring(start, src.indexOf("\n}", start))
+      """scheme == (\w+Scheme)""".r.findAllMatchIn(body)
+        .map(m => consts(m.group(1))).toSet
+    }
+    assert(schemesOf("IsMQScheme") == CreatorFix.MqSchemes)
+    assert(schemesOf("IsStorageScheme") == CreatorFix.StorageSchemes)
+    assert(schemesOf("IsMySQLCompatibleScheme") == CreatorFix.MySqlCompatSchemes)
+  }
+
+  test("protocol and task-mode sets match their reference case lists") {
+    val proto = RefSource.source("pkg/config/sink_protocol.go")
+    val fromStr = proto.substring(
+      proto.indexOf("func ParseSinkProtocolFromString"))
+    val cases = """case "([^"]+)"""".r
+      .findAllMatchIn(fromStr.substring(0, fromStr.indexOf("\n}")))
+      .map(_.group(1)).toSet
+    assert(cases == CreatorFix.KnownProtocols,
+      s"missing=${cases -- CreatorFix.KnownProtocols}")
+
+    val sub = RefSource.source("dm/config/subtask.go")
+    val modes = """Mode(?:All|Full|Increment|Dump|LoadSync|Load)\s*=\s*"([^"]+)"""".r
+      .findAllMatchIn(sub).map(_.group(1)).toSet
+    assert(modes == graft.streaming.DmTaskConfig.TaskModes,
+      s"modes=$modes")
+  }
 }

@@ -182,4 +182,28 @@ class FeedStateSpec extends AnyFunSuite {
     now += 100000; val r = m.tick(10L, Some(5L))
     assert(r.state == "warning" && r.shouldRunning)
   }
+
+  test("changefeed error-code sets match helper.go, parsed from source") {
+    val src = RefSource.source("pkg/errors/helper.go")
+    // identifier -> RFC code from the DECLARATIONS (cdc_errors.go): the
+    // match keys on the RFC code, and it is NOT always the identifier —
+    // ErrExpressionParseFailed declares CDC:ErrInvalidFilterExpression
+    // (cdc_errors.go:938-941); assuming identifier==code hid a real
+    // divergence in UnretryableCodes until this parse
+    val cdcErrs = RefSource.source("pkg/errors/cdc_errors.go")
+    val rfcOf = """(?s)(Err\w+) = errors\.Normalize\(.*?RFCCodeText\("(CDC:\w+)"\)""".r
+      .findAllMatchIn(cdcErrs).map(m => m.group(1) -> m.group(2)).toMap
+    def errList(varName: String): Set[String] = {
+      val start = src.indexOf(s"var $varName = []*errors.Error{")
+      assert(start >= 0, s"$varName not found")
+      val body = src.substring(start + s"var $varName".length,
+        src.indexOf("\n}", start))
+      """\bErr[A-Z]\w+""".r.findAllIn(body).map(rfcOf).toSet
+    }
+    assert(errList("ChangeFeedGCFastFailError") ==
+      FeedStateMachine.GcFastFailCodes)
+    assert(errList("changefeedUnRetryableErrors") ==
+      FeedStateMachine.UnretryableCodes.toSet,
+      s"want=${errList("changefeedUnRetryableErrors")}")
+  }
 }

@@ -92,14 +92,9 @@ class KeySpanSplitSpec extends AnyFunSuite {
   }
 
   test("split constants parsed from the reference source (de-share)") {
-    import java.nio.file.{Files, Paths}
-    val rec = Paths.get("/root/reference/cdc/scheduler/internal/v3/" +
-      "keyspan/reconciler.go")
-    val sch = Paths.get(
-      "/root/reference/cdc/scheduler/internal/scheduler.go")
-    assume(Files.exists(rec) && Files.exists(sch),
-      "reference checkout not present")
-    val recSrc = new String(Files.readAllBytes(rec), "UTF-8")
+    val recSrc = RefSource.source(
+      "cdc/scheduler/internal/v3/keyspan/reconciler.go")
+    val schSrc = RefSource.source("cdc/scheduler/internal/scheduler.go")
     def c(name: String): Int =
       (name + """\s*=\s*(\d+)""").r.findFirstMatchIn(recSrc)
         .map(_.group(1).toInt)
@@ -108,7 +103,6 @@ class KeySpanSplitSpec extends AnyFunSuite {
     assert(c("baseSpanNumberCoefficient") ==
       KeySpanSplit.BaseSpanNumberCoefficient)
     assert(c("maxSpanNumber") == KeySpanSplit.MaxSpanNumber)
-    val schSrc = new String(Files.readAllBytes(sch), "UTF-8")
     val cp = """CheckpointCannotProceed = model\.Ts\((\d+)\)""".r
       .findFirstMatchIn(schSrc).map(_.group(1).toLong)
     assert(cp.contains(

@@ -155,12 +155,8 @@ class OptimisticLockSpec extends AnyFunSuite {
   }
 
   test("DropColumnStage values and the add-not-dropped error parsed from source") {
-    import java.nio.file.{Files, Paths}
-    val lk = Paths.get("/root/reference/dm/pkg/shardddl/optimism/lock.go")
-    val tr = Paths.get("/root/reference/dm/pkg/terror/error_list.go")
-    assume(Files.exists(lk) && Files.exists(tr),
-      "reference checkout not present")
-    val src = new String(Files.readAllBytes(lk), "UTF-8")
+    val src = RefSource.source("dm/pkg/shardddl/optimism/lock.go")
+    val terr = RefSource.source("dm/pkg/terror/error_list.go")
     // the iota block: DropNotDone = 0, DropPartiallyDone, DropDone
     val block = src.substring(src.indexOf("type DropColumnStage"),
       src.indexOf("type tableType"))
@@ -170,7 +166,6 @@ class OptimisticLockSpec extends AnyFunSuite {
     assert(names.indexOf("NotDone") == DropStage.NotDone)
     assert(names.indexOf("PartiallyDone") == DropStage.PartiallyDone)
     assert(names.indexOf("Done") == DropStage.Done)
-    val terr = new String(Files.readAllBytes(tr), "UTF-8")
     assert(terr.contains("ErrShardDDLOptimismAddNotFullyDroppedColumn"))
     assert(ErrAddNotFullyDropped ==
       "ErrShardDDLOptimismAddNotFullyDroppedColumn")

@@ -79,4 +79,69 @@ class PrecheckSpec extends SparkSpec {
     assert(verdictOf(ok, "shard_schema_consistent") === "pass")
     assert(verdictOf(ok, "auto_increment_conflict") === "pass")
   }
+
+  test("mysql_server/binlog checker vectors, replayed from source") {
+    import graft.diff.{ConnCheck => CC, Precheck => P}
+    import RefSource.braceChunks
+    val serverTest = RefSource.source("dm/pkg/checker/mysql_server_test.go")
+    val binlogTest = RefSource.source("dm/pkg/checker/binlog_test.go")
+    // TestMysqlVersion's 16 (version, pass) vectors drive the q54
+    // serverChecks version window
+    val verBody = serverTest.substring(
+      serverTest.indexOf("func TestMysqlVersion"),
+      serverTest.indexOf("func TestVersionInstruction"))
+    val verCases = """\{"([^"]+)", (true|false)\}""".r
+      .findAllMatchIn(verBody)
+      .map(m => m.group(1) -> m.group(2).toBoolean).toSeq
+    assert(verCases.size >= 15)
+    for ((v, pass) <- verCases) {
+      val verdict = P.serverChecks("s", P.SourceMeta(version = v))
+        .find(_.check_name == "mysql_version").get.verdict
+      assert((verdict == "pass") == pass, s"version $v")
+    }
+    // TestBinlogDB's do/ignore/case vectors drive binlogDbCheck — the
+    // expected StateFailure on warn legs confirms the kept quirk
+    val dbBody = binlogTest.substring(
+      binlogTest.indexOf("func TestBinlogDB"),
+      binlogTest.indexOf("func TestMySQLBinlogRowImageChecker"))
+    val listAt = dbBody.indexOf("}{")
+    val forAt = dbBody.indexOf("\n\tfor ")
+    val dbCases = braceChunks(dbBody.substring(listAt + 2, forAt))
+    assert(dbCases.size == 10)
+    for ((chunk, i) <- dbCases.zipWithIndex) {
+      def field(k: String): String =
+        (k + """:\s+"([^"]*)"""").r.findFirstMatchIn(chunk)
+          .map(_.group(1)).getOrElse("")
+      val schemas = """"(\w+)": \{\}""".r.findAllMatchIn(chunk)
+        .map(_.group(1)).toSeq
+      val caseSensitive = chunk.contains("caseSensitive: true")
+      val state = """state:\s+State(\w+)""".r
+        .findFirstMatchIn(chunk).get.group(1).toLowerCase
+      val got = CC.binlogDbCheck(schemas, field("doDB"),
+        field("ignoreDB"), caseSensitive)
+      assert(got.state == state, s"binlogDB case $i")
+      if (state == "failure") assert(got.errs.size == 1)
+    }
+    // TestMySQLBinlogRowImageChecker's version-gated vectors drive the
+    // q54 row-image check
+    val riBody = binlogTest.substring(
+      binlogTest.indexOf("func TestMySQLBinlogRowImageChecker"))
+    val riAt = riBody.indexOf("}{")
+    val riFor = riBody.indexOf("\n\tfor ")
+    val riCases = braceChunks(riBody.substring(riAt + 2, riFor))
+    assert(riCases.size == 6)
+    for ((chunk, i) <- riCases.zipWithIndex) {
+      def field(k: String): String =
+        (k + """:\s+"([^"]*)"""").r.findFirstMatchIn(chunk)
+          .map(_.group(1)).getOrElse("")
+      val state = """state:\s+State(\w+)""".r
+        .findFirstMatchIn(chunk).get.group(1)
+      val verdict = P.serverChecks("s", P.SourceMeta(
+        version = field("version"),
+        binlogRowImage = field("rowImage")))
+        .find(_.check_name == "mysql_binlog_row_image").get.verdict
+      assert(verdict == (if (state == "Success") "pass" else "fail"),
+        s"rowImage case $i (${field("version")})")
+    }
+  }
 }

@@ -504,18 +504,13 @@ class ReplicationSetSpec extends AnyFunSuite {
   // ---- constants pinned against the reference source (de-share) -----------
 
   test("state/role enum values parsed from the reference source") {
-    import java.nio.file.{Files, Paths}
-    val pb = Paths.get(
-      "/root/reference/cdc/processor/tablepb/table.pb.go")
-    val rs = Paths.get("/root/reference/cdc/scheduler/internal/v3/" +
-      "replication/replication_set.go")
-    val cm = Paths.get("/root/reference/cdc/scheduler/internal/v3/" +
-      "member/capture_manager.go")
-    assume(Files.exists(pb) && Files.exists(rs) && Files.exists(cm),
-      "reference checkout not present")
-    def consts(path: java.nio.file.Path, re: String): Map[String, Int] =
-      re.r.findAllMatchIn(
-        new String(Files.readAllBytes(path), "UTF-8"))
+    val pb = RefSource.source("cdc/processor/tablepb/table.pb.go")
+    val rs = RefSource.source(
+      "cdc/scheduler/internal/v3/replication/replication_set.go")
+    val cm = RefSource.source(
+      "cdc/scheduler/internal/v3/member/capture_manager.go")
+    def consts(src: String, re: String): Map[String, Int] =
+      re.r.findAllMatchIn(src)
         .map(m => m.group(1) -> m.group(2).toInt).toMap
     val ts = consts(pb, """TableState(\w+)\s+TableState = (\d+)""")
     assert(ts == Map("Unknown" -> 0, "Absent" -> TableState.Absent,

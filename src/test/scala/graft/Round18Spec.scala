@@ -1,134 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import scala.util.Random
 
 import graft.streaming.SourceScheduler
 import graft.streaming.SourceScheduler.{Kernel, SourceCfg}
 
-/** Round-18 de-share properties for the DM-master source↔worker scheduler:
-  * every constant the q293/q294/q295 oracles share with the kernel (the
-  * worker stage strings, the terror identifiers, the pb.Stage names) is
-  * parsed OUT OF THE REFERENCE SOURCE and asserted against the repo's
-  * constants, so a re-typed-wrong token diverges in CI instead of agreeing
-  * with an oracle that re-typed it the same way. Plus a randomized
-  * script property asserting the scheduler's structural invariants (the
-  * ones the reference maintains by construction via its try-bound calls).
-  */
+/** Round-18 properties of the DM-master source↔worker scheduler: the
+  * reference's worker_test.go / scheduler_test.go sequences replayed step
+  * for step, and a randomized script property on its invariants. */
 class Round18Spec extends SparkSpec {
-
-  private val workerFile =
-    Paths.get("/root/reference/dm/master/scheduler/worker.go")
-  private val errFile =
-    Paths.get("/root/reference/dm/pkg/terror/error_list.go")
-  private val pbFile = Paths.get("/root/reference/dm/pb/dmworker.pb.go")
-
-  private lazy val workerSrc =
-    new String(Files.readAllBytes(workerFile), "UTF-8")
-  private lazy val errSrc = new String(Files.readAllBytes(errFile), "UTF-8")
-  private lazy val pbSrc = new String(Files.readAllBytes(pbFile), "UTF-8")
-
-  test("worker stage strings match worker.go:63-68, parsed") {
-    assume(Files.exists(workerFile), "reference checkout not present")
-    def stage(n: String): String = {
-      val m = ("""Worker""" + n + """\s+WorkerStage = "(\w+)"""").r
-        .findFirstMatchIn(workerSrc)
-      assert(m.isDefined, s"Worker$n not found"); m.get.group(1)
-    }
-    assert(SourceScheduler.Offline == stage("Offline"))
-    assert(SourceScheduler.Free == stage("Free"))
-    assert(SourceScheduler.Bound == stage("Bound"))
-    assert(SourceScheduler.Relay == stage("Relay"))
-  }
-
-  test("every kernel terror token is a real error_list.go identifier") {
-    assume(Files.exists(errFile), "reference checkout not present")
-    // the identifiers as DECLARED (left of `= New(codeScheduler...`)
-    val declared = ("""(ErrScheduler\w+)\s+=\s+New\(""").r
-      .findAllMatchIn(errSrc).map(_.group(1)).toSet
-    val used = Seq(
-      SourceScheduler.ErrNotStarted, SourceScheduler.ErrWorkerExist,
-      SourceScheduler.ErrWorkerNotExist, SourceScheduler.ErrWorkerOnline,
-      SourceScheduler.ErrWorkerInvalidTrans,
-      SourceScheduler.ErrSourceCfgExist,
-      SourceScheduler.ErrSourceCfgNotExist,
-      SourceScheduler.ErrSourcesUnbound,
-      SourceScheduler.ErrSourceOpTaskExist, SourceScheduler.ErrMultiTask,
-      SourceScheduler.ErrSubTaskExist,
-      SourceScheduler.ErrSubTaskStageInvalidUpdate,
-      SourceScheduler.ErrSubTaskOpTaskNotExist,
-      SourceScheduler.ErrSubTaskOpSourceNotExist,
-      SourceScheduler.ErrRequireRunningTaskInSyncUnit,
-      SourceScheduler.ErrRelayWorkersBusy,
-      SourceScheduler.ErrRelayWorkersWrongBound,
-      SourceScheduler.ErrRelayWorkersWrongRelay,
-      SourceScheduler.ErrSourceOpRelayExist,
-      SourceScheduler.ErrSourceCfgUpdate,
-      SourceScheduler.ErrWrongWorkerInput,
-      SourceScheduler.ErrBoundDiffWithStartedRelay,
-      SourceScheduler.ErrStartRelayOnSpecified,
-      SourceScheduler.ErrStopRelayOnSpecified,
-      SourceScheduler.ErrStartRelayOnBound,
-      SourceScheduler.ErrStopRelayOnBound,
-      SourceScheduler.ErrWorkerNotFree, SourceScheduler.ErrTaskNotExist,
-      SourceScheduler.ErrSubTaskNotExist,
-      SourceScheduler.ErrSubTaskCfgUpdate,
-      SourceScheduler.ErrRelayStageInvalidUpdate,
-      SourceScheduler.ErrRelayStageSourceNotExist)
-    assert(used.distinct.size == used.size, "duplicate kernel tokens")
-    used.foreach(t => assert(declared.contains(t), s"$t not declared"))
-  }
-
-  test("expectant stage names match pb.Stage_name, parsed") {
-    assume(Files.exists(pbFile), "reference checkout not present")
-    def stageName(v: Int): String = {
-      val m = (v.toString + """:\s+"(\w+)",""").r.findFirstMatchIn(
-        pbSrc.substring(pbSrc.indexOf("Stage_name = map")))
-      assert(m.isDefined, s"Stage_name[$v] not found"); m.get.group(1)
-    }
-    assert(SourceScheduler.StageRunning == stageName(2))
-    assert(SourceScheduler.StagePaused == stageName(3))
-    assert(SourceScheduler.StageStopped == stageName(4))
-  }
-
-  test("member-op constants match the reference, parsed") {
-    val masterPbFile = Paths.get("/root/reference/dm/pb/dmmaster.pb.go")
-    val offlineFile =
-      Paths.get("/root/reference/dm/ctl/master/offline_member.go")
-    val cfgFile = Paths.get("/root/reference/dm/ctl/common/config.go")
-    assume(Files.exists(masterPbFile), "reference checkout not present")
-    import graft.streaming.MemberOps
-    val masterPb = new String(Files.readAllBytes(masterPbFile), "UTF-8")
-    def opVal(n: String): Int = {
-      val m = ("""LeaderOp_""" + n + """\s+LeaderOp = (\d+)""").r
-        .findFirstMatchIn(masterPb)
-      assert(m.isDefined, s"LeaderOp_$n not found"); m.get.group(1).toInt
-    }
-    assert(MemberOps.InvalidLeaderOp == opVal("InvalidLeaderOp"))
-    assert(MemberOps.EvictLeaderOp == opVal("EvictLeaderOp"))
-    assert(MemberOps.CancelEvictLeaderOp == opVal("CancelEvictLeaderOp"))
-    // operate_leader.go's op-string table
-    val olSrc = new String(Files.readAllBytes(
-      Paths.get("/root/reference/dm/ctl/master/operate_leader.go")), "UTF-8")
-    assert(olSrc.contains("case \"evict\":") &&
-      olSrc.contains("case \"cancel-evict\":"))
-    // member type strings — dm/ctl/common/config.go
-    val cfgSrc = new String(Files.readAllBytes(cfgFile), "UTF-8")
-    def strConst(n: String): String = {
-      val m = (n + """\s*=\s*"(\w+)"""").r.findFirstMatchIn(cfgSrc)
-      assert(m.isDefined, s"$n not found"); m.get.group(1)
-    }
-    assert(MemberOps.Master == strConst("Master"))
-    assert(MemberOps.Worker == strConst("Worker"))
-    // the CLI validation messages the q297 oracle shares
-    val offSrc = new String(Files.readAllBytes(offlineFile), "UTF-8")
-    assert(offSrc.contains("should specify either --master or --worker"))
-    assert(offSrc.contains("a member name must be specified"))
-    // the invalid-offline-type terror identifier exists as declared
-    assert(("""ErrMasterInvalidOfflineType\s+=\s+New\(""").r
-      .findFirstIn(errSrc).isDefined)
-  }
 
   test("worker stage machine replays worker_test.go TestWorker") {
     // the reference's own unit sequence (worker_test.go:29-133),

@@ -70,6 +70,21 @@ class StreamingSpec extends SparkSpec {
     assert(seen.count() == 2)
   }
 
+  test("a barrier dir without the textual-DDL path is refused at start") {
+    // the control step is the only barrier writer: without a registry the
+    // barrier would never be written, so the feed must not start
+    val dir = Files.createTempDirectory("graft_cfbar_req").toString
+    val spec = ChangefeedSpec(id = "cf-barrier-only",
+      checkpointDir = s"$dir/ckpt", barrierDir = Some(s"$dir/bar"))
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    val e = intercept[IllegalArgumentException] {
+      Changefeed.start(spark, mem.toDF(), spec)((_, _) => ())
+    }
+    assert(e.getMessage.contains("barrierDir requires textDdlRegistryDir"))
+    assert(spark.streams.active.forall(_.name != "cf-barrier-only"))
+  }
+
   test("owner barrier clamps the microbatch boundary; executing the DDLs lifts it") {
     // W1/G5 stretch (r15 VERDICT #8): a redo-enabled feed's boundary
     // record must hold the global barrier AND the redo resolved ts at a

@@ -47,4 +47,29 @@ class TableFilterSpec extends SparkSpec {
   test("unclosed bracket is treated literally") {
     assert(Filters.wildcardToRegex("a[b") === "^a\\[b$")
   }
+
+  // ---- binlog-filter taxonomy pinned against the parsed reference -------
+
+  test("ClassifyEvent's case lists match the reference, parsed from source") {
+    val src = RefSource.source("pkg/binlog-filter/filter.go")
+    // const block: identifier -> event string
+    val names = """(?m)^\s*(\w+)\s+EventType = "([^"]*)"""".r
+      .findAllMatchIn(src).map(m => m.group(1) -> m.group(2)).toMap
+    // ClassifyEvent's case groups, keyed by their return value
+    val body = src.substring(src.indexOf("func ClassifyEvent"))
+    val bodyEnd = body.substring(0, body.indexOf("\n}"))
+    val groups = """case ([\w,\s]+?):\s*\n\s*return (\w+), nil""".r
+      .findAllMatchIn(bodyEnd).map { m =>
+        m.group(2) -> m.group(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      }.toMap
+    def strings(ret: String) = groups(ret).map(names).toSet
+    assert(strings("dml") == Filters.BinlogDmlEvents.toSet)
+    assert(strings("ddl") == Filters.BinlogCompatibleDdl.toSet,
+      s"ddl missing=${strings("ddl") -- Filters.BinlogCompatibleDdl}")
+    val incompat = strings("incompatibleDDL")
+    assert(incompat.size == 44)
+    assert(incompat == Filters.BinlogIncompatibleDdl.toSet,
+      s"missing=${incompat -- Filters.BinlogIncompatibleDdl} " +
+        s"extra=${Filters.BinlogIncompatibleDdl.toSet -- incompat}")
+  }
 }
