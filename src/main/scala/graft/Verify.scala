@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.queries.Gate
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,7 +22,9 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val why = missingReference(e).fold(s"failed: ${e.getMessage}")(
+          p => s"skipped: reference checkout missing ($p)")
+        System.err.println(s"[verify] $name $why")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -41,4 +44,12 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** The missing file under [[Gate.ReferenceRoot]] `e` or a cause reports. */
+  private def missingReference(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case m: java.nio.file.NoSuchFileException if m.getFile != null &&
+          Paths.get(m.getFile).startsWith(Paths.get(Gate.ReferenceRoot)) =>
+        m.getFile
+    }
 }

@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
  * key — no binary search needed because the join IS the row-level diff at
  * scale (one shuffle, AQE handles skew). At 100 TB both sides stay fully
  * distributed; nothing is collected to the driver.
+ * One path per step: [[chunkDigest]] builds every chunk digest,
+ * [[compareChunks]] is the one two-sided compare.
  */
 object ChunkDiff {
 
@@ -100,21 +102,59 @@ object ChunkDiff {
       concat_ws("|", keys.map(_.cast("string")): _*)), lit(nChunks.toLong))
       .cast("int")
 
-  /** V2 — per-chunk (count, checksum) digest over equal-width key chunks.
-    * One hash aggregation per side; fully parallel (the former ntile form
-    * moved every row through a single-task global window). */
-  def chunkChecksums(df: DataFrame, orderKeys: Seq[Column], nChunks: Int,
-                     canonicalCols: Seq[Column]): DataFrame = {
-    val keyCol = orderKeys.head
-    val (lo, hi) = widthBounds(df, keyCol.toString())
+  /** The exact inverse of [[chunkByWidth]]: the key range `[kLo, kHi]` of
+    * chunk `c` within `[lo, hi]` (the last chunk ends at `hi`; a chunk no
+    * key reaches reads `kLo > kHi`). */
+  def chunkRange(c: Int, lo: Long, hi: Long, nChunks: Int): (Long, Long) = {
+    def start(i: Int) = lo + ((i.toLong * (hi - lo + 1) + nChunks - 1) / nChunks)
+    (start(c), if (c == nChunks - 1) hi else start(c + 1) - 1)
+  }
+
+  /** Keys of `chunks` as pushable range predicates; false for none. */
+  def inChunks(key: Column, chunks: Seq[Int], lo: Long, hi: Long,
+      nChunks: Int): Column =
+    chunks.map { c =>
+      val (kLo, kHi) = chunkRange(c, lo, hi, nChunks)
+      key >= kLo && key <= kHi
+    }.reduceOption(_ || _).getOrElse(lit(false))
+
+  /** V2 — the chunk-digest kernel: per `chunkId`, `(chunk_id, cnt,
+    * checksum, chunk_lo, chunk_hi)` — row count, BIT_XOR of [[rowDigest]]
+    * and `orderKey` min/max, in one hash aggregation. Callers that select
+    * the bounds away get them pruned from the plan. */
+  def chunkDigest(df: DataFrame, chunkId: Column, orderKey: Column,
+      canonicalCols: Seq[Column]): DataFrame =
     df.withColumn("row_digest", rowDigest(canonicalCols))
-      .withColumn("chunk_id", chunkByWidth(keyCol, lo, hi, nChunks))
+      .withColumn("chunk_id", chunkId)
       .groupBy("chunk_id")
       .agg(
         count(lit(1)).as("cnt"),
         expr("bit_xor(row_digest)").as("checksum"),
-        min(keyCol).as("chunk_lo"),
-        max(keyCol).as("chunk_hi"))
+        min(orderKey).as("chunk_lo"),
+        max(orderKey).as("chunk_hi"))
+
+  /** V2 — [[chunkDigest]] over equal-width key chunks of the first order
+    * key, bounded by the table's own [[widthBounds]]. */
+  def chunkChecksums(df: DataFrame, orderKeys: Seq[Column], nChunks: Int,
+                     canonicalCols: Seq[Column]): DataFrame = {
+    val keyCol = orderKeys.head
+    val (lo, hi) = widthBounds(df, keyCol.toString())
+    chunkDigest(df, chunkByWidth(keyCol, lo, hi, nChunks), keyCol, canonicalCols)
+  }
+
+  /** V2 — the two-sided chunk compare of two [[chunkDigest]] frames:
+    * `(chunk_id, up_cnt, up_checksum, down_cnt, down_checksum, equal)`,
+    * full-outer on `chunk_id`, so a chunk one side lacks is kept, with 0
+    * count and checksum there, and unequal (a digested chunk counts at
+    * least one row). Digests in, not rows: callers cache the small
+    * digests, never the digested bases. */
+  def compareChunks(up: DataFrame, down: DataFrame): DataFrame = {
+    def side(df: DataFrame, p: String) = df.select(col("chunk_id"),
+      col("cnt").as(s"${p}_cnt"), col("checksum").as(s"${p}_checksum"))
+    side(up, "up").join(side(down, "down"), Seq("chunk_id"), "full_outer")
+      .na.fill(0L, Seq("up_cnt", "up_checksum", "down_cnt", "down_checksum"))
+      .withColumn("equal", col("up_cnt") === col("down_cnt") &&
+        col("up_checksum") === col("down_checksum"))
   }
 
   /**
@@ -123,26 +163,14 @@ object ChunkDiff {
    *   missing   — key present in source, absent in target (needs INSERT)
    *   extra     — key absent in source, present in target (needs DELETE)
    *   different — key on both sides but the digest differs (needs REPLACE)
+   * Never cache a digested wide frame to share it: at sf10 that ran 50%
+   * SLOWER than re-digesting per consumer (round-19 NOTES).
    */
   def rowDiff(source: DataFrame, target: DataFrame, keyCols: Seq[String],
-              canonicalCols: DataFrame => Seq[Column]): DataFrame =
-    rowDiffDigested(
-      source.withColumn("digest", rowDigest(canonicalCols(source))),
-      target.withColumn("digest", rowDigest(canonicalCols(target))),
-      keyCols)
-
-  /** [[rowDiff]] over PRE-DIGESTED sides (each carries a `digest`
-    * column). NOTE: sharing a digested-and-PERSISTED base frame across
-    * consumers was measured 50% SLOWER at sf10 than recomputing the
-    * digest per consumer (the columnar cache write of wide rows
-    * dominates — round-19 NOTES); this split exists for callers that
-    * already hold a digested frame in-plan, not as license to cache
-    * one. */
-  def rowDiffDigested(source: DataFrame, target: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    val s = source.select(keyCols.map(col) :+ col("digest").as("s_digest"): _*)
-    val t = target.select(keyCols.map(col) :+ col("digest").as("t_digest"): _*)
-    s.join(t, keyCols, "full_outer")
+              canonicalCols: DataFrame => Seq[Column]): DataFrame = {
+    def side(df: DataFrame, d: String) = df.withColumn("digest",
+      rowDigest(canonicalCols(df))).select(keyCols.map(col) :+ col("digest").as(d): _*)
+    side(source, "s_digest").join(side(target, "t_digest"), keyCols, "full_outer")
       .withColumn("diff_type",
         when(col("t_digest").isNull, "missing")
           .when(col("s_digest").isNull, "extra")
@@ -157,19 +185,12 @@ object ChunkDiff {
    * a column is expected to diverge: timestamps, generated columns,
    * replica-local counters). Rows differing ONLY in ignored columns
    * compare equal. Canonical columns are passed NAMED so the exclusion is
-   * by config string, exactly like the reference's per-table column list.
+   * by config string, exactly like the reference's per-table column list;
+   * pass `df => canonicalIgnoring(named(df), ignore)` to [[rowDiff]].
    */
   def canonicalIgnoring(named: Seq[(String, Column)],
       ignore: Set[String]): Seq[Column] =
     named.collect { case (n, c) if !ignore.contains(n) => c }
-
-  /** [[rowDiff]] with the reference's ignore-columns semantics applied to
-    * both sides' digests. */
-  def rowDiffIgnoring(source: DataFrame, target: DataFrame,
-      keyCols: Seq[String], namedCanonical: DataFrame => Seq[(String, Column)],
-      ignore: Set[String]): DataFrame =
-    rowDiff(source, target, keyCols,
-      df => canonicalIgnoring(namedCanonical(df), ignore))
 
   /**
    * Per-table `range` config (reference sync_diff_inspector config

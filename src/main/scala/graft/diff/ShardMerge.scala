@@ -88,22 +88,22 @@ object ShardMerge {
 
   /**
    * The reference's merge rule made explicit: per-shard per-chunk partial
-   * digests (count, bit_xor of row digests) combined across shards by
-   * SUM/XOR (mysql_shard.go:127-150). Chunk membership must come from
-   * SHARED bounds (the downstream's key min/max) so every shard and the
-   * downstream agree on boundaries. Scale shape: one partial agg per
-   * shard + one nChunks-sized combine — never an all-shard row union in
-   * the checksum path.
+   * digests ([[ChunkDiff.chunkDigest]]: count, bit_xor of row digests)
+   * combined across shards by SUM/XOR (mysql_shard.go:127-150). Chunk
+   * membership must come from SHARED bounds (the downstream's key
+   * min/max) so every shard and the downstream agree on boundaries; the
+   * result is `(chunk_id, cnt, checksum)`, ready for
+   * [[ChunkDiff.compareChunks]]. Scale shape: one partial agg per shard +
+   * one nChunks-sized combine — never an all-shard row union in the
+   * checksum path.
    */
   def shardChunkChecksums(shards: Seq[DataFrame], keyCol: String,
       lo: Long, hi: Long, nChunks: Int,
       canonicalCols: DataFrame => Seq[Column]): DataFrame =
     shards.map { df =>
-      df.withColumn("row_digest", ChunkDiff.rowDigest(canonicalCols(df)))
-        .withColumn("chunk_id",
-          ChunkDiff.chunkByWidth(col(keyCol), lo, hi, nChunks))
-        .groupBy("chunk_id")
-        .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_digest)").as("checksum"))
+      val key = col(keyCol)
+      ChunkDiff.chunkDigest(df, ChunkDiff.chunkByWidth(key, lo, hi, nChunks),
+        key, canonicalCols(df)).select("chunk_id", "cnt", "checksum")
     }.reduce(_ unionByName _)
       .groupBy("chunk_id")
       .agg(sum("cnt").as("cnt"), expr("bit_xor(checksum)").as("checksum"))

@@ -1413,7 +1413,7 @@ object DdlQueries {
   // q287 — DDL special comments
   // ---------------------------------------------------------------------
 
-  private val SinkTestPath = "/root/reference/cdc/owner/ddl_sink_test.go"
+  private val SinkTestPath = s"${Gate.ReferenceRoot}/cdc/owner/ddl_sink_test.go"
 
   /** Parse the reference's TestAddSpecialComment []struct literal into
     * (query, charset, result) triples: Go string concatenations joined,

@@ -98,11 +98,10 @@ object DiffQueries {
          |) GROUP BY chunk_id""".stripMargin
     }) { (spark, dir) =>
     val li = Tables.load(spark, dir, "lineitem")
-    li.withColumn("row_digest", ChunkDiff.rowDigest(canonical(li)))
-      .withColumn("chunk_id",
-        ChunkDiff.chunkByKeyHash(Seq(col("l_returnflag"), col("l_orderkey")), 16))
-      .groupBy("chunk_id")
-      .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_digest)").as("checksum"))
+    ChunkDiff.chunkDigest(li,
+        ChunkDiff.chunkByKeyHash(Seq(col("l_returnflag"), col("l_orderkey")), 16),
+        col("l_orderkey"), canonical(li))
+      .select("chunk_id", "cnt", "checksum")
   }
 
   /**
@@ -452,23 +451,12 @@ object DiffQueries {
       Gate.timedBuild(s"chunk-compare facts ($dir)") {
         val li = Tables.load(spark, dir, "lineitem")
         val (lo, hi) = ChunkDiff.widthBounds(li, "l_orderkey")
-        def chk(df: DataFrame) = df
-          .withColumn("row_digest", ChunkDiff.rowDigest(canonical(df)))
-          .withColumn("chunk_id",
-            ChunkDiff.chunkByWidth(col("l_orderkey"), lo, hi, 32))
-          .groupBy("chunk_id")
-          .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_digest)").as("cs"))
-        val s = chk(li)
-        val t = chk(perturbed(spark, dir))
-        val cmp = s.as("s").join(t.as("t"),
-            col("s.chunk_id") === col("t.chunk_id"), "full_outer")
-          .select(
-            coalesce(col("s.chunk_id"), col("t.chunk_id")).as("chunk_id"),
-            (col("s.cnt").isNotNull && col("t.cnt").isNotNull &&
-              col("s.cnt") === col("t.cnt") && col("s.cs") === col("t.cs"))
-              .as("chunk_equal"),
-            coalesce(col("s.cnt"), lit(0L)).as("up_count"),
-            coalesce(col("t.cnt"), lit(0L)).as("down_count"))
+        def chk(df: DataFrame) = ChunkDiff.chunkDigest(df,
+          ChunkDiff.chunkByWidth(col("l_orderkey"), lo, hi, 32),
+          col("l_orderkey"), canonical(df))
+        val cmp = ChunkDiff.compareChunks(chk(li), chk(perturbed(spark, dir)))
+          .select(col("chunk_id"), col("equal").as("chunk_equal"),
+            col("up_cnt").as("up_count"), col("down_cnt").as("down_count"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         cmp.count() // 32 rows — materialize once for all consumers
         (cmp, lo, hi)
@@ -1012,11 +1000,9 @@ object DiffQueries {
     // the chunk checksums are 16-ROW aggregates: cache THOSE (one scan
     // per side total), never the 60M-row digested bases — r19's first
     // cut cached the bases and lost 50% at sf10 to the cache write
-    def chunked(df: DataFrame) = df
-      .withColumn("row_digest", ChunkDiff.rowDigest(canonical(df)))
-      .withColumn("chunk_id", ChunkDiff.chunkByWidth(k, lo, hi, 16))
-      .groupBy("chunk_id")
-      .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_digest)").as("checksum"))
+    def chunked(df: DataFrame) = ChunkDiff
+      .chunkDigest(df, ChunkDiff.chunkByWidth(k, lo, hi, 16), k, canonical(df))
+      .select("chunk_id", "cnt", "checksum")
       .persist()
 
     // The XOR-distributivity cross-check (per-shard partials combined by
@@ -1029,14 +1015,8 @@ object DiffQueries {
     val rng = new scala.util.Random(
       new java.io.File(dir).getAbsolutePath.hashCode)
     val sampledChunks = rng.shuffle((0 until 16).toList).take(4).sorted
-    val span = hi - lo + 1
-    def chunkRange(c: Int): Column = {
-      def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
-      val kLo = lo + ceilDiv(c.toLong * span, 16)
-      val kHi = if (c == 15) hi else lo + ceilDiv((c + 1).toLong * span, 16) - 1
-      k >= kLo && k <= kHi
-    }
-    val sampleFilter = sampledChunks.map(chunkRange).reduce(_ || _)
+    def inChunks(cs: Seq[Int]) = ChunkDiff.inChunks(k, cs, lo, hi, 16)
+    val sampleFilter = inChunks(sampledChunks)
     def sampledPartials(shards: Seq[DataFrame]) =
       ShardMerge.shardChunkChecksums(
         shards.map(_.filter(sampleFilter)), "l_orderkey", lo, hi, 16, canonical)
@@ -1044,31 +1024,23 @@ object DiffQueries {
         .withColumnRenamed("checksum", "s_checksum")
         .persist()
     def xorOk: Column = when(col("s_cnt").isNull, 1L)
-      .otherwise((col("cnt") === col("s_cnt") &&
-        col("checksum") === col("s_checksum")).cast("long"))
+      .otherwise((col("up_cnt") === col("s_cnt") &&
+        col("up_checksum") === col("s_checksum")).cast("long"))
 
-    val unionPath = chunked(merged)
     val down = chunked(li)
-      .withColumnRenamed("cnt", "d_cnt").withColumnRenamed("checksum", "d_checksum")
-    val compared = unionPath
+    val compared = ChunkDiff.compareChunks(chunked(merged), down)
       .join(sampledPartials(Seq(shard0, shard1, shard2)), Seq("chunk_id"), "left")
-      .join(down, Seq("chunk_id"))
     val chunkRows = compared
       .select(lit("chunk").as("kind"), col("chunk_id").cast("string").as("k"),
-        col("cnt").as("n"), col("checksum").as("v"), xorOk.as("xor_ok"),
-        (col("cnt") === col("d_cnt") && col("checksum") === col("d_checksum"))
-          .cast("long").as("match_down"))
+        col("up_cnt").as("n"), col("up_checksum").as("v"), xorOk.as("xor_ok"),
+        col("equal").cast("long").as("match_down"))
     // the ROW-LEVEL refine runs only over chunks whose checksum compare
     // failed — exactly the reference's gating (pkg/diff checksum-first,
     // sync_diff's BucketIterator → compareRows only on unequal chunks);
     // the mismatch list is a ≤16-row driver collect off the cached aggs
-    val mismatched = compared
-      .filter(col("cnt") =!= col("d_cnt") ||
-        col("checksum") =!= col("d_checksum"))
+    val mismatched = compared.filter(!col("equal"))
       .select("chunk_id").collect().map(_.getInt(0)).sorted
-    val mismatchFilter =
-      if (mismatched.isEmpty) lit(false)
-      else mismatched.map(chunkRange).reduce(_ || _)
+    val mismatchFilter = inChunks(mismatched.toSeq)
     val classes = ChunkDiff.rowDiff(merged.filter(mismatchFilter),
         li.filter(mismatchFilter), handle, canonical)
       .groupBy(col("diff_type"))
@@ -1084,23 +1056,19 @@ object DiffQueries {
     val cleanMerged = ShardMerge.mergeSources(
       Seq(("db_0", "t0", cleanShards(0)), ("db_1", "t1", cleanShards(1)),
         ("db_2", "t2", cleanShards(2))), rules, "db", "lineitem")
-    val cleanCompared = chunked(cleanMerged)
+    val cleanCompared = ChunkDiff.compareChunks(chunked(cleanMerged), down)
       .join(sampledPartials(cleanShards), Seq("chunk_id"), "left")
-      .join(down, Seq("chunk_id"))
-    val cleanMismatched = cleanCompared
-      .filter(col("cnt") =!= col("d_cnt") ||
-        col("checksum") =!= col("d_checksum"))
+    val cleanMismatched = cleanCompared.filter(!col("equal"))
       .select("chunk_id").collect().map(_.getInt(0)).sorted
     val cleanRefineCount =
       if (cleanMismatched.isEmpty) lit(0L)
       else lit(ChunkDiff.rowDiff(
-        cleanMerged.filter(cleanMismatched.map(chunkRange).reduce(_ || _)),
-        li.filter(cleanMismatched.map(chunkRange).reduce(_ || _)),
+        cleanMerged.filter(inChunks(cleanMismatched.toSeq)),
+        li.filter(inChunks(cleanMismatched.toSeq)),
         handle, canonical).count())
     val equalRow = cleanCompared
       .agg(
-        sum(when(col("cnt") === col("d_cnt") &&
-          col("checksum") === col("d_checksum"), 1L).otherwise(0L)).as("n"),
+        sum(when(col("equal"), 1L).otherwise(0L)).as("n"),
         min(xorOk).as("min_xor"))
       .select(lit("equal").as("kind"), lit("summary").as("k"), col("n"),
         cleanRefineCount.as("v"), col("min_xor").as("xor_ok"),
@@ -1499,17 +1467,10 @@ object DiffQueries {
     val up = li.withColumn("l_quantity",
       when(chunkCol.isin(2, 5, 11) && k % 97 === 0, col("l_quantity") + 1)
         .otherwise(col("l_quantity")))
-    def chunked(df: DataFrame) = df
-      .withColumn("row_digest", ChunkDiff.rowDigest(canonical(df)))
-      .withColumn("chunk_id", ChunkDiff.chunkByWidth(k, lo, hi, 16))
-      .groupBy("chunk_id")
-      .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_digest)").as("checksum"))
-    val facts = chunked(up).join(
-      chunked(li).withColumnRenamed("cnt", "d_cnt")
-        .withColumnRenamed("checksum", "d_checksum"), Seq("chunk_id"))
-      .select(col("chunk_id"),
-        (col("cnt") === col("d_cnt") &&
-          col("checksum") === col("d_checksum")).as("eq"))
+    def chunked(df: DataFrame) =
+      ChunkDiff.chunkDigest(df, chunkCol, k, canonical(df))
+    val facts = ChunkDiff.compareChunks(chunked(up), chunked(li))
+      .select("chunk_id", "equal")
       .collect().map(r => (r.getInt(0), r.getBoolean(1))).sortBy(_._1).toSeq
 
     def familyRows(family: String, filterByRand: Boolean,

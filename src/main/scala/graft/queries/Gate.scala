@@ -25,6 +25,10 @@ final case class GateQuery(
 
 object Gate {
 
+  /** The tiflow reference checkout q287, q305 and q310 read; the one place
+    * main code names it. */
+  val ReferenceRoot = "/root/reference"
+
   /** SQL string-literal rendering for generated VALUES scripts (null →
     * NULL) — ONE copy so gate script quoting cannot drift per file. */
   def sqlStr(s: String): String =

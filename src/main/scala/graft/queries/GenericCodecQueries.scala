@@ -1081,6 +1081,9 @@ object GenericCodecQueries {
     ddl.unionByName(cp).crossJoin(broadcast(disabled))
   }
 
+  // the reference's Debezium codec: q305 reads its fixtures, q310 its test
+  private val DbzRef = s"${Gate.ReferenceRoot}/pkg/sink/codec/debezium"
+
   /**
    * q305 — the Debezium per-column TYPE MATRIX
    * ([[graft.functions.DebeziumFields]];
@@ -1097,8 +1100,8 @@ object GenericCodecQueries {
    */
   val debeziumTypeMatrix = GateQuery(
     "q305_debezium_types",
-    Some("""WITH raw AS (SELECT content FROM
-      |  read_text('/root/reference/pkg/sink/codec/debezium/testdata/datatype.dbz.json')),
+    Some(("""WITH raw AS (SELECT content FROM
+      |  read_text('""" + DbzRef + """/testdata/datatype.dbz.json')),
       |doc AS (SELECT CAST(content AS JSON) AS j FROM raw),
       |tops AS (
       |  SELECT unnest(CAST(json_extract(j, '$.schema.fields') AS JSON[])) AS af
@@ -1129,16 +1132,16 @@ object GenericCodecQueries {
       |       '$.' || json_extract_string(kf, '$.field')) AS VARCHAR)
       |FROM (
       |  SELECT CAST(content AS JSON) AS kj FROM
-      |  read_text('/root/reference/pkg/sink/codec/debezium/testdata/datatype.dbz.key.json')
+      |  read_text('""" + DbzRef + """/testdata/datatype.dbz.key.json')
       |), LATERAL (SELECT unnest(CAST(json_extract(kj, '$.schema.fields') AS JSON[])) AS kf)
       |UNION ALL
       |SELECT '_key_schema_', 'struct', 0,
       |  json_extract_string(CAST(content AS JSON), '$.schema.name'), 0, '',
       |  NULL
-      |FROM read_text('/root/reference/pkg/sink/codec/debezium/testdata/datatype.dbz.key.json')""".stripMargin)) { (spark, dir) =>
+      |FROM read_text('""" + DbzRef + """/testdata/datatype.dbz.key.json')""").stripMargin)) { (spark, dir) =>
     import spark.implicits._
     import graft.functions.{DebeziumFields => DF}
-    val base = "/root/reference/pkg/sink/codec/debezium/testdata"
+    val base = s"$DbzRef/testdata"
     def slurp(p: String) = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
@@ -1360,10 +1363,10 @@ object GenericCodecQueries {
    */
   val debeziumEnvelope = GateQuery(
     "q310_debezium_envelope",
-    Some("""WITH RECURSIVE l AS (
+    Some(("""WITH RECURSIVE l AS (
       |  SELECT regexp_extract_all(content,
       |    'require\.JSONEq\(t, `([^`]+)`', 1) AS ls
-      |  FROM read_text('/root/reference/pkg/sink/codec/debezium/codec_test.go')
+      |  FROM read_text('""" + DbzRef + """/codec_test.go')
       |),
       |docs AS (
       |  SELECT v.kase AS kase, CAST(ls[v.i] AS JSON) AS j
@@ -1409,7 +1412,7 @@ object GenericCodecQueries {
       |WHERE json_type(node) NOT IN ('OBJECT', 'ARRAY')
       |   OR (json_type(node) = 'OBJECT' AND len(json_keys(node)) = 0)
       |   OR (json_type(node) = 'ARRAY'
-      |       AND CAST(json_array_length(node) AS INT) = 0)""".stripMargin)) {
+      |       AND CAST(json_array_length(node) AS INT) = 0)""").stripMargin)) {
     (spark, dir) =>
     import spark.implicits._
     import graft.functions.{DebeziumEnvelope => DE}

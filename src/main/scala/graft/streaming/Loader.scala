@@ -43,11 +43,9 @@ object Loader {
                  nChunks: Int, destDir: String,
                  completeAtMost: Int = Int.MaxValue,
                  partialNext: Boolean = false): Seq[Int] = {
-    val r = src.agg(min(col(keyCol)).cast("long"),
-      max(col(keyCol)).cast("long")).head()
+    val (lo, hi) = ChunkDiff.widthBounds(src, keyCol)
     val chunked = src.withColumn("_chunk",
-      ChunkDiff.chunkByWidth(col(keyCol).cast("long"),
-        r.getLong(0), r.getLong(1), nChunks))
+      ChunkDiff.chunkByWidth(col(keyCol).cast("long"), lo, hi, nChunks))
     val todo = (0 until nChunks).filterNot(c => Files.exists(marker(destDir, c)))
     val completed = todo.take(completeAtMost)
     completed.foreach { c =>

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference reader itself: a missing file cancels (never fails), the
   * Go-literal parsers read what the specs rely on, and no spec but
   * [[RefSource]] names the reference root, so a new unguarded read fails
-  * here instead of on a host without the checkout. */
+  * here instead of on a host without the checkout. In main code only
+  * `Gate.ReferenceRoot` names it. */
 class RefSourceSpec extends AnyFunSuite {
 
   private val Missing = "no/such/dir/missing_file.go"
@@ -21,18 +22,28 @@ class RefSourceSpec extends AnyFunSuite {
     assert(RefSource.sourceOpt(Missing).isEmpty)
   }
 
-  test("only RefSource names the reference root under src/test/scala") {
+  /** The .scala files under `dir` that name the reference root, relative
+    * to `dir`. The needle is built from two parts so it does not match
+    * this file. */
+  private def namingRoot(dir: String): Seq[String] = {
     val needle = "/root/" + "reference"
-    val root = Paths.get("src/test/scala")
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the project root: $root")
     val walk = Files.walk(root)
-    val offenders =
-      try walk.iterator.asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-        .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally walk.close()
+    try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("only RefSource names the reference root under src/test/scala") {
+    val offenders = namingRoot("src/test/scala")
     assert(offenders == Seq("graft/RefSource.scala"))
+  }
+
+  test("only Gate.ReferenceRoot names the reference root under src/main/scala") {
+    assert(namingRoot("src/main/scala") == Seq("graft/queries/Gate.scala"))
   }
 
   test("Go-literal parsers on an inline fixture") {
