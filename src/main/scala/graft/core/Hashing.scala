@@ -1,27 +1,53 @@
 package graft.core
 
+import java.nio.ByteBuffer
+import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Engine-portable deterministic hashing used by every operator whose result
  * must be reproducible in the DuckDB oracle (dispatchers, dedup, LSH,
  * fingerprints, diff checksums).
  *
- * Production note (100 TB path): `xxhash64` is the hot-path hash — one
- * codegen'd instruction-level pass, no string md5 round-trip. Every builder
- * here takes the portable md5 form only because the correctness gate needs
- * cross-engine equality; swap [[portableLong]] for [[fastLong]] in
- * latency-sensitive pipelines (same distribution properties, different
- * values).
+ * Production note (100 TB path): [[portableLong]] is one codegen'd md5
+ * per row over the string's bytes ([[graft.functions.Md5Long]]), and every
+ * builder here takes it because the correctness gate needs cross-engine
+ * equality. `xxhash64` ([[fastLong]]) is cheaper still but NOT portable:
+ * same distribution properties, different values, so swap it in only
+ * where no oracle reads the result.
  */
 object Hashing {
 
   /** 60-bit integer from the first 15 hex chars of md5 — identical in Spark
     * (`conv(substring(md5(x),1,15),16,10)`) and DuckDB
     * (`('0x' || substr(md5(x),1,15))::BIGINT`). */
-  def portableLong(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+  def portableLong(c: Column): Column = ExpressionUtils.column(
+    graft.functions.Md5Long(ExpressionUtils.expression(c.cast("string"))))
+
+  private val Md5 = ThreadLocal.withInitial[MessageDigest](
+    () => MessageDigest.getInstance("MD5"))
+
+  /** The 16-byte md5 digest, on this thread's digester. */
+  def md5(bytes: Array[Byte]): Array[Byte] = Md5.get().digest(bytes)
+
+  /** The value of [[portableLong]] on the JVM, for kernels and driver
+    * code: the first 8 md5 bytes big-endian, dropping the 16th hex digit
+    * (`>>> 4`), so always in [0, 2^60). A heap `UTF8String` is digested in
+    * place; the digester is per thread. */
+  def md5Long(s: UTF8String): Long = md5Long(s.getByteBuffer)
+  def md5Long(bytes: Array[Byte]): Long = md5Long(ByteBuffer.wrap(bytes))
+  private def md5Long(buf: ByteBuffer): Long = {
+    val md = Md5.get()
+    md.update(buf)
+    val d = md.digest()
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v >>> 4
+  }
 
   /** Production variant: Spark's native xxhash64 (codegen'd, no string
     * materialization). NOT oracle-portable. */

@@ -28,12 +28,13 @@ object ChunkDiff {
    * A1 — order-insensitive row-set digest: BIT_XOR over a 60-bit integer
    * carved from md5 of the canonicalized row. Canonical form must use
    * engine-portable renderings only: ints, decimal-cast floats, ISO dates.
-   * (reference sync_diff_inspector/utils/utils.go:860-918 uses
-   * CONV(SUBSTRING(MD5(CONCAT_WS(...)),...),16,10) — same construction.)
+   * The value is the reference's CONV(SUBSTRING(MD5(CONCAT_WS(...)),1,15),
+   * 16,10) (sync_diff_inspector/utils/utils.go:860-918), computed by the
+   * [[graft.core.Hashing.portableLong]] kernel straight from the row
+   * string's bytes, with no hex string in between.
    */
   def rowDigest(canonicalCols: Seq[Column]): Column =
-    conv(substring(md5(concat_ws("|", canonicalCols: _*)), 1, 15), 16, 10)
-      .cast("long")
+    graft.core.Hashing.portableLong(concat_ws("|", canonicalCols: _*))
 
   /**
    * V1 scale path: range-partition on the key (distributed sampling picks

@@ -44,7 +44,7 @@ object DiffConfig {
         "security: cert and key must be provided together")
       if (isEmpty) None
       else {
-        val digest = java.security.MessageDigest.getInstance("MD5").digest(
+        val digest = graft.core.Hashing.md5(
           Seq(caPath, certPath, keyPath, caBytes, certBytes, keyBytes)
             .mkString("\u0000").getBytes("UTF-8"))
         Some("sync-diff-inspector-" +

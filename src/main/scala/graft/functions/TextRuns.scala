@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.Hashing.md5Long
 
 /**
  * Repetition-statistics kernel (Gopher-style top n-gram fraction,
@@ -76,29 +77,14 @@ object TextRuns {
 
   // ------------------------------------------------------------------
   // MinHash / SimHash kernels. Same VALUES as the Hashing.portableLong
-  // (md5) + seededMix column pipeline — the oracle twin SQL is unchanged —
-  // but computed inside the row: one digest per distinct shingle, k mixes
-  // in a tight loop, zero explode, zero shuffle. On a cluster the signature
-  // stage becomes a map-only pass over the corpus.
+  // (md5Long) + seededMix column pipeline — the oracle twin SQL is
+  // unchanged — but computed inside the row: one digest per distinct
+  // shingle, k mixes in a tight loop, zero explode, zero shuffle. On a
+  // cluster the signature stage becomes a map-only pass over the corpus.
   // ------------------------------------------------------------------
 
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-  private val Md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
   private val MixP = 2147483647L // 2^31 - 1, keep in lockstep with Hashing
-
-  /** 60-bit value of the first 15 hex chars of md5 — byte-identical to
-    * `conv(substring(md5(x),1,15),16,10)`: the first 8 digest bytes
-    * big-endian, dropping the 16th nibble. */
-  private def md5Long(bytes: Array[Byte]): Long = {
-    val d = Md5.get().digest(bytes)
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
 
   /**
    * Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken 2003,
@@ -209,7 +195,7 @@ object TextRuns {
         acc(md5Long(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
         i += 1
       }
-    } else acc(md5Long(text.getBytes))
+    } else acc(md5Long(text))
     new GenericInternalRow(Array[Any](
       new GenericArrayData(mins), new GenericArrayData(seen.toSortedArray)))
   }
@@ -235,7 +221,7 @@ object TextRuns {
         seen.add(md5Long(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
         i += 1
       }
-    } else seen.add(md5Long(text.getBytes))
+    } else seen.add(md5Long(text))
     new GenericArrayData(seen.toSortedArray)
   }
 
@@ -263,7 +249,7 @@ object TextRuns {
         i += 1
       }
       new GenericArrayData(out)
-    } else new GenericArrayData(Array(md5Long(text.getBytes)))
+    } else new GenericArrayData(Array(md5Long(text)))
   }
 
   /** Word n-grams AS STRINGS in document order (duplicates kept) — the
@@ -377,8 +363,7 @@ object TextRuns {
     * IS portableLong's integer value and per-bucket regrouping commutes
     * with every downstream sum (Σ tf·λ_b groups the same terms). Emits
     * ≤ min(#distinct tokens, b) rows per doc instead of one per distinct
-    * token, and the md5 runs on the token bytes directly — no
-    * conv(substring(md5hex)) string chain on the corpus path. */
+    * token. */
   def bucketTfArray(text: UTF8String, b: Int): ArrayData = {
     val toks = Whitespace.split(text.toString, -1)
     val m = new java.util.TreeMap[String, Long]()
@@ -410,10 +395,9 @@ object TextRuns {
   /** Exact-dup digest of normalized text in ONE in-row pass: lowercase
     * (the same UTF8String.toLowerCase the `lower` expression calls),
     * whitespace runs collapsed to single spaces (same `\s+` regex), md5 →
-    * 60-bit long ([[md5Long]] ≡ conv(substring(md5(x),1,15),16,10)).
-    * Byte-identical to the legacy
-    * `portableLong(regexp_replace(lower(text), "\\s+", " "))` column
-    * chain, which materialized three intermediate strings per row. */
+    * 60-bit long ([[graft.core.Hashing.md5Long]]). Byte-identical to
+    * `portableLong(regexp_replace(lower(text), "\\s+", " "))`, without
+    * that chain's two intermediate strings per row. */
   def exactKeyLong(text: UTF8String): Long = {
     val collapsed =
       Whitespace.matcher(text.toLowerCase.toString).replaceAll(" ")

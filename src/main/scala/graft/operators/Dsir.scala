@@ -32,9 +32,9 @@ object Dsir {
     * completes the range). r21: the tokenize→md5→mod-b chain is ONE
     * in-row kernel ([[graft.functions.TextRuns.bucketTf]]) emitting
     * per-bucket pre-summed tf pairs — the former form exploded a row per
-    * distinct token STRING and ran the conv(substring(md5(…))) column
-    * chain on each; per-bucket totals are identical (md5Long ≡
-    * portableLong and regrouping commutes with the sum). */
+    * distinct token STRING and hashed each with portableLong; per-bucket
+    * totals are identical (both are [[graft.core.Hashing.md5Long]] and
+    * regrouping commutes with the sum). */
   def bucketCounts(df: DataFrame, textCol: String, b: Int): DataFrame =
     df.select(explode(graft.functions.TextRuns.bucketTf(col(textCol), b)).as("p"))
       .groupBy(col("p.bucket").as("bucket")).agg(sum(col("p.tf")).as("n"))

@@ -87,19 +87,12 @@ object Multimodal {
             kind = r.kind,
             byte_len = len,
             head_byte = if (len > 0) r.payload(0) & 0xff else -1,
-            phash = stubPhash(r.payload),
+            // portable stand-in for a perceptual hash: the payload's
+            // 60-bit md5 value, oracle-checkable
+            phash = Hashing.md5Long(r.payload),
             frame_offsets = (0 until 4).map(i => i * (len / 4)))
         }
       }
-  }
-
-  /** Portable stand-in for a perceptual hash: 60-bit md5 prefix of the
-    * payload bytes (as UTF-8 string — the derivation keeps it
-    * oracle-checkable). */
-  private def stubPhash(payload: Array[Byte]): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(payload).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
   // ---- real image decode (JVM-native javax.imageio; no extra deps) ------

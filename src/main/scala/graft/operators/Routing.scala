@@ -250,7 +250,7 @@ object Routing {
     val cols = resolveIndex(indexes, indexName)
     // the 0x01 separator keeps (name, value) injective ("pk","180" vs
     // "pk1","80"); oracle twin: name || chr(1) || valueString
-    pmod(cols.map(c => md5Long(
+    pmod(cols.map(c => graft.core.Hashing.portableLong(
         concat(lit(c), lit("\u0001"), colValue(c).cast("string"))))
       .reduce(_ bitwiseXOR _), lit(n.toLong))
   }
@@ -268,10 +268,8 @@ object Routing {
     indexes.getOrElse(indexName, throw new IllegalArgumentException(
       s"index not found when dispatch event, index: $indexName"))
 
-  /** Engine-portable string→long hash (delegates to core.Hashing). */
-  def md5Long(c: Column): Column = graft.core.Hashing.portableLong(c)
-
-  private def xxhashLess(a: Column, b: Column): Column = md5Long(concat_ws("\u0001", a, b))
+  private def xxhashLess(a: Column, b: Column): Column =
+    graft.core.Hashing.portableLong(concat_ws("\u0001", a, b))
 
   /**
    * R4 — causality/conflict partitioning. tiflow maintains a conflict-

@@ -62,16 +62,12 @@ object VectorOps {
    * constants per (plane, dim), so computing them per row (or per query in
    * the oracle) would be pure waste. Same derivation on both engines.
    */
-  def hyperplaneWeights(planes: Int, dim: Int): Seq[Seq[Long]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  def hyperplaneWeights(planes: Int, dim: Int): Seq[Seq[Long]] =
     (0 until planes).map { j =>
       (0 until dim).map { d =>
-        val hex = md.digest(s"${j}_$d".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2001L - 1000L
+        Hashing.md5Long(s"${j}_$d".getBytes("UTF-8")) % 2001L - 1000L
       }
     }
-  }
 
   /** LSH signature: `planes` sign bits of literal-weight projections.
     * r20: kernel-backed — one pass over the vector computes every plane's

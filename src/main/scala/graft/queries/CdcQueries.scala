@@ -838,8 +838,7 @@ object CdcQueries {
     val rendered = evs.withColumn("sql",
         when(col("op") === "D", ForceReplicate.deleteSql("`dw`.`t`", fields))
           .otherwise(ForceReplicate.insertSql("`dw`.`t`", fields)))
-      .withColumn("dig",
-        conv(substring(md5(col("sql")), 1, 15), 16, 10).cast("long"))
+      .withColumn("dig", graft.core.Hashing.portableLong(col("sql")))
     val sqlPins = rendered.groupBy(col("grp"), coalesce(col("v"), lit(-999L)).as("_vk"))
       .agg(expr("bit_xor(dig)").as("sql_check"),
         sum(when(col("op") === "D" && col("v").isNull, 1L).otherwise(0L))

@@ -44,20 +44,11 @@ object Captures {
   def validId(id: String): Boolean =
     id.matches("[a-zA-Z0-9]+(-[a-zA-Z0-9]+)*") && id.length <= 128
 
-  /** Driver-side twin of [[graft.core.Hashing.portableLong]]: 60-bit int
-    * from the first 15 hex chars of md5. Table lists are control-plane
-    * sized, so the placement hash runs on the driver. */
-  def portableLong(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(
-      d.take(8).map("%02x".format(_)).mkString.take(15), 16)
-  }
-
-  /** Place one qualified table on the id-sorted alive ring. */
+  /** Place one qualified table on the id-sorted alive ring. Table lists
+    * are control-plane sized, so the placement hash runs on the driver. */
   def placement(table: String, aliveSorted: IndexedSeq[String]): String =
-    aliveSorted(((portableLong(table) % aliveSorted.size) +
-      aliveSorted.size).toInt % aliveSorted.size)
+    aliveSorted((graft.core.Hashing.md5Long(table.getBytes("UTF-8")) %
+      aliveSorted.size).toInt)
 }
 
 /**

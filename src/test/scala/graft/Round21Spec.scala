@@ -47,7 +47,8 @@ class Round21Spec extends SparkSpec {
 
   test("exactKey kernel equals the legacy column chain, unicode included") {
     val legacy = (t: Column) =>
-      graft.core.Hashing.portableLong(regexp_replace(lower(t), "\\s+", " "))
+      conv(substring(md5(regexp_replace(lower(t), "\\s+", " ")), 1, 15), 16, 10)
+        .cast("long")
     val texts = Seq(
       "Hello  World", " leading and trailing ", "tabs\tand\nnewlines\r\nmix",
       "ALL CAPS TEXT", "ümlauts ÄÖÜ ß", "İstanbul I ı", "ΣΊΣΥΦΟΣ Σ",
@@ -85,7 +86,8 @@ class Round21Spec extends SparkSpec {
     val legacy = texts
       .select(col("t"), explode(TextRuns.tokenTf(col("t"))).as("p"))
       .select(col("t"),
-        pmod(graft.core.Hashing.portableLong(col("p.w")), lit(b.toLong)).as("bucket"),
+        pmod(conv(substring(md5(col("p.w")), 1, 15), 16, 10).cast("long"),
+          lit(b.toLong)).as("bucket"),
         col("p.tf").as("tf"))
       .groupBy("t", "bucket").agg(sum("tf").as("tf"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet

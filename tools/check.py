@@ -6,7 +6,7 @@ DuckDB on the same sf dir and reports per-query row/schema/value match.
 Usage: python3 tools/check.py [sfdir] [outdir] [--only q10,q11]
 (Uses driver-side python libs duckdb/pandas — NOT part of the engine.)
 """
-import json, math, sys, glob, os
+import json, math, re, sys, glob, os
 
 import duckdb
 import pandas as pd
@@ -72,6 +72,21 @@ def compare(name, spark_df, duck_df):
     return None
 
 
+def reference_root():
+    """Gate.ReferenceRoot, read from its one definition in the Scala source."""
+    gate = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                        "src/main/scala/graft/queries/Gate.scala")
+    return re.search(r'val ReferenceRoot = "([^"]+)"', open(gate).read()).group(1)
+
+
+def missing_reference(sql, root):
+    """Paths under the reference root that `sql` names and that do not
+    exist: a gate failing on these lacks its checkout, not its logic."""
+    return sorted({p for p in re.findall(r"'([^']+)'", sql)
+                   if (p == root or p.startswith(root + "/"))
+                   and not os.path.exists(p)})
+
+
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -86,25 +101,29 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    root = reference_root()
     n_ok = n_fail = 0
     for name in sorted(oracle):
         if only and name not in only:
             continue
+        missing = missing_reference(oracle[name], root)
+        note = (f" (reference checkout missing: {', '.join(missing)})"
+                if missing else "")
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output")
+            print(f"FAIL {name}: no spark output{note}")
             n_fail += 1
             continue
         spark_df = pd.concat([pd.read_parquet(f) for f in sorted(files)])
         try:
             duck_df = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {str(e).splitlines()[0][:200]}")
+            print(f"FAIL {name}: oracle error: {str(e).splitlines()[0][:200]}{note}")
             n_fail += 1
             continue
         err = compare(name, spark_df, duck_df)
         if err:
-            print(f"FAIL {name}: {err}")
+            print(f"FAIL {name}: {err}{note}")
             n_fail += 1
         else:
             print(f"ok   {name} ({len(spark_df)} rows)")
