@@ -189,11 +189,11 @@ object Bench {
         if (settleAfterEach) BenchMetrics.settle()
         name -> r.sec
       }
-    // Prebuild phase: the dir-keyed shared caches (diff table, chunk-
+    // Prebuild phase: the shared builds (diff table, chunk-
     // compare facts, LSH candidates, CC labels) run FIRST as their own
     // timed entries, so every consuming gate reports marginal cost and
     // the adjudicator's raw-vs-repeat readings see the same cache state
-    // (r17: q243 billed 6.94 s of cmpCache build that its repeats never
+    // (r17: q243 billed 6.94 s of compare-facts build that its repeats never
     // paid). Skipped on filtered local runs — those measure whatever the
     // named gate actually does, cold caches included.
     val builds =

@@ -1,5 +1,7 @@
 package graft.diff
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +20,11 @@ import org.apache.spark.sql.functions._
  * per side; and the row-level drill-down is a single full-outer join on the
  * key — no binary search needed because the join IS the row-level diff at
  * scale (one shuffle, AQE handles skew). At 100 TB both sides stay fully
- * distributed; nothing is collected to the driver.
+ * distributed; only [[check]]'s per-chunk compare reaches the driver.
  * One path per step: [[chunkDigest]] builds every chunk digest,
- * [[compareChunks]] is the one two-sided compare.
+ * [[compareChunks]] is the one two-sided compare, [[rowDiff]] the one
+ * row-level classifier, [[fixSql]] the one repair renderer, and [[check]]
+ * the one checksum-then-refine flow over the first two and [[rowDiff]].
  */
 object ChunkDiff {
 
@@ -111,12 +115,16 @@ object ChunkDiff {
     (start(c), if (c == nChunks - 1) hi else start(c + 1) - 1)
   }
 
-  /** Keys of `chunks` as pushable range predicates; false for none. */
+  /** Keys [[chunkByWidth]] puts in `chunks`, as pushable range predicates;
+    * false for none. Keys outside `[lo, hi]` are kept too: those above
+    * `hi` clamp into the last chunk, those below `lo` fall in chunk 0 or
+    * below, so chunk 0's predicate reads every key up to its end. */
   def inChunks(key: Column, chunks: Seq[Int], lo: Long, hi: Long,
       nChunks: Int): Column =
-    chunks.map { c =>
+    chunks.map(_ max 0).distinct.map { c =>
       val (kLo, kHi) = chunkRange(c, lo, hi, nChunks)
-      key >= kLo && key <= kHi
+      (if (c > 0) key >= kLo else lit(true)) &&
+        (if (c < nChunks - 1) key <= kHi else lit(true))
     }.reduceOption(_ || _).getOrElse(lit(false))
 
   /** V2 — the chunk-digest kernel: per `chunkId`, `(chunk_id, cnt,
@@ -133,6 +141,15 @@ object ChunkDiff {
         expr("bit_xor(row_digest)").as("checksum"),
         min(orderKey).as("chunk_lo"),
         max(orderKey).as("chunk_hi"))
+
+  /** V2 — `(chunk_id, cnt, checksum)` of [[chunkDigest]] over [[chunkByWidth]]
+    * chunks of `key` within the caller's shared `bounds`: the side form
+    * [[compareChunks]] and [[check]] take. */
+  def widthDigest(df: DataFrame, key: String,
+      canonicalCols: DataFrame => Seq[Column], bounds: (Long, Long),
+      nChunks: Int): DataFrame =
+    chunkDigest(df, chunkByWidth(col(key), bounds._1, bounds._2, nChunks),
+      col(key), canonicalCols(df)).select("chunk_id", "cnt", "checksum")
 
   /** V2 — [[chunkDigest]] over equal-width key chunks of the first order
     * key, bounded by the table's own [[widthBounds]]. */
@@ -158,25 +175,62 @@ object ChunkDiff {
         col("up_checksum") === col("down_checksum"))
   }
 
+  /** J4 — the row class from the source and target digests: missing
+    * (source only, needs INSERT), extra (target only, needs DELETE),
+    * different (needs REPLACE), NULL where equal. */
+  def diffType(s: Column, t: Column): Column =
+    when(t.isNull, "missing").when(s.isNull, "extra").when(s =!= t, "different")
+
   /**
-   * J4/V3 — row-level diff via full-outer join on the key columns.
-   * Emits one row per difference with a class:
-   *   missing   — key present in source, absent in target (needs INSERT)
-   *   extra     — key absent in source, present in target (needs DELETE)
-   *   different — key on both sides but the digest differs (needs REPLACE)
+   * J4 — row-level diff via full-outer join on the key columns: one row
+   * per difference, `(keyCols…, s_digest, s_<p>…, t_digest, t_<p>…,
+   * diff_type)` with [[diffType]]'s class. Each `payload` entry `p -> c`
+   * is evaluated on each side and carried through the join as `s_<p>` and
+   * `t_<p>` (NULL on the side that lacks the key), so a consumer such as
+   * [[fixSql]] need not read either side again.
    * Never cache a digested wide frame to share it: at sf10 that ran 50%
    * SLOWER than re-digesting per consumer (round-19 NOTES).
    */
   def rowDiff(source: DataFrame, target: DataFrame, keyCols: Seq[String],
-              canonicalCols: DataFrame => Seq[Column]): DataFrame = {
-    def side(df: DataFrame, d: String) = df.withColumn("digest",
-      rowDigest(canonicalCols(df))).select(keyCols.map(col) :+ col("digest").as(d): _*)
-    side(source, "s_digest").join(side(target, "t_digest"), keyCols, "full_outer")
-      .withColumn("diff_type",
-        when(col("t_digest").isNull, "missing")
-          .when(col("s_digest").isNull, "extra")
-          .when(col("s_digest") =!= col("t_digest"), "different"))
+              canonicalCols: DataFrame => Seq[Column],
+              payload: Seq[(String, Column)] = Nil): DataFrame = {
+    def side(df: DataFrame, p: String) = df.withColumn("digest",
+      rowDigest(canonicalCols(df))).select(keyCols.map(col) ++
+        (col("digest").as(s"${p}_digest") +:
+          payload.map { case (n, c) => c.as(s"${p}_$n") }): _*)
+    side(source, "s").join(side(target, "t"), keyCols, "full_outer")
+      .withColumn("diff_type", diffType(col("s_digest"), col("t_digest")))
       .filter(col("diff_type").isNotNull)
+  }
+
+  /** [[check]]'s outcome: the [[compareChunks]] rows (collected into a
+    * local frame), the unequal chunks' ids in order, and their [[rowDiff]]. */
+  final case class Checked(compared: DataFrame, mismatched: Seq[Int],
+      rows: DataFrame)
+
+  /**
+   * V2→V3 — the checksum-then-refine flow (reference
+   * sync_diff_inspector/diff/diff.go:284-505): [[widthDigest]] both sides
+   * within the caller's one `bounds`, compare in one collect, and
+   * [[rowDiff]] only the unequal chunks' key ranges, pushed into both
+   * sides by [[inChunks]] — with none, the row diff reads an empty
+   * relation and runs no job. A `targetDigest` (a [[widthDigest]] over the
+   * same bounds) is used as is, so a shared target is digested once.
+   */
+  def check(source: DataFrame, target: DataFrame, keyCols: Seq[String],
+      canonicalCols: DataFrame => Seq[Column], bounds: (Long, Long),
+      nChunks: Int, targetDigest: Option[DataFrame] = None): Checked = {
+    val key = keyCols.head
+    def digest(df: DataFrame) =
+      widthDigest(df, key, canonicalCols, bounds, nChunks)
+    val cmp = compareChunks(digest(source), targetDigest.getOrElse(digest(target)))
+    val rows = cmp.collect()
+    val mismatched = rows.filterNot(_.getAs[Boolean]("equal"))
+      .map(_.getAs[Int]("chunk_id")).sorted.toSeq
+    val inBad = inChunks(col(key), mismatched, bounds._1, bounds._2, nChunks)
+    Checked(source.sparkSession.createDataFrame(rows.toSeq.asJava, cmp.schema),
+      mismatched,
+      rowDiff(source.filter(inBad), target.filter(inBad), keyCols, canonicalCols))
   }
 
   /**
@@ -212,7 +266,9 @@ object ChunkDiff {
    * V4 — fix-SQL generation: REPLACE for missing/different, DELETE for
    * extra (reference sync_diff_inspector/diff/diff.go:792-890). Pure string
    * building from typed columns; values must be rendered engine-portably by
-   * the caller (ints / decimal casts / quoted strings).
+   * the caller (ints / decimal casts / quoted strings), and a NULL value
+   * renders as `NULL` (as [[graft.operators.ForceReplicate.insertSql]]
+   * does) rather than vanishing from the VALUES list.
    */
   def fixSql(diff: DataFrame, table: String, keyCols: Seq[String],
              valueExprs: Seq[Column]): DataFrame =
@@ -223,5 +279,7 @@ object ChunkDiff {
           lit(";")))
         .otherwise(
           concat(lit(s"REPLACE INTO $table VALUES ("),
-            concat_ws(", ", valueExprs: _*), lit(");"))))
+            concat_ws(", ",
+              valueExprs.map(v => coalesce(v.cast("string"), lit("NULL"))): _*),
+            lit(");"))))
 }

@@ -110,33 +110,19 @@ object DiffQueries {
    * pass over the same source×target join, not three. Compute the
    * classified diff rows ONCE (digest both sides, full-outer join on the
    * PK, classify), persist, and let q51 (aggregate report) and q52
-   * (fix-SQL rendering) consume the same table. Keyed per sf dir;
-   * process-scoped like any cached intermediate of a job.
+   * (fix-SQL rendering) consume the same table; the diff rows carry the
+   * rendered quantity, so q52 never reads the source again.
    */
-  private val diffCache = Gate.registerCache(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-
-  private def classifiedDiff(spark: SparkSession, dir: String): DataFrame =
-    diffCache.getOrElseUpdate(dir, Gate.timedBuild(s"diff table ($dir)") {
-      import org.apache.spark.storage.StorageLevel
-      def side(df: DataFrame, digestName: String, qtyName: String) =
-        df.select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").cast(DecimalType(12, 2)).cast("string").as(qtyName),
-          ChunkDiff.rowDigest(canonical(df)).as(digestName))
-      val s = side(Tables.load(spark, dir, "lineitem"), "s_digest", "s_qty")
-      val t = side(perturbed(spark, dir), "t_digest", "t_qty")
-      val diff = s.join(t, Seq("l_orderkey", "l_linenumber"), "full_outer")
-        .withColumn("diff_type",
-          when(col("t_digest").isNull, "missing")
-            .when(col("s_digest").isNull, "extra")
-            .when(col("s_digest") =!= col("t_digest"), "different"))
-        .filter(col("diff_type").isNotNull)
-        .withColumn("qty", coalesce(col("s_qty"), col("t_qty")))
-        .select("l_orderkey", "l_linenumber", "diff_type", "qty")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      diff.count() // materialize: both consumers read the small diff set
-      diff
-    })
+  private val classifiedDiff = Gate.shared("diff table") { (spark, dir) =>
+    val diff = ChunkDiff.rowDiff(Tables.load(spark, dir, "lineitem"),
+        perturbed(spark, dir), Seq("l_orderkey", "l_linenumber"), canonical,
+        Seq("qty" -> col("l_quantity").cast(DecimalType(12, 2)).cast("string")))
+      .withColumn("qty", coalesce(col("s_qty"), col("t_qty")))
+      .select("l_orderkey", "l_linenumber", "diff_type", "qty")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    diff.count() // materialize: both consumers read the small diff set
+    diff
+  }
 
   // J4/V3 — row-level diff classification, aggregated.
   val rowDiff = GateQuery(
@@ -194,21 +180,15 @@ object DiffQueries {
          |    ON s.l_orderkey = t.l_orderkey AND s.l_linenumber = t.l_linenumber
          |)
          |WHERE diff_type IS NOT NULL""".stripMargin)) { (spark, dir) =>
-    classifiedDiff(spark, dir)
-      .withColumn("fix_sql",
-        renderFixSql(col("diff_type") === "extra", col("qty")))
+    lineitemFixSql(classifiedDiff(spark, dir), col("qty"))
       .select("l_orderkey", "l_linenumber", "diff_type", "fix_sql")
   }
 
-  /** Render one row's repair statement — DELETE for downstream-extra rows,
-    * key-implicit REPLACE otherwise (shared by q52 and q118 so the fix-SQL
-    * format lives in one place). */
-  private def renderFixSql(extra: Column, qty: Column): Column =
-    when(extra,
-      concat(lit("DELETE FROM lineitem WHERE l_orderkey = "), col("l_orderkey"),
-        lit(" AND l_linenumber = "), col("l_linenumber"), lit(";")))
-      .otherwise(concat(lit("REPLACE INTO lineitem VALUES ("), col("l_orderkey"),
-        lit(", "), col("l_linenumber"), lit(", "), qty, lit(");")))
+  /** q52's and q118's repair statements over a (l_orderkey, l_linenumber)
+    * diff: DELETE for extra rows, key-implicit REPLACE carrying `qty`. */
+  private def lineitemFixSql(diff: DataFrame, qty: Column): DataFrame =
+    ChunkDiff.fixSql(diff, "lineitem", Seq("l_orderkey", "l_linenumber"),
+      Seq(col("l_orderkey"), col("l_linenumber"), qty))
 
   private val FixSample = 153L
 
@@ -258,13 +238,9 @@ object DiffQueries {
       "INSERT INTO diff.lineitem VALUES " +
         g.map { case (ok, ln, q) => s"($ok, $ln, $q)" }.mkString(", ")
     }.toSeq
-    val fixes = up.select(col("l_orderkey"), col("l_linenumber"),
-        col("qty").as("s_qty"))
-      .join(down.select(col("l_orderkey"), col("l_linenumber"),
-        col("qty").as("t_qty")), Seq("l_orderkey", "l_linenumber"), "full_outer")
-      .filter(col("t_qty").isNull || col("s_qty").isNull ||
-        col("s_qty") =!= col("t_qty"))
-      .withColumn("fix_sql", renderFixSql(col("s_qty").isNull, col("s_qty")))
+    val diff = ChunkDiff.rowDiff(up, down, Seq("l_orderkey", "l_linenumber"),
+      _ => Seq(col("qty")), Seq("qty" -> col("qty")))
+    val fixes = lineitemFixSql(diff, col("s_qty"))
       .select("fix_sql").as[String].collect()
       // fix SQL targets the bare table name; qualify for the embedded DB
       .map(_.replace("lineitem", "diff.lineitem").stripSuffix(";"))
@@ -356,15 +332,11 @@ object DiffQueries {
       ChunkDiff.rowDigest(canonical(df)).as(s"${p}_full"),
       ChunkDiff.rowDigest(
         ChunkDiff.canonicalIgnoring(namedCanonical(df), ignore)).as(s"${p}_ign"))
-    def cls(sd: String, td: String) =
-      when(col(td).isNull, "missing")
-        .when(col(sd).isNull, "extra")
-        .when(col(sd) =!= col(td), "different")
     side(Tables.load(spark, dir, "lineitem"), "s")
       .join(side(pricePerturbed, "t"), Seq("l_orderkey", "l_linenumber"),
         "full_outer")
-      .withColumn("ft", cls("s_full", "t_full"))
-      .withColumn("it", cls("s_ign", "t_ign"))
+      .withColumn("ft", ChunkDiff.diffType(col("s_full"), col("t_full")))
+      .withColumn("it", ChunkDiff.diffType(col("s_ign"), col("t_ign")))
       .agg(
         sum(when(col("ft") === "missing", 1L).otherwise(0L)).as("full_missing"),
         sum(when(col("ft") === "extra", 1L).otherwise(0L)).as("full_extra"),
@@ -439,28 +411,22 @@ object DiffQueries {
     * (chunk_id, eq, up_count, down_count) from both sides' 32-chunk
     * (count, checksum) digests over SOURCE-side width bounds — the
     * reference's one-side split planner shares boundaries the same way.
-    * Persisted + dir-cached: both gates consume it and q240 reads it
+    * Persisted + shared: both gates consume it and q240 reads it
     * three times (ok facts, bad facts, summary) — without the persist
     * the two full-table digest scans would re-run per consumer. */
-  private val cmpCache = Gate.registerCache(scala.collection.concurrent
-    .TrieMap.empty[String, (DataFrame, Long, Long)])
-
-  private def chunkCmpFacts(spark: SparkSession, dir: String)
-      : (DataFrame, Long, Long) =
-    cmpCache.getOrElseUpdate(dir,
-      Gate.timedBuild(s"chunk-compare facts ($dir)") {
-        val li = Tables.load(spark, dir, "lineitem")
-        val (lo, hi) = ChunkDiff.widthBounds(li, "l_orderkey")
-        def chk(df: DataFrame) = ChunkDiff.chunkDigest(df,
-          ChunkDiff.chunkByWidth(col("l_orderkey"), lo, hi, 32),
-          col("l_orderkey"), canonical(df))
-        val cmp = ChunkDiff.compareChunks(chk(li), chk(perturbed(spark, dir)))
-          .select(col("chunk_id"), col("equal").as("chunk_equal"),
-            col("up_cnt").as("up_count"), col("down_cnt").as("down_count"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cmp.count() // 32 rows — materialize once for all consumers
-        (cmp, lo, hi)
-      })
+  private val chunkCmpFacts = Gate.shared("chunk-compare facts") {
+    (spark, dir) =>
+      val li = Tables.load(spark, dir, "lineitem")
+      val (lo, hi) = ChunkDiff.widthBounds(li, "l_orderkey")
+      def chk(df: DataFrame) =
+        ChunkDiff.widthDigest(df, "l_orderkey", canonical, (lo, hi), 32)
+      val cmp = ChunkDiff.compareChunks(chk(li), chk(perturbed(spark, dir)))
+        .select(col("chunk_id"), col("equal").as("chunk_equal"),
+          col("up_cnt").as("up_count"), col("down_cnt").as("down_count"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cmp.count() // 32 rows — materialize once for all consumers
+      (cmp, lo, hi)
+  }
 
   /** DuckDB twin of [[chunkCmpFacts]] (appended after `perturbedCte`). */
   private val cmpCte =
@@ -997,13 +963,14 @@ object DiffQueries {
     // exploded the full-outer compare into two phantom `different` pairs)
     val handle = Seq("l_orderkey", "l_linenumber", "l_partkey",
       "l_suppkey", "l_shipdate")
-    // the chunk checksums are 16-ROW aggregates: cache THOSE (one scan
-    // per side total), never the 60M-row digested bases — r19's first
-    // cut cached the bases and lost 50% at sf10 to the cache write
-    def chunked(df: DataFrame) = ChunkDiff
-      .chunkDigest(df, ChunkDiff.chunkByWidth(k, lo, hi, 16), k, canonical(df))
-      .select("chunk_id", "cnt", "checksum")
+    // the downstream's chunk checksums are a 16-ROW aggregate both
+    // checks compare against: cache THAT (one scan total), never the
+    // 60M-row digested base — r19's first cut cached the bases and lost
+    // 50% at sf10 to the cache write
+    val down = ChunkDiff.widthDigest(li, "l_orderkey", canonical, (lo, hi), 16)
       .persist()
+    def check(up: DataFrame) = ChunkDiff.check(up, li, handle, canonical,
+      (lo, hi), 16, Some(down))
 
     // The XOR-distributivity cross-check (per-shard partials combined by
     // SUM/XOR vs the union-path digest) runs over a seeded ~25% chunk
@@ -1015,8 +982,7 @@ object DiffQueries {
     val rng = new scala.util.Random(
       new java.io.File(dir).getAbsolutePath.hashCode)
     val sampledChunks = rng.shuffle((0 until 16).toList).take(4).sorted
-    def inChunks(cs: Seq[Int]) = ChunkDiff.inChunks(k, cs, lo, hi, 16)
-    val sampleFilter = inChunks(sampledChunks)
+    val sampleFilter = ChunkDiff.inChunks(k, sampledChunks, lo, hi, 16)
     def sampledPartials(shards: Seq[DataFrame]) =
       ShardMerge.shardChunkChecksums(
         shards.map(_.filter(sampleFilter)), "l_orderkey", lo, hi, 16, canonical)
@@ -1027,22 +993,17 @@ object DiffQueries {
       .otherwise((col("up_cnt") === col("s_cnt") &&
         col("up_checksum") === col("s_checksum")).cast("long"))
 
-    val down = chunked(li)
-    val compared = ChunkDiff.compareChunks(chunked(merged), down)
+    // the ROW-LEVEL refine runs only over chunks whose checksum compare
+    // failed — exactly the reference's gating (pkg/diff checksum-first,
+    // sync_diff's BucketIterator → compareRows only on unequal chunks)
+    val faulted = check(merged)
+    val compared = faulted.compared
       .join(sampledPartials(Seq(shard0, shard1, shard2)), Seq("chunk_id"), "left")
     val chunkRows = compared
       .select(lit("chunk").as("kind"), col("chunk_id").cast("string").as("k"),
         col("up_cnt").as("n"), col("up_checksum").as("v"), xorOk.as("xor_ok"),
         col("equal").cast("long").as("match_down"))
-    // the ROW-LEVEL refine runs only over chunks whose checksum compare
-    // failed — exactly the reference's gating (pkg/diff checksum-first,
-    // sync_diff's BucketIterator → compareRows only on unequal chunks);
-    // the mismatch list is a ≤16-row driver collect off the cached aggs
-    val mismatched = compared.filter(!col("equal"))
-      .select("chunk_id").collect().map(_.getInt(0)).sorted
-    val mismatchFilter = inChunks(mismatched.toSeq)
-    val classes = ChunkDiff.rowDiff(merged.filter(mismatchFilter),
-        li.filter(mismatchFilter), handle, canonical)
+    val classes = faulted.rows
       .groupBy(col("diff_type"))
       .agg(count(lit(1)).as("n"), sum(col("l_orderkey")).as("v"))
       .select(lit("diff").as("kind"), col("diff_type").as("k"), col("n"),
@@ -1056,16 +1017,12 @@ object DiffQueries {
     val cleanMerged = ShardMerge.mergeSources(
       Seq(("db_0", "t0", cleanShards(0)), ("db_1", "t1", cleanShards(1)),
         ("db_2", "t2", cleanShards(2))), rules, "db", "lineitem")
-    val cleanCompared = ChunkDiff.compareChunks(chunked(cleanMerged), down)
+    val clean = check(cleanMerged)
+    val cleanCompared = clean.compared
       .join(sampledPartials(cleanShards), Seq("chunk_id"), "left")
-    val cleanMismatched = cleanCompared.filter(!col("equal"))
-      .select("chunk_id").collect().map(_.getInt(0)).sorted
+    // count() would run an aggregate job even over the empty row diff
     val cleanRefineCount =
-      if (cleanMismatched.isEmpty) lit(0L)
-      else lit(ChunkDiff.rowDiff(
-        cleanMerged.filter(inChunks(cleanMismatched.toSeq)),
-        li.filter(inChunks(cleanMismatched.toSeq)),
-        handle, canonical).count())
+      lit(if (clean.mismatched.isEmpty) 0L else clean.rows.count())
     val equalRow = cleanCompared
       .agg(
         sum(when(col("equal"), 1L).otherwise(0L)).as("n"),
@@ -1468,7 +1425,7 @@ object DiffQueries {
       when(chunkCol.isin(2, 5, 11) && k % 97 === 0, col("l_quantity") + 1)
         .otherwise(col("l_quantity")))
     def chunked(df: DataFrame) =
-      ChunkDiff.chunkDigest(df, chunkCol, k, canonical(df))
+      ChunkDiff.widthDigest(df, "l_orderkey", canonical, (lo, hi), 16)
     val facts = ChunkDiff.compareChunks(chunked(up), chunked(li))
       .select("chunk_id", "equal")
       .collect().map(r => (r.getInt(0), r.getBoolean(1))).sortBy(_._1).toSeq

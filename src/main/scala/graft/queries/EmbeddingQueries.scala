@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.VectorOps
@@ -114,11 +113,8 @@ object EmbeddingQueries {
    * (q84) and the clustering gate (q86) both consume it instead of each
    * re-deriving the sig+join+filter pipeline.
    */
-  private val pairCache = Gate.registerCache(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-
-  private def cosinePairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate(dir, {
+  private val cosinePairs = Gate.shared("cosine pair table") {
+    (spark, dir) =>
       val e = Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"),
           VectorOps.lshSignature(col("embedding"), NearDupPlanes, 64).as("sig"),
@@ -132,7 +128,7 @@ object EmbeddingQueries {
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
           (col("a.label") === col("b.label")).as("same_label"), col("cos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  }
 
   /** Embedding-cosine near-dup detection: LSH buckets generate candidate
     * pairs, exact cosine ≥ threshold confirms — the vector analog of the

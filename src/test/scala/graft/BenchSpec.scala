@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-/** The bench tooling's shared measurement and its artifact naming. */
+/** The bench tooling's shared measurement, shared builds and artifact
+  * naming. */
 class BenchSpec extends SparkSpec {
 
   test("measure records a throwing body's error and wall time; the next measure still works") {
@@ -74,5 +75,17 @@ class BenchSpec extends SparkSpec {
       .write.parquet(s"$dir/lineitem.parquet")
     Bench100x.warmUp(spark, dir)
     Bench.warmUp(spark, dir)
+  }
+
+  test("a shared build runs once per (session, dir) until the caches clear") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val shared = graft.queries.Gate.shared("spec build") { (_, dir) =>
+      builds.incrementAndGet(); dir.length
+    }
+    assert(shared(spark, "/a") == 2 && shared(spark, "/a") == 2)
+    assert(builds.get == 1)
+    assert(shared(spark, "/bb") == 3 && builds.get == 2)
+    graft.queries.Gate.clearSharedCaches()
+    assert(shared(spark, "/a") == 2 && builds.get == 3)
   }
 }

@@ -8,7 +8,10 @@ import graft.diff.ChunkDiff
 /** The sync_diff chunk algebra: [[ChunkDiff.chunkRange]] inverts
   * [[ChunkDiff.chunkByWidth]] exactly, [[ChunkDiff.compareChunks]] keeps
   * a chunk only one side has, and [[ChunkDiff.chunkChecksums]] is the
-  * digest kernel over the table's own width bounds. */
+  * digest kernel over the table's own width bounds. The row level:
+  * [[ChunkDiff.rowDiff]] carries a payload through its join,
+  * [[ChunkDiff.fixSql]] renders every value, NULL included, and
+  * [[ChunkDiff.check]] refines only the mismatched chunks. */
 class ChunkDiffSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,5 +99,147 @@ class ChunkDiffSpec extends SparkSpec {
       val (kLo, kHi) = ChunkDiff.chunkRange(r.getInt(0), lo, hi, 16)
       assert(kLo <= r.getLong(3) && r.getLong(4) <= kHi, r.toString)
     }
+  }
+
+  test("inChunks keeps exactly chunkByWidth's keys, out-of-bounds keys too") {
+    val (lo, hi, n) = (10L, 49L, 4)
+    val keys = spark.range(-30, 90).select(col("id").as("k"),
+      ChunkDiff.chunkByWidth(col("id"), lo, hi, n).as("c"))
+    val chunkOf = keys.as[(Long, Int)].collect().toMap
+    assert(chunkOf.values.toSet.contains(-1)) // far enough below lo
+    for (cs <- Seq(Seq(0), Seq(-1), Seq(3), Seq(1, 2), Seq(0, 3), Nil)) {
+      val got = keys.filter(ChunkDiff.inChunks(col("k"), cs, lo, hi, n))
+        .select("k").as[Long].collect().toSet
+      // chunk 0's predicate reads every key below its end, the chunks
+      // below 0 included, so a negative id selects what chunk 0 does
+      val want = chunkOf.collect {
+        case (k, c) if cs.exists(w => c == w || (w <= 0 && c <= 0)) => k
+      }.toSet
+      assert(got == want, s"chunks $cs")
+    }
+  }
+
+  // rows with missing, extra, different and equal keys, and NULL payloads
+  private def sides = {
+    val src = Seq[(Long, Int, String, String)](
+      (1L, 1, "a", "1.00"), (1L, 2, "b", null), (2L, 1, "c", "3.00"),
+      (3L, 1, "d", "4.00"), (5L, 1, "e", "5.00"))
+      .toDF("k1", "k2", "x", "qty")
+    val dst = Seq[(Long, Int, String, String)](
+      (1L, 1, "a", "1.00"), (1L, 2, "B", null), (2L, 1, "c", null),
+      (4L, 1, "f", "6.00"), (5L, 1, "e", "5.00"))
+      .toDF("k1", "k2", "x", "qty")
+    (src, dst)
+  }
+  private val keys = Seq("k1", "k2")
+  private val canon = (df: DataFrame) =>
+    Seq(col("k1"), col("k2"), col("x"), coalesce(col("qty"), lit("")))
+
+  test("rowDiff with a payload equals the hand-written join it replaces") {
+    val (src, dst) = sides
+    val payload = Seq("qty" -> col("qty"), "x" -> upper(col("x")))
+    val got = ChunkDiff.rowDiff(src, dst, keys, canon, payload)
+    assert(got.columns.toSeq == Seq("k1", "k2", "s_digest", "s_qty", "s_x",
+      "t_digest", "t_qty", "t_x", "diff_type"))
+    def side(df: DataFrame, p: String) = df.select(col("k1"), col("k2"),
+      ChunkDiff.rowDigest(canon(df)).as(s"${p}_digest"),
+      col("qty").as(s"${p}_qty"), upper(col("x")).as(s"${p}_x"))
+    val handWritten = side(src, "s").join(side(dst, "t"), keys, "full_outer")
+      .withColumn("diff_type",
+        when(col("t_digest").isNull, "missing")
+          .when(col("s_digest").isNull, "extra")
+          .when(col("s_digest") =!= col("t_digest"), "different"))
+      .filter(col("diff_type").isNotNull)
+    def rows(df: DataFrame) = df.select(got.columns.map(col): _*)
+      .collect().map(_.toSeq).sortBy(_.take(2).mkString(",")).toSeq
+    assert(rows(got) == rows(handWritten))
+    val byKey = got.select("k1", "k2", "diff_type", "s_qty", "t_qty")
+      .as[(Long, Int, String, String, String)].collect()
+      .map(r => (r._1, r._2) -> (r._3, r._4, r._5)).toMap
+    assert(byKey == Map(
+      (1L, 2) -> (("different", null, null)),
+      (2L, 1) -> (("different", "3.00", null)),
+      (3L, 1) -> (("missing", "4.00", null)),
+      (4L, 1) -> (("extra", null, "6.00"))))
+  }
+
+  test("fixSql renders q52's strings, and NULL for a NULL value") {
+    val diff = Seq[(Long, Int, String, String)]((7L, 2, "extra", "9.00"),
+        (7L, 3, "missing", "12.00"), (8L, 1, "different", null))
+      .toDF("l_orderkey", "l_linenumber", "diff_type", "qty")
+    val got = ChunkDiff.fixSql(diff, "lineitem",
+        Seq("l_orderkey", "l_linenumber"),
+        Seq(col("l_orderkey"), col("l_linenumber"), col("qty")))
+      .select("fix_sql").as[String].collect().toSeq
+    assert(got == Seq(
+      "DELETE FROM lineitem WHERE l_orderkey = 7 AND l_linenumber = 2;",
+      "REPLACE INTO lineitem VALUES (7, 3, 12.00);",
+      "REPLACE INTO lineitem VALUES (8, 1, NULL);"))
+  }
+
+  /** Jobs `f` starts, counted by a job group of its own. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"chunkdiff-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(tap)
+    sc.setJobGroup(group, "ChunkDiffSpec")
+    try {
+      val r = f
+      org.apache.spark.graftbridge.SparkInternals.waitListenerEmpty(sc)
+      (r, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(tap) }
+  }
+
+  private def wide(n: Long) = spark.range(0, n).select(col("id").as("k1"),
+    (col("id") % 3).cast("int").as("k2"), (col("id") % 7).cast("string").as("x"),
+    lit("1.00").as("qty"))
+
+  test("check over equal sides finds no mismatched chunk and runs no row diff") {
+    val side = wide(400)
+    val bounds = ChunkDiff.widthBounds(side, "k1")
+    val checked = ChunkDiff.check(side, side, keys, canon, bounds, 8)
+    assert(checked.mismatched.isEmpty)
+    assert(checked.compared.count() == 8L)
+    assert(checked.compared.filter(!col("equal")).isEmpty)
+    val (rows, jobs) = jobsOf(checked.rows.collect())
+    assert(rows.isEmpty && jobs == 0, s"${rows.length} rows, $jobs jobs")
+    // a digested target is used as given: the same verdict
+    val digested = ChunkDiff.widthDigest(side, "k1", canon, bounds, 8)
+    assert(ChunkDiff.check(side, side, keys, canon, bounds, 8, Some(digested))
+      .mismatched.isEmpty)
+  }
+
+  test("check over faulted sides returns the unrestricted rowDiff's rows") {
+    val base = wide(400)
+    val k = col("k1")
+    // 60 differs, 120 is target-only, 260 source-only, and the target has
+    // a key below lo and one above hi (bounds from the source side only)
+    val src = base.filter(k =!= 120L)
+      .withColumn("x", when(k === 60L, "changed").otherwise(col("x")))
+    val dst = base.filter(k =!= 260L).unionByName(
+      Seq[(Long, Int, String, String)]((-3L, 0, "low", "1.00"),
+        (450L, 0, "high", "1.00")).toDF("k1", "k2", "x", "qty"))
+    val bounds = ChunkDiff.widthBounds(src, "k1")
+    val (checked, jobs) = jobsOf(
+      ChunkDiff.check(src, dst, keys, canon, bounds, 8))
+    assert(jobs > 0)
+    def chunkOf(key: Long) = spark.range(1).select(ChunkDiff.chunkByWidth(
+      lit(key), bounds._1, bounds._2, 8)).as[Int].head()
+    assert(checked.mismatched ==
+      Seq(-3L, 60L, 120L, 260L, 450L).map(chunkOf).distinct.sorted)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.toString)
+      .toSeq
+    val unrestricted = ChunkDiff.rowDiff(src, dst, keys, canon)
+    assert(rows(checked.rows) == rows(unrestricted))
+    assert(rows(checked.rows).map(r => (r.head, r.last)) == Seq(
+      (-3L, "extra"), (60L, "different"), (120L, "extra"), (260L, "missing"),
+      (450L, "extra")).sortBy(_._1.toString))
   }
 }
