@@ -64,14 +64,7 @@ object DiffCheckpoint {
   def save(path: String, savedId: Long, state: String): Unit = {
     val json =
       s"""{"chunk-info":{"state":"$state","chunk-id":$savedId}}"""
-    val target = java.nio.file.Paths.get(path)
-    Option(target.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val tmp = java.nio.file.Files.createTempFile(
-      target.getParent, target.getFileName.toString, ".tmp")
-    java.nio.file.Files.write(tmp, json.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.core.FileOps.publishAtomic(java.nio.file.Paths.get(path), json)
   }
 
   /** LoadChunk: (savedId, state), or None when no checkpoint exists —

@@ -425,6 +425,8 @@ object DocQueries {
         .persist(lvl)
       val matches = Dedup.incrementalMatches(idx, na, MinhashK, Bands, MaxBucket)
         .persist(lvl)
+      // materialize all three: the consumers read them, not the corpus
+      Seq(idx, na, matches).foreach(_.count())
       (idx, na, matches)
   }
 

@@ -119,7 +119,7 @@ object EmbeddingQueries {
         .select(col("vec_id"), col("label"), col("embedding"),
           VectorOps.lshSignature(col("embedding"), NearDupPlanes, 64).as("sig"),
           VectorOps.norm(col("embedding")).as("n"))
-      e.as("a").join(e.as("b"),
+      val pairs = e.as("a").join(e.as("b"),
           col("a.sig") === col("b.sig") && col("a.vec_id") < col("b.vec_id"))
         .withColumn("cos",
           VectorOps.dot(col("a.embedding"), col("b.embedding")) /
@@ -128,6 +128,8 @@ object EmbeddingQueries {
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
           (col("a.label") === col("b.label")).as("same_label"), col("cos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pairs.count() // materialize: both consumers read the pair table
+      pairs
   }
 
   /** Embedding-cosine near-dup detection: LSH buckets generate candidate

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.FileOps
 
 /**
  * One driver-gradeable query: a Spark implementation plus (usually) an
@@ -50,12 +51,8 @@ object Gate {
         val alive = pid.exists(p =>
           p == ProcessHandle.current.pid ||
             ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
-        if (!alive) deleteTree(f)
+        if (!alive) FileOps.deleteTree(f)
       }
-  }
-
-  def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteTree)); f.delete(); ()
   }
 
   /** Fresh per-(scale-dir, process) scratch dir under tmpdir: sweeps
@@ -67,7 +64,7 @@ object Gate {
     val abs = new java.io.File(dir).getAbsolutePath
     val tag = Integer.toHexString(abs.hashCode) + "_" + ProcessHandle.current.pid
     val path = System.getProperty("java.io.tmpdir") + s"/$prefix$tag"
-    deleteTree(new java.io.File(path))
+    FileOps.deleteTree(new java.io.File(path))
     (path, tag)
   }
 

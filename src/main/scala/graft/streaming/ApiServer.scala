@@ -76,14 +76,7 @@ final class ApiServer(spark: SparkSession,
     respond(ex, code, Map("error_msg" -> msg))
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getRawQuery).getOrElse("").split('&')
-      .filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-          case Array(k) => k -> ""
-        }
-      }.toMap
+    SinkUri(ex.getRequestURI.toString).params
 
   private def readBody(ex: HttpExchange): Map[String, Any] = {
     val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -246,18 +239,14 @@ final class ApiServer(spark: SparkSession,
         // verifyCreateChangefeedConfig rejects. Bare URIs keep the
         // existing sink defaults (the reference's MQ protocol-required
         // rule only binds once the user speaks the config surface).
-        val sinkScheme = sinkUri.split("://")(0)
-        val uriQ = sinkUri.split('?').lift(1).getOrElse("").split('&')
-          .filter(_.nonEmpty).map(_.split("=", 2)).collect {
-            case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
+        val sink = SinkUri(sinkUri)
         val rcBlock = body.get("replica_config").map(_.toString)
         val rcParsed = rcBlock.map(parseReplicaConfig)
-        if (rcParsed.isDefined || uriQ.contains("protocol") ||
-            uriQ.contains("transaction-atomicity")) {
+        if (rcParsed.isDefined || sink.param("protocol").isDefined ||
+            sink.param("transaction-atomicity").isDefined) {
           val rc = rcParsed
             .getOrElse(ReplicaValidate.ReplicaConfig(advanceTimeoutSec = 150))
-          ReplicaValidate.validateAndAdjust(sinkScheme, uriQ, rc) match {
+          ReplicaValidate.validateAndAdjust(sink.scheme, sink.params, rc) match {
             case Left((errC, msg)) => return error(ex, 400, s"$errC: $msg")
             case Right(_) => ()
           }
@@ -280,10 +269,10 @@ final class ApiServer(spark: SparkSession,
             .foreach(th => manager.setIntrospect(id, th))
           // the UPDATE path's "old" side: config after the URI-wins merge
           feedCfg.put(id, (sinkUri,
-            uriQ.getOrElse("protocol",
-              rcParsed.map(_.protocol).getOrElse("")),
-            uriQ.getOrElse("transaction-atomicity",
-              rcParsed.map(_.txnAtomicity).getOrElse(""))))
+            sink.param("protocol")
+              .getOrElse(rcParsed.map(_.protocol).getOrElse("")),
+            sink.param("transaction-atomicity")
+              .getOrElse(rcParsed.map(_.txnAtomicity).getOrElse(""))))
           manager.setTs(id, effStartTs,
             body.get("target_ts").map(_.asInstanceOf[Long]).filter(_ > 0))
           respond(ex, 200, feedState(id) + ("sink_uri" -> sinkUri))
@@ -394,15 +383,11 @@ final class ApiServer(spark: SparkSession,
           .map(parseReplicaConfig)
         if (newUri.isDefined || rcBlock.isDefined) {
           val effUri = newUri.getOrElse(oldUri)
-          val scheme = effUri.split("://")(0)
-          val uriQ = effUri.split('?').lift(1).getOrElse("").split('&')
-            .filter(_.nonEmpty).map(_.split("=", 2)).collect {
-              case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8")
-            }.toMap
+          val eff = SinkUri(effUri)
           val newP = rcBlock.map(_.protocol).getOrElse(oldP)
           val newA = rcBlock.map(_.txnAtomicity).getOrElse(oldA)
           ReplicaValidate.checkCompatibilityWithSinkUri(
-              newP, newA, oldP, oldA, uriQ) match {
+              newP, newA, oldP, oldA, eff.params) match {
             case Left((errC, msg)) =>
               return error(ex, 400, s"ErrChangefeedUpdateRefused: $errC: $msg")
             case Right(()) => ()
@@ -410,7 +395,7 @@ final class ApiServer(spark: SparkSession,
           val rc = rcBlock
             .getOrElse(ReplicaValidate.ReplicaConfig(advanceTimeoutSec = 150))
             .copy(protocol = newP, txnAtomicity = newA)
-          ReplicaValidate.validateAndAdjust(scheme, uriQ, rc) match {
+          ReplicaValidate.validateAndAdjust(eff.scheme, eff.params, rc) match {
             case Left((errC, msg)) =>
               return error(ex, 400, s"ErrChangefeedUpdateRefused: $errC: $msg")
             case Right(v) =>
@@ -423,8 +408,9 @@ final class ApiServer(spark: SparkSession,
                 }
               }
               feedCfg.put(id, (effUri,
-                uriQ.getOrElse("protocol", v.config.protocol),
-                uriQ.getOrElse("transaction-atomicity", v.config.txnAtomicity)))
+                eff.param("protocol").getOrElse(v.config.protocol),
+                eff.param("transaction-atomicity")
+                  .getOrElse(v.config.txnAtomicity)))
           }
         }
         manager.setTs(id, None,

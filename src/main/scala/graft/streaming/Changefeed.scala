@@ -147,6 +147,15 @@ object Changefeed {
     d
   }
 
+  /** Compaction on the ROUTED identity: after shard-merge several source
+    * tables share one target, and net effects must fold across them (dm
+    * shard-merge semantics). Renamed back so sinks see the canonical
+    * envelope names. */
+  def compactRouted(data: DataFrame): DataFrame =
+    Compaction.compact(data, keyCols = Seq("target_schema", "target_table", "pk"))
+      .withColumnRenamed("target_schema", "schema_name")
+      .withColumnRenamed("target_table", "table_name")
+
   /**
    * Start a changefeed over a streaming envelope source. Each microbatch is
    * watermark-complete by construction (the source emits whole commit-ts
@@ -178,17 +187,7 @@ object Changefeed {
             DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
               spec.barrierDir, spec.redoEnabled))
           val data = if (versions.isEmpty) batch else DdlStream.dataRows(batch)
-          // Compaction keys on the ROUTED identity: after shard-merge several
-          // source tables share one target, and net effects must fold across
-          // them (dm shard-merge semantics). Renamed back so sinks see the
-          // canonical envelope names.
-          val b =
-            if (spec.compact)
-              Compaction.compact(data,
-                  keyCols = Seq("target_schema", "target_table", "pk"))
-                .withColumnRenamed("target_schema", "schema_name")
-                .withColumnRenamed("target_table", "table_name")
-            else data
+          val b = if (spec.compact) compactRouted(data) else data
           // the batch binds once, as a map-only plan literal (no job), so
           // the metrics wrapper and the user sink see the same schema-bound
           // rows; compacted batches bind on their last_commit_ts

@@ -17,6 +17,9 @@ final class ChangefeedManager(spark: SparkSession,
   private final case class Entry(spec: ChangefeedSpec,
                                  source: () => DataFrame,
                                  sink: (DataFrame, Long) => Unit,
+                                 // owner-side lifecycle state machine
+                                 // (cdc/owner/feed_state_manager.go)
+                                 machine: FeedStateMachine,
                                  var query: Option[StreamingQuery],
                                  // /synced progress marks, tracked from the
                                  // REAL applied batches (see syncedStatus)
@@ -27,10 +30,7 @@ final class ChangefeedManager(spark: SparkSession,
                                  // create-time ts marks (verifyTs): the
                                  // update path's target_ts floor reads them
                                  var startTs: Long = 0L,
-                                 var targetTs: Long = 0L,
-                                 // owner-side lifecycle state machine
-                                 // (cdc/owner/feed_state_manager.go)
-                                 machine: FeedStateMachine = null)
+                                 var targetTs: Long = 0L)
 
   private val feeds = collection.concurrent.TrieMap.empty[String, Entry]
 
@@ -42,23 +42,24 @@ final class ChangefeedManager(spark: SparkSession,
              errorStuckMs: Long = 1800000L)
             (sink: (DataFrame, Long) => Unit): Unit = {
     require(!feeds.contains(spec.id), s"changefeed ${spec.id} already exists")
-    val e = Entry(spec, source, sink, None,
-      machine = new FeedStateMachine(errorStuckMs, clock))
+    val e = Entry(spec, source, sink,
+      new FeedStateMachine(errorStuckMs, clock), None)
     feeds.put(spec.id, e)
     machineTick(e) // uninitialized -> normal
     resume(spec.id)
   }
 
-  private def machineTick(e: Entry): Unit =
-    if (e.machine != null) { e.machine.tick(e.resolvedTick, Some(e.checkpoint)); () }
+  private def machineTick(e: Entry): Unit = {
+    e.machine.tick(e.resolvedTick, Some(e.checkpoint)); ()
+  }
 
   /** Pause: the AdminStop job transitions the machine (legal from
     * normal/warning/pending), and the query stops because ShouldRunning
     * went false — the owner's order of operations. */
   def pause(id: String): Unit =
     feeds.get(id).foreach { e =>
-      if (e.machine != null) { e.machine.pushAdminJob("stop"); machineTick(e) }
-      if (e.machine == null || !e.machine.shouldRunning) {
+      e.machine.pushAdminJob("stop"); machineTick(e)
+      if (!e.machine.shouldRunning) {
         e.query.foreach { q => q.stop(); q.awaitTermination() }
         e.query = None
       }
@@ -72,16 +73,13 @@ final class ChangefeedManager(spark: SparkSession,
     * advances nothing. */
   def resume(id: String): Unit =
     feeds.get(id).foreach { e =>
-      if (e.machine != null) {
-        // AdminResume is only legal from failed/stopped/finished; from a
-        // live state the tick is a plain heartbeat
-        if (Set(FeedStateMachine.Failed, FeedStateMachine.Stopped,
-            FeedStateMachine.Finished).contains(e.machine.state))
-          e.machine.pushAdminJob("resume")
-        machineTick(e)
-      }
-      if ((e.machine == null || e.machine.shouldRunning) &&
-          !e.query.exists(_.isActive)) {
+      // AdminResume is only legal from failed/stopped/finished; from a
+      // live state the tick is a plain heartbeat
+      if (Set(FeedStateMachine.Failed, FeedStateMachine.Stopped,
+          FeedStateMachine.Finished).contains(e.machine.state))
+        e.machine.pushAdminJob("resume")
+      machineTick(e)
+      if (e.machine.shouldRunning && !e.query.exists(_.isActive)) {
         val q = Changefeed.start(spark, e.source(), e.spec) { (b, bid) =>
           e.sink(b, bid)
           // compaction renames the fold's ts to last_commit_ts; a raw
@@ -103,12 +101,10 @@ final class ChangefeedManager(spark: SparkSession,
             // processor error: report to the state machine (an unretryable
             // RFC code inside the message fails the feed via the
             // strings.Contains leg; anything else parks it pending)
-            if (e.machine != null) {
-              e.machine.reportErrors(FeedStateMachine.RunningError(
-                "CDC:ErrProcessorUnknown",
-                Option(ex.getMessage).getOrElse(ex.toString)))
-              machineTick(e)
-            }
+            e.machine.reportErrors(FeedStateMachine.RunningError(
+              "CDC:ErrProcessorUnknown",
+              Option(ex.getMessage).getOrElse(ex.toString)))
+            machineTick(e)
             e.query = None
             throw ex
         }
@@ -151,9 +147,7 @@ final class ChangefeedManager(spark: SparkSession,
     * caller's to clean). */
   def delete(id: String): Unit = {
     feeds.get(id).foreach { e =>
-      if (e.machine != null) {
-        e.machine.pushAdminJob("remove"); machineTick(e)
-      }
+      e.machine.pushAdminJob("remove"); machineTick(e)
       e.query.foreach { q => q.stop(); q.awaitTermination() }
       e.query = None
     }
@@ -222,25 +216,22 @@ final class ChangefeedManager(spark: SparkSession,
           case Some(q) => Changefeed.status(q) + ("state" -> "created")
           case None => Map("id" -> id, "state" -> "paused")
         }
-        if (e.machine == null) base
-        else base + ("feed_state" -> e.machine.state)
+        base + ("feed_state" -> e.machine.state)
     }
 
   /** The machine's model state for a feed ("" when unknown). */
   def feedState(id: String): String =
-    feeds.get(id).flatMap(e => Option(e.machine)).map(_.state).getOrElse("")
+    feeds.get(id).map(_.machine.state).getOrElse("")
 
   /** The last error patched into the feed's info, if any. */
   def feedError(id: String): Option[FeedStateMachine.RunningError] =
-    feeds.get(id).flatMap(e => Option(e.machine)).flatMap(_.lastError)
+    feeds.get(id).flatMap(_.machine.lastError)
 
   /** Report processor errors into a feed's state machine and
     * tick it (the owner's HandleError/HandleWarning path). */
   def reportError(id: String, code: String, message: String = ""): Unit =
     feeds.get(id).foreach { e =>
-      if (e.machine != null) {
-        e.machine.reportErrors(FeedStateMachine.RunningError(code, message))
-        machineTick(e)
-      }
+      e.machine.reportErrors(FeedStateMachine.RunningError(code, message))
+      machineTick(e)
     }
 }

@@ -80,27 +80,9 @@ object CreatorFix {
       enableTableAcrossNodes: Boolean = false,
       regionThreshold: Long = 0L)
 
-  private def splitUri(uri: String): (String, Seq[(String, String)]) =
-    uri.indexOf('?') match {
-      case -1 => (uri, Nil)
-      case i =>
-        val params = uri.substring(i + 1).split('&').filter(_.nonEmpty)
-          .toSeq.map { p =>
-            p.indexOf('=') match {
-              case -1 => (p, "")
-              case j => (p.substring(0, j), p.substring(j + 1))
-            }
-          }
-        (uri.substring(0, i), params)
-    }
-
   /** url.Values.Encode: keys sorted; an empty set renders no '?'. */
-  private def renderUri(base: String, params: Seq[(String, String)]): String =
-    if (params.isEmpty) base
-    else base + "?" + params.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-      .mkString("&")
-
-  private def scheme(uri: String): String = uri.takeWhile(_ != ':')
+  private def renderUri(u: SinkUri, params: Seq[(String, String)]): String =
+    u.withQuery(params.sortBy(_._1))
 
   /** fixState (changefeed.go:451-487). */
   def fixState(info: FeedInfo): FeedInfo =
@@ -124,8 +106,9 @@ object CreatorFix {
 
   /** fixMQSinkProtocol (:518-556). */
   def fixMqProtocol(info: FeedInfo): FeedInfo = {
-    if (!MqSchemes.contains(scheme(info.sinkUri))) return info
-    val (base, params) = splitUri(info.sinkUri)
+    val u = SinkUri(info.sinkUri)
+    if (!MqSchemes.contains(u.scheme)) return info
+    val params = u.pairs
     val uriProto = params.collectFirst { case ("protocol", v) => v }
     uriProto match {
       case Some(p) if needsMqFix(p) =>
@@ -133,7 +116,7 @@ object CreatorFix {
           case ("protocol", _) => ("protocol", "open-protocol")
           case kv => kv
         }
-        info.copy(sinkUri = renderUri(base, fixed),
+        info.copy(sinkUri = renderUri(u, fixed),
           configProtocol = Some("open-protocol"))
       case Some(_) => info // a known URI protocol wins and needs nothing
       case None =>
@@ -145,12 +128,13 @@ object CreatorFix {
 
   /** fixMySQLSinkProtocol (:488-516). */
   def fixMysqlProtocol(info: FeedInfo): FeedInfo = {
-    if (MqSchemes.contains(scheme(info.sinkUri))) return info
-    val (base, params) = splitUri(info.sinkUri)
+    val u = SinkUri(info.sinkUri)
+    if (MqSchemes.contains(u.scheme)) return info
+    val params = u.pairs
     val uriProto = params.collectFirst { case ("protocol", v) => v }
     if (uriProto.nonEmpty || info.configProtocol.nonEmpty) {
       val stripped = params.filterNot(_._1 == "protocol")
-      info.copy(sinkUri = renderUri(base, stripped),
+      info.copy(sinkUri = renderUri(u, stripped),
         configProtocol = Some(""))
     } else info
   }
@@ -182,8 +166,8 @@ object CreatorFix {
    */
   def rmUnusedFields(sinkUri: String, protocol: Option[String],
       fields: Set[String]): Set[String] = {
-    if (!sinkUri.contains("://")) return fields // unparsable: keep (warn)
-    val sch = scheme(sinkUri)
+    val sch = SinkUri(sinkUri).scheme
+    if (sch.isEmpty) return fields // unparsable: keep (warn)
     if (sch == "blackhole") return fields
     var f = fields
     if (!MqSchemes.contains(sch)) f = f -- MqOnlyFields

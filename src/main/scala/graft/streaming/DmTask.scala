@@ -216,12 +216,8 @@ final class DmTaskManager(spark: SparkSession, checkpointRoot: String) {
             throw new IllegalArgumentException(s"no snapshot source for ${inst.sourceId}"))
           val spec = specFor(cfg, inst, checkpointRoot)
           sink(Changefeed.pipeline(snap(), spec)
-            .transform(d => if (cfg.compact)
-              graft.operators.Compaction.compact(d,
-                  keyCols = Seq("target_schema", "target_table", "pk"))
-                .withColumnRenamed("target_schema", "schema_name")
-                .withColumnRenamed("target_table", "table_name")
-              else d), -1L)
+            .transform(d => if (cfg.compact) Changefeed.compactRouted(d) else d),
+            -1L)
         }
         if (cfg.taskMode == "incremental" || cfg.taskMode == "all") {
           val raw = streamSources.getOrElse(inst.sourceId,

@@ -123,20 +123,11 @@ object KafkaOptions {
 
   /** `Options.Apply` (options.go:229-325) over the sink URI: host list +
     * query params, with the reference's validation. */
-  def fromUri(uri: String): Either[(String, String), Options] = {
-    val u = new java.net.URI(uri)
-    val host = Option(u.getAuthority).getOrElse("")
-    val params: Map[String, String] =
-      Option(u.getRawQuery).getOrElse("").split('&').filter(_.nonEmpty)
-        .map { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) =>
-              k -> java.net.URLDecoder.decode(v, "UTF-8")
-            case Array(k) => k -> ""
-          }
-        }.toMap
-    applyParams(Options(brokerEndpoints = host.split(',').toSeq), params)
-  }
+  def fromUri(uri: String): Either[(String, String), Options] =
+    fromUri(SinkUri(uri))
+
+  def fromUri(u: SinkUri): Either[(String, String), Options] =
+    applyParams(Options(brokerEndpoints = u.authority.split(',').toSeq), u.params)
 
   /** The per-param fold; Left = (errClass, message). */
   def applyParams(base: Options, params: Map[String, String])

@@ -178,16 +178,11 @@ object MySqlOptions {
   def fromUri(uri: String, serverTimezone: String,
               fileParams: Map[String, String] = Map.empty)
       : Either[(String, String), Adjusted] = {
-    val u = new java.net.URI(uri)
-    if (!isMySqlCompatibleScheme(Option(u.getScheme).getOrElse("")))
+    val u = SinkUri(uri)
+    if (!isMySqlCompatibleScheme(u.scheme))
       return Left(ErrInvalidConfig ->
-        s"can't create MySQL sink with unsupported scheme: ${u.getScheme}")
-    val params = Option(u.getRawQuery).getOrElse("").split('&')
-      .filter(_.nonEmpty).map(_.split("=", 2)).map {
-        case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8")
-        case Array(k) => k -> ""
-      }.toMap
-    apply(serverTimezone, fileParams, params)
+        s"can't create MySQL sink with unsupported scheme: ${u.scheme}")
+    apply(serverTimezone, fileParams, u.params)
   }
 
   /** `IsSinkSafeMode` (config.go:261-283): the merged safe-mode param or

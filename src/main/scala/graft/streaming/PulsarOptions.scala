@@ -36,10 +36,8 @@ object PulsarOptions {
     * per-knob Option map; set knobs survive, unset fill from defaults. */
   def fromUri(uri: String, configBlock: Map[String, Int] = Map.empty)
       : Either[String, Options] = {
-    val u = new java.net.URI(uri)
-    val scheme = Option(u.getScheme).getOrElse("")
-    val host = Option(u.getAuthority).getOrElse("")
-    val path = Option(u.getPath).getOrElse("")
+    val u = SinkUri(uri)
+    val (scheme, host, path) = (u.scheme, u.authority, u.path)
     if (scheme.isEmpty) return Left("scheme is empty")
     if (host.isEmpty) return Left("host is empty")
     // Go url.Parse leaves Path "" for `pulsar://host` and "/" for

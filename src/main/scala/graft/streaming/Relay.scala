@@ -49,12 +49,7 @@ object Relay {
     node.put("binlog-pos", m.position)
     node.put("last-batch", m.lastBatch)
     node.put("segment-rows", m.segmentRows)
-    val tmp = Paths.get(s"$dir/relay.meta.tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(node))
-    Files.move(tmp, metaPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING) // crash-atomic publish
-    ()
+    graft.core.FileOps.publishAtomic(metaPath(dir), mapper.writeValueAsString(node))
   }
 
   private def segDir(dir: String, seg: Long): String = f"$dir/seg.$seg%06d"

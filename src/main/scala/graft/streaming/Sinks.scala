@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+import graft.core.FileOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -20,43 +21,37 @@ object Sinks {
    * (cdc/api/v2/changefeed.go verifyCreateChangefeedConfig → sink factory).
    * Schemes: `storage://dir` (date-partitioned files), `mysql://dir`
    * (multi-row SQL, socket stubbed to .sql files per SURVEY K1),
-   * `state://dir` (bucketed table state), `blackhole://` (drop).
+   * `state://dir` (bucketed table state), `blackhole://` (drop), each
+   * dir being the URI's [[SinkUri.location]].
    */
   def forUri(spark: SparkSession, uri: String): (DataFrame, Long) => Unit = {
-    val (scheme, rest) = uri.split("://", 2) match {
-      case Array(s, r) => (s, r)
-      case _ => throw new IllegalArgumentException(s"malformed sink uri: $uri")
-    }
-    scheme match {
+    val u = SinkUri(uri)
+    u.scheme match {
+      case "" => throw new IllegalArgumentException(s"malformed sink uri: $uri")
       case "storage" =>
         // K4 option surface (pkg/sink/cloudstorage/config.go via
         // [[StorageOptions]]): a bad worker-count or flush-interval
         // rejects the changefeed CREATE; the clamp/reset repairs are pure
-        val params = rest.split('?').lift(1).getOrElse("").split('&')
-          .filter(_.nonEmpty).map(_.split("=", 2)).map {
-            case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8")
-            case Array(k) => k -> ""
-          }.toMap
-        StorageOptions(Map.empty, params) match {
+        StorageOptions(Map.empty, u.params) match {
           case Left((err, msg)) =>
             throw new IllegalArgumentException(s"$err: $msg")
           case Right(_) => ()
         }
-        storageSink(rest.split('?')(0)) _
+        storageSink(u.location) _
       case "mysql" | "mysql+ssl" | "tidb" | "tidb+ssl" =>
         // K1 option surface (pkg/sink/mysql/config.go via [[MySqlOptions]]):
         // bad params reject the changefeed CREATE, the adjusted knobs drive
         // the SQL generator — max-txn-row bounds each multi-row statement,
         // worker-count is the causality-slot parallelism
         val serverTz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-        val adj = MySqlOptions.fromUri(uri, serverTz) match {
+        val adj = MySqlOptions(serverTz, Map.empty, u.params) match {
           case Left((err, msg)) => throw new IllegalArgumentException(s"$err: $msg")
           case Right(a) => a.options
         }
-        sqlFileSink(rest.split('?')(0), maxTxnRow = adj.maxTxnRow,
+        sqlFileSink(u.location, maxTxnRow = adj.maxTxnRow,
           numPartitions = adj.workerCount) _
-      case "state"     => parquetStateSink(spark, rest)
-      case "kafka"     => kafkaSink(spark, uri)
+      case "state"     => parquetStateSink(spark, u.location)
+      case "kafka"     => kafkaSink(spark, u)
       case "blackhole" => (_, _) => ()
       case other => throw new IllegalArgumentException(s"unsupported sink scheme: $other")
     }
@@ -77,23 +72,18 @@ object Sinks {
    * the way the producer's size check does — oversize records fail the
    * batch loudly instead of truncating silently.
    */
-  def kafkaSink(spark: SparkSession, uri: String): (DataFrame, Long) => Unit = {
+  def kafkaSink(spark: SparkSession, u: SinkUri): (DataFrame, Long) => Unit = {
     import graft.streaming.{KafkaOptions => KO}
-    val u = new java.net.URI(uri)
-    val o0 = KO.fromUri(uri) match {
+    val o0 = KO.fromUri(u) match {
       case Left((err, msg)) => throw new IllegalArgumentException(s"$err: $msg")
       case Right(o) => o
     }
-    val topic = Option(u.getPath).map(_.stripPrefix("/")).filter(_.nonEmpty)
+    val topic = Some(u.path.stripPrefix("/")).filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException(
         "kafka sink uri carries no topic path"))
-    val params = Option(u.getRawQuery).getOrElse("").split('&')
-      .filter(_.nonEmpty).map(_.split("=", 2))
-      .collect { case Array(k, v) =>
-        k -> java.net.URLDecoder.decode(v, "UTF-8") }.toMap
-    val dir = params.getOrElse("dir", throw new IllegalArgumentException(
+    val dir = u.param("dir").getOrElse(throw new IllegalArgumentException(
       "kafka sink uri needs dir=<path> (socket transport is out of scope)"))
-    val brokerMax = params.get("broker-message-max-bytes").map(_.toInt)
+    val brokerMax = u.param("broker-message-max-bytes").map(_.toInt)
       .getOrElse(1048588)
     val adj = KO.adjust(o0, KO.TopicMeta(exists = false,
         brokerMessageMaxBytes = Some(brokerMax))) match {
@@ -138,15 +128,7 @@ object Sinks {
   private def writePointer(stateDir: String, p: StatePointer): Unit = {
     val body = (s"batch ${p.lastBatch} buckets ${p.numBuckets}" +:
       p.versions.toSeq.sorted.map { case (b, v) => s"$b $v" }).mkString("\n")
-    val tmp = Paths.get(s"$stateDir/CURRENT.tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, Paths.get(s"$stateDir/CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def rmTree(x: java.io.File): Unit = {
-    Option(x.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    x.delete(); ()
+    FileOps.publishAtomic(Paths.get(s"$stateDir/CURRENT"), body)
   }
 
   /** Bucket dirs holding at least one parquet file (a bucket whose keys
@@ -228,13 +210,13 @@ object Sinks {
         val next = versions.getOrElse(b, -1L) + 1
         val dst = Paths.get(s"$stateDir/b$b/v$next")
         Files.createDirectories(dst.getParent)
-        if (Files.exists(dst)) rmTree(dst.toFile) // leftover of a failed attempt
+        if (Files.exists(dst)) FileOps.deleteTree(dst.toFile) // leftover of a failed attempt
         val src = Paths.get(s"$staging/_bucket=$b")
         if (Files.exists(src)) Files.move(src, dst)
         else Files.createDirectories(dst) // bucket fully deleted → empty state
         b -> next
       }
-      rmTree(new java.io.File(staging))
+      FileOps.deleteTree(new java.io.File(staging))
       writePointer(stateDir, StatePointer(batchId, nb, nextVersions))
     } finally if (own) { batch.unpersist(); () }
   }
@@ -306,7 +288,7 @@ object Sinks {
         Option(new java.io.File(s"$stateDir/b$b").listFiles())
           .getOrElse(Array.empty).foreach { f =>
             val v = f.getName.stripPrefix("v").toLongOption
-            if (f.isDirectory && v.exists(_ < cur - keep)) rmTree(f)
+            if (f.isDirectory && v.exists(_ < cur - keep)) FileOps.deleteTree(f)
           }
       }
     }

@@ -40,44 +40,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
  */
 object SqlApply {
 
-  /** Parse the (pk, …) tuples of a multi-VALUES statement tail. Values in
-    * generated SQL are numeric/NULL/'quoted' scalars, so a paren scan that
-    * only respects quotes is exact. */
-  private def firstFieldOfTuples(valuesTail: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    val s = valuesTail
-    while (i < s.length) {
-      if (s.charAt(i) == '(') {
-        val j = i + 1
-        var k = j
-        var inQ = false
-        while (k < s.length && (inQ || (s.charAt(k) != ',' && s.charAt(k) != ')'))) {
-          if (s.charAt(k) == '\'') inQ = !inQ
-          k += 1
-        }
-        out += s.substring(j, k).trim
-        // skip to the tuple's closing paren
-        var depth = 1
-        i = k
-        while (i < s.length && depth > 0) {
-          val c = s.charAt(i)
-          if (c == '\'') { i += 1; while (i < s.length && s.charAt(i) != '\'') i += 1 }
-          else if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          i += 1
-        }
-      } else i += 1
-    }
-    out.result()
-  }
-
   private val ReplaceRe =
     """(?s)^REPLACE INTO (\S+) \(([^)]*)\) VALUES (.*)$""".r
   private val KeyedReplaceRe =
     """(?s)^REPLACE INTO (\S+) VALUES (.*)$""".r
 
-  /** Leading `k` fields of every tuple in a VALUES tail (quote-aware). */
+  /** Leading `k` fields of every tuple in a VALUES tail. Values in
+    * generated SQL are numeric/NULL/'quoted' scalars, so a paren scan that
+    * only respects quotes is exact. */
   private def leadFieldsOfTuples(valuesTail: String, k: Int): Seq[Seq[String]] = {
     val out = Seq.newBuilder[Seq[String]]
     var i = 0
@@ -176,7 +146,7 @@ object SqlApply {
     std match {
       case ReplaceRe(table, cols, values) =>
         val keyCol = cols.split(",")(0).trim
-        val keys = firstFieldOfTuples(values)
+        val keys = leadFieldsOfTuples(values, 1).map(_.head)
         Seq(
           s"DELETE FROM $table WHERE $keyCol IN (${keys.mkString(", ")})",
           s"INSERT INTO $table ($cols) VALUES $values")

@@ -118,15 +118,10 @@ object StorageOptions {
               fileIndexWidth: Option[Int] = None,
               flushConcurrency: Option[Int] = None)
       : Either[(String, String), Adjusted] = {
-    val u = new java.net.URI(uri)
-    if (!isStorageScheme(Option(u.getScheme).getOrElse("")))
+    val u = SinkUri(uri)
+    if (!isStorageScheme(u.scheme))
       return Left(ErrInvalidConfig ->
-        s"can't create cloud storage sink with unsupported scheme: ${u.getScheme}")
-    val params = Option(u.getRawQuery).getOrElse("").split('&')
-      .filter(_.nonEmpty).map(_.split("=", 2)).map {
-        case Array(k, v) => k -> java.net.URLDecoder.decode(v, "UTF-8")
-        case Array(k) => k -> ""
-      }.toMap
-    apply(fileParams, params, fileIndexWidth, flushConcurrency)
+        s"can't create cloud storage sink with unsupported scheme: ${u.scheme}")
+    apply(fileParams, u.params, fileIndexWidth, flushConcurrency)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -107,11 +107,7 @@ object Validator {
       Files.readString(ptr).trim.stripPrefix("v").toLong else -1L) + 1
     stillPending.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/v$next")
     val nPending = spark.read.parquet(s"$stateDir/v$next").count()
-    val tmp = Paths.get(s"$stateDir/CURRENT.tmp")
-    Files.createDirectories(Paths.get(stateDir))
-    Files.writeString(tmp, s"v$next")
-    Files.move(tmp, ptr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.core.FileOps.publishAtomic(ptr, s"v$next")
     newErrors.unpersist()
 
     RoundStats(okCnt, nPending, nErr, stalled = nPending > maxPending)

@@ -251,7 +251,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally {
       spark.conf.set(
         "spark.sql.optimizer.dynamicPartitionPruning.useStats", prevStats)
-      graft.queries.Gate.deleteTree(new java.io.File(dir))
+      graft.core.FileOps.deleteTree(new java.io.File(dir))
     }
   }
 
@@ -278,7 +278,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP DATABASE IF EXISTS bkt CASCADE")
-      graft.queries.Gate.deleteTree(new java.io.File(dir))
+      graft.core.FileOps.deleteTree(new java.io.File(dir))
     }
   }
 

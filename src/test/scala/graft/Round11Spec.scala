@@ -102,7 +102,7 @@ class Round11Spec extends SparkSpec {
     // the z-curve gives every file a bounded rectangle: a quarter-domain
     // box must prune a majority of the 16 files
     assert(skipped >= 8, s"only $skipped of 16 files skipped")
-    graft.queries.Gate.deleteTree(new java.io.File(dir))
+    graft.core.FileOps.deleteTree(new java.io.File(dir))
   }
 
   test("zValueN interleaves k dims; 2-dim case equals the original zValue2") {

@@ -294,7 +294,7 @@ class Round15Spec extends SparkSpec {
         assert(n.endsWith(TmpExt) ||
           parseLogFileName(n).get.commitTs > flushedCkpt, s"trial=$trial $n")
       }
-      graft.queries.Gate.deleteTree(new java.io.File(dir))
+      graft.core.FileOps.deleteTree(new java.io.File(dir))
     }
   }
 
