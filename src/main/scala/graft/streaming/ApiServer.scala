@@ -240,6 +240,7 @@ final class ApiServer(spark: SparkSession,
         // existing sink defaults (the reference's MQ protocol-required
         // rule only binds once the user speaks the config surface).
         val sink = SinkUri(sinkUri)
+        sink.invalid.foreach(e => return error(ex, 400, s"ErrSinkURIInvalid: $e"))
         val rcBlock = body.get("replica_config").map(_.toString)
         val rcParsed = rcBlock.map(parseReplicaConfig)
         if (rcParsed.isDefined || sink.param("protocol").isDefined ||
@@ -384,6 +385,8 @@ final class ApiServer(spark: SparkSession,
         if (newUri.isDefined || rcBlock.isDefined) {
           val effUri = newUri.getOrElse(oldUri)
           val eff = SinkUri(effUri)
+          eff.invalid.foreach(e => return error(ex, 400,
+            s"ErrChangefeedUpdateRefused: ErrSinkURIInvalid: $e"))
           val newP = rcBlock.map(_.protocol).getOrElse(oldP)
           val newA = rcBlock.map(_.txnAtomicity).getOrElse(oldA)
           ReplicaValidate.checkCompatibilityWithSinkUri(

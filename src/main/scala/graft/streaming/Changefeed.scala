@@ -1,6 +1,10 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max, when}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.SchemaRegistry
 import graft.operators._
@@ -91,48 +95,41 @@ object Changefeed {
     OwnerBarrier.barrier(resolved, pending, redoEnabled)
   }
 
-  // Highest batch id recorded per barrier dir — batch ids are monotone
-  // and foreachBatch is serialized, so one scan per JVM seeds the cache
-  // and every later idempotence check is O(1).
-  private val barrierMaxBatch =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** One JSON line per batch: the boundary's clamp record.
     * Replay-idempotent like the DDL registry on the same path: a
     * foreachBatch retry re-runs the same batchId AFTER the first attempt
     * may already have applied the batch's DDLs, so the recomputed
     * barrier would differ — the original record stands, the re-run
-    * writes nothing. */
+    * writes nothing. The guard reads the log's last record, which holds
+    * its highest batch id, so no state outlives the log. */
   private[graft] def appendBarrier(dir: String, batchId: Long,
       resolved: Long,
       b: OwnerBarrier.Barrier): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val path = java.nio.file.Paths.get(s"$dir/barriers.jsonl")
-    val recorded = barrierMaxBatch.getOrElseUpdate(path.toString, {
-      if (!java.nio.file.Files.exists(path)) -1L
-      else {
-        val it = java.nio.file.Files.lines(path)
-        try {
-          it.mapToLong { l =>
-            val i = l.indexOf(',')
-            if (l.startsWith("""{"batch":""") && i > 9)
-              l.substring(9, i).toLong
-            else -1L
-          }.max.orElse(-1L)
-        } finally it.close()
-      }
-    })
-    if (batchId <= recorded) return
+    val path = Files.createDirectories(Paths.get(dir)).resolve("barriers.jsonl")
+    if (batchId <= lastLoggedBatch(path)) return
     val line = s"""{"batch":$batchId,"resolved_ts":$resolved,""" +
       s""""global_ts":${b.globalBarrierTs},""" +
       s""""min_table_ts":${b.minTableBarrierTs},""" +
       s""""redo_ts":${b.redoBarrierTs},"n_tb":${b.tableBarriers.size}}""" + "\n"
-    java.nio.file.Files.writeString(path, line,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    barrierMaxBatch(path.toString) = batchId
+    Files.writeString(path, line,
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     ()
   }
+
+  /** The batch id of the barrier log's last record, -1 without one. Only
+    * the log's tail is read: a record is well under a kilobyte, and a
+    * line cut short by a crash mid-append is read as far as its id. */
+  private def lastLoggedBatch(path: Path): Long =
+    if (!Files.exists(path)) -1L
+    else {
+      val f = new java.io.RandomAccessFile(path.toFile, "r")
+      val tail = new Array[Byte](math.min(f.length, 4096L).toInt)
+      try { f.seek(f.length - tail.length); f.readFully(tail) } finally f.close()
+      new String(tail, StandardCharsets.UTF_8).split('\n').reverseIterator
+        .collectFirst { case BarrierRecord(b) => b.toLong }.getOrElse(-1L)
+    }
+
+  private val BarrierRecord = """\{"batch":(\d+),.*""".r
 
   /** The filter→route→shape pipeline shared by batch and streaming — the
     * changefeed "plan" (tiflow's fixed topology, here a Catalyst plan). */
@@ -169,7 +166,14 @@ object Changefeed {
     require(spec.barrierDir.isEmpty || spec.textDdlRegistryDir.isDefined,
       s"changefeed ${spec.id}: barrierDir requires textDdlRegistryDir")
     val shaped = pipeline(source, spec)
-    shaped.writeStream
+    // the control step peels its DDL rows off the batch's data rows
+    val peel = spec.textDdlRegistryDir.isDefined && shaped.columns.contains("op")
+    // the feed's marks: Spark reports this max in every committed batch's
+    // progress ([[committedTs]]) and runs no job for it
+    val ts = col("commit_ts")
+    shaped.observe(Marks,
+        max(if (peel) when(DdlStream.isDataRow, ts) else ts).as("commit_ts"))
+      .writeStream
       .queryName(spec.id)
       .option("checkpointLocation", spec.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -177,8 +181,7 @@ object Changefeed {
         // readers share it (the control step and compaction share the raw
         // batch; the metrics counters and the sink the bound one). A cache
         // fill is a job of its own, so a one-reader feed caches nothing.
-        val cacheRaw = spec.textDdlRegistryDir.isDefined && batch.columns.contains("op")
-        if (cacheRaw) batch.persist()
+        if (peel) batch.persist()
         try {
           // DDL + OWNER BARRIER (W1/G5): the batch's control step logs the
           // barrier and advances the registry BEFORE any row is delivered;
@@ -186,7 +189,7 @@ object Changefeed {
           val versions = spec.textDdlRegistryDir.map(d =>
             DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
               spec.barrierDir, spec.redoEnabled))
-          val data = if (versions.isEmpty) batch else DdlStream.dataRows(batch)
+          val data = if (peel) batch.filter(DdlStream.isDataRow) else batch
           val b = if (spec.compact) compactRouted(data) else data
           // the batch binds once, as a map-only plan literal (no job), so
           // the metrics wrapper and the user sink see the same schema-bound
@@ -200,11 +203,23 @@ object Changefeed {
               try Metrics.withDmlMetrics(spark, m)(sink)(bound, batchId)
               finally { bound.unpersist(); () }
           }
-        } finally if (cacheRaw) { batch.unpersist(); () }
+        } finally if (peel) { batch.unpersist(); () }
       }
       .trigger(Trigger.AvailableNow())
       .start()
   }
+
+  private val Marks = "changefeed_marks" // the observation start puts on
+
+  /** The highest data `commit_ts` among the batches `q` committed, as far
+    * back as its recent progress reaches. Only a max is safe to observe:
+    * an observed aggregate adds up every re-read of the batch. A failed
+    * batch has no progress; a sink that never reads its batch observes
+    * nothing. */
+  def committedTs(q: StreamingQuery): Option[Long] =
+    q.recentProgress.iterator
+      .flatMap(p => Option(p.observedMetrics.get(Marks)))
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption
 
   /** Changefeed status snapshot (REST /status analog): query progress from
     * Spark's own instrumentation. */

@@ -21,8 +21,8 @@ final class ChangefeedManager(spark: SparkSession,
                                  // (cdc/owner/feed_state_manager.go)
                                  machine: FeedStateMachine,
                                  var query: Option[StreamingQuery],
-                                 // /synced progress marks, tracked from the
-                                 // REAL applied batches (see syncedStatus)
+                                 // /synced progress marks, read from the
+                                 // committed batches' progress (resume)
                                  var lastSynced: Long = 0L,
                                  var checkpoint: Long = 0L,
                                  var resolvedTick: Long = 0L,
@@ -65,12 +65,13 @@ final class ChangefeedManager(spark: SparkSession,
       }
     }
 
-  /** Resume from checkpoint (no-op if already running). The user sink is
-    * wrapped so each APPLIED batch advances the /synced marks: lastSynced =
-    * max commit ts of a non-empty flushed batch, checkpoint follows (the
-    * microbatch is a complete ts range, so its max is a safe watermark —
-    * the same prefix rule as [[Sinks.sinkProgress]]). A failing sink
-    * advances nothing. */
+  /** Resume from checkpoint (no-op if already running). When the drain
+    * returns, or fails and before its error is reported, lastSynced
+    * advances to the max data commit ts its committed batches observed
+    * ([[Changefeed.committedTs]]) and the checkpoint follows (a microbatch
+    * is a complete ts range, so its max is a safe watermark — the same
+    * prefix rule as [[Sinks.sinkProgress]]). A failed batch has no
+    * progress, so a failing sink advances nothing. */
   def resume(id: String): Unit =
     feeds.get(id).foreach { e =>
       // AdminResume is only legal from failed/stopped/finished; from a
@@ -80,23 +81,14 @@ final class ChangefeedManager(spark: SparkSession,
         e.machine.pushAdminJob("resume")
       machineTick(e)
       if (e.machine.shouldRunning && !e.query.exists(_.isActive)) {
-        val q = Changefeed.start(spark, e.source(), e.spec) { (b, bid) =>
-          e.sink(b, bid)
-          // compaction renames the fold's ts to last_commit_ts; a raw
-          // (compact=false) batch still carries commit_ts
-          Seq("last_commit_ts", "commit_ts").find(b.columns.contains)
-            .foreach { tsCol =>
-              val row = b.agg(org.apache.spark.sql.functions.max(tsCol))
-                .head() // one row — control-plane
-              if (!row.isNullAt(0)) {
-                val mx = row.getLong(0)
-                e.lastSynced = math.max(e.lastSynced, mx)
-                e.checkpoint = math.max(e.checkpoint, mx)
-              }
-            }
-        }
-        try q.awaitTermination() // AvailableNow triggers drain-and-stop
-        catch {
+        val q = Changefeed.start(spark, e.source(), e.spec)(e.sink)
+        try {
+          try q.awaitTermination() // AvailableNow triggers drain-and-stop
+          finally Changefeed.committedTs(q).foreach { ts =>
+            e.lastSynced = math.max(e.lastSynced, ts)
+            e.checkpoint = math.max(e.checkpoint, ts)
+          }
+        } catch {
           case ex: Exception =>
             // processor error: report to the state machine (an unretryable
             // RFC code inside the message fails the feed via the

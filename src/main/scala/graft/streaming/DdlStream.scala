@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -128,8 +128,7 @@ object DdlStream {
     DdlParser.applyToRegistry(Nil, log, defaultSchema)
   }
 
-  /** Data rows of a batch: its DDL control rows peeled off. */
-  private[streaming] def dataRows(batch: DataFrame): DataFrame =
-    if (batch.columns.contains("op")) batch.filter(col("op") =!= DdlOp)
-    else batch
+  /** True on a data row of a batch with an `op` column, false or null on
+    * a DDL control row: the filter that peels the control rows off. */
+  private[streaming] def isDataRow: Column = col("op") =!= DdlOp
 }

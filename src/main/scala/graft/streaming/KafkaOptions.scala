@@ -127,30 +127,35 @@ object KafkaOptions {
     fromUri(SinkUri(uri))
 
   def fromUri(u: SinkUri): Either[(String, String), Options] =
-    applyParams(Options(brokerEndpoints = u.authority.split(',').toSeq), u.params)
+    u.invalid.map(e => Left(ErrInvalidConfig -> e)).getOrElse(
+      applyParams(Options(brokerEndpoints = u.authority.split(',').toSeq), u.params))
 
-  /** The per-param fold; Left = (errClass, message). */
+  /** The per-param fold; Left = (errClass, message). As the reference
+    * binds every param before it checks any, a value that does not parse
+    * as its knob's type is an `ErrKafkaInvalidConfig` first. */
   def applyParams(base: Options, params: Map[String, String])
       : Either[(String, String), Options] = {
     var o = base
-    params.get("partition-num").foreach { v =>
-      val n = v.toInt
+    val ints = Seq("partition-num", "replication-factor", "max-message-bytes",
+        "max-retry", "required-acks").flatMap(k => params.get(k).map { v =>
+      k -> v.toIntOption.getOrElse(return Left(
+        ErrInvalidConfig -> s"invalid $k $v, which is not a number"))
+    }).toMap
+    val autoCreate = params.get("auto-create-topic").map(v =>
+      v.toBooleanOption.getOrElse(return Left(
+        ErrInvalidConfig -> s"invalid auto-create-topic $v, which is not a boolean")))
+    ints.get("partition-num").foreach { n =>
       if (n <= 0)
         return Left(ErrInvalidPartitionNum -> s"invalid partition num $n")
       o = o.copy(partitionNum = n)
     }
-    params.get("replication-factor")
-      .foreach(v => o = o.copy(replicationFactor = v.toInt))
+    ints.get("replication-factor").foreach(n => o = o.copy(replicationFactor = n))
     params.get("kafka-version")
       .foreach(v => o = o.copy(version = v, isAssignedVersion = true))
-    params.get("max-message-bytes")
-      .foreach(v => o = o.copy(maxMessageBytes = v.toInt))
-    params.get("max-retry").foreach { v =>
-      if (v.toInt >= 0) o = o.copy(maxRetry = v.toInt)
-    }
+    ints.get("max-message-bytes").foreach(n => o = o.copy(maxMessageBytes = n))
+    ints.get("max-retry").filter(_ >= 0).foreach(n => o = o.copy(maxRetry = n))
     params.get("compression").foreach(v => o = o.copy(compression = v))
-    params.get("auto-create-topic")
-      .foreach(v => o = o.copy(autoCreate = v.toBoolean))
+    autoCreate.foreach(b => o = o.copy(autoCreate = b))
     for ((key, set) <- Seq[(String, Long => Options)](
         "dial-timeout" -> (ms => o.copy(dialTimeoutMs = ms)),
         "write-timeout" -> (ms => o.copy(writeTimeoutMs = ms)),
@@ -162,8 +167,7 @@ object KafkaOptions {
         }
       }
     }
-    params.get("required-acks").foreach { v =>
-      val a = v.toInt
+    ints.get("required-acks").foreach { a =>
       if (a != WaitForAll && a != WaitForLocal && a != NoResponse)
         return Left(ErrInvalidRequiredAcks -> s"invalid required acks $a")
       o = o.copy(requiredAcks = a)

@@ -94,34 +94,25 @@ object MySqlOptions {
     var o = Options()
     var warnings = Vector.empty[String]
 
-    def numeric(key: String, cap: Int, capFlag: String, zeroLegal: Boolean)
-               (set: Int => Unit): Option[(String, String)] = {
-      params.get(key).flatMap { v =>
-        val n = v.toInt
+    // numeric clamp/error rules: only max-multi-update-row-size may be 0
+    for ((key, cap, set) <- Seq[(String, Int, Int => Options)](
+        ("worker-count", MaxWorkerCount, n => o.copy(workerCount = n)),
+        ("max-txn-row", MaxMaxTxnRow, n => o.copy(maxTxnRow = n)),
+        ("max-multi-update-row", MaxMaxMultiUpdateRowCount,
+          n => o.copy(maxMultiUpdateRowCount = n)),
+        ("max-multi-update-row-size", MaxMaxMultiUpdateRowSize,
+          n => o.copy(maxMultiUpdateRowSize = n)))) {
+      val zeroLegal = key == "max-multi-update-row-size"
+      params.get(key).foreach { v =>
+        val n = v.toIntOption.getOrElse(return Left(ErrInvalidConfig ->
+          s"invalid $key $v, which is not a number"))
         if (n < 0 || (n == 0 && !zeroLegal))
-          Some(ErrInvalidConfig ->
+          return Left(ErrInvalidConfig ->
             s"invalid $key $n, which must be greater than ${if (zeroLegal) "or equal to 0" else "0"}")
-        else {
-          if (n > cap) { warnings :+= capFlag; set(cap) } else set(n)
-          None
-        }
+        if (n > cap) warnings :+= s"$key-capped"
+        o = set(math.min(n, cap))
       }
     }
-
-    numeric("worker-count", MaxWorkerCount, "worker-count-capped",
-      zeroLegal = false)(n => o = o.copy(workerCount = n))
-      .foreach(e => return Left(e))
-    numeric("max-txn-row", MaxMaxTxnRow, "max-txn-row-capped",
-      zeroLegal = false)(n => o = o.copy(maxTxnRow = n))
-      .foreach(e => return Left(e))
-    numeric("max-multi-update-row", MaxMaxMultiUpdateRowCount,
-      "max-multi-update-row-capped",
-      zeroLegal = false)(n => o = o.copy(maxMultiUpdateRowCount = n))
-      .foreach(e => return Left(e))
-    numeric("max-multi-update-row-size", MaxMaxMultiUpdateRowSize,
-      "max-multi-update-row-size-capped",
-      zeroLegal = true)(n => o = o.copy(maxMultiUpdateRowSize = n))
-      .foreach(e => return Left(e))
 
     params.get("tidb-txn-mode").filter(_.nonEmpty).foreach { v =>
       val s = v.toLowerCase
@@ -129,15 +120,17 @@ object MySqlOptions {
       else warnings :+= "invalid-tidb-txn-mode"
     }
 
-    params.get("safe-mode").foreach(v => o = o.copy(safeMode = v.toBoolean))
-    params.get("batch-dml-enable")
-      .foreach(v => o = o.copy(batchDMLEnable = v.toBoolean))
-    params.get("multi-stmt-enable")
-      .foreach(v => o = o.copy(multiStmtEnable = v.toBoolean))
-    params.get("cache-prep-stmts")
-      .foreach(v => o = o.copy(cachePrepStmts = v.toBoolean))
-    params.get("has-vector-type")
-      .foreach(v => o = o.copy(hasVectorType = v.toBoolean))
+    for ((key, set) <- Seq[(String, Boolean => Options)](
+        "safe-mode" -> (b => o.copy(safeMode = b)),
+        "batch-dml-enable" -> (b => o.copy(batchDMLEnable = b)),
+        "multi-stmt-enable" -> (b => o.copy(multiStmtEnable = b)),
+        "cache-prep-stmts" -> (b => o.copy(cachePrepStmts = b)),
+        "has-vector-type" -> (b => o.copy(hasVectorType = b)))) {
+      params.get(key).foreach { v =>
+        o = set(v.toBooleanOption.getOrElse(return Left(ErrInvalidConfig ->
+          s"invalid $key $v, which is not a boolean")))
+      }
+    }
 
     params.get("time-zone") match {
       case None =>
@@ -179,6 +172,7 @@ object MySqlOptions {
               fileParams: Map[String, String] = Map.empty)
       : Either[(String, String), Adjusted] = {
     val u = SinkUri(uri)
+    u.invalid.foreach(e => return Left(ErrInvalidConfig -> e))
     if (!isMySqlCompatibleScheme(u.scheme))
       return Left(ErrInvalidConfig ->
         s"can't create MySQL sink with unsupported scheme: ${u.scheme}")

@@ -37,6 +37,7 @@ object PulsarOptions {
   def fromUri(uri: String, configBlock: Map[String, Int] = Map.empty)
       : Either[String, Options] = {
     val u = SinkUri(uri)
+    u.invalid.foreach(e => return Left(e))
     val (scheme, host, path) = (u.scheme, u.authority, u.path)
     if (scheme.isEmpty) return Left("scheme is empty")
     if (host.isEmpty) return Left("host is empty")

@@ -20,7 +20,11 @@ import java.nio.charset.StandardCharsets.UTF_8
  *    `url.URL.Path`;
  *  - the query runs from the first `?` to the first `#` and splits on `&`;
  *    `k=v` reads `v` URL-decoded as UTF-8 and a bare `k` reads "". As with
- *    `Query().Get`, a caller treats an empty value as absent.
+ *    `Query().Get`, a repeated key reads its first value, and a caller
+ *    treats an empty value as absent;
+ *  - a `%` not followed by two hex digits, in the path or a query value,
+ *    makes the URI [[invalid]]; `path` and `params` throw on it, so an
+ *    Either-returning reader checks `invalid` first.
  */
 final case class SinkUri(raw: String) {
   private val sep = raw.indexOf("://")
@@ -38,9 +42,10 @@ final case class SinkUri(raw: String) {
 
   val authority: String = if (sep < 0) "" else hier.takeWhile(_ != '/')
 
+  private val rawPath = hier.substring(authority.length)
+
   /** Percent-decoded; a `+` in a path is a plus, not a space. */
-  lazy val path: String =
-    URLDecoder.decode(hier.substring(authority.length).replace("+", "%2B"), UTF_8)
+  lazy val path: String = URLDecoder.decode(rawPath.replace("+", "%2B"), UTF_8)
 
   /** The query's `(key, raw value)` pairs in URI order. */
   val pairs: Seq[(String, String)] =
@@ -53,9 +58,16 @@ final case class SinkUri(raw: String) {
         }
       }
 
-  /** Decoded query values by key; the last of a repeated key wins. */
+  /** The first malformed percent-escape in the path or a query value, as
+    * Go's `url.Parse` reports it: `invalid URL escape "%zz"`. */
+  lazy val invalid: Option[String] = "%(?![0-9A-Fa-f]{2}).{0,2}".r
+    .findFirstIn((rawPath +: pairs.map(_._2)).mkString("\n"))
+    .map(e => s"""invalid URL escape "$e"""")
+
+  /** Decoded query values by key; the first of a repeated key wins. */
   lazy val params: Map[String, String] =
-    pairs.map { case (k, v) => k -> URLDecoder.decode(v, UTF_8) }.toMap
+    pairs.reverseIterator.map { case (k, v) => k -> URLDecoder.decode(v, UTF_8) }
+      .toMap
 
   /** A param as `Query().Get` reads it: an empty value is absent. */
   def param(key: String): Option[String] = params.get(key).filter(_.nonEmpty)

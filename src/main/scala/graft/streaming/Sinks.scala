@@ -21,22 +21,22 @@ object Sinks {
    * (cdc/api/v2/changefeed.go verifyCreateChangefeedConfig → sink factory).
    * Schemes: `storage://dir` (date-partitioned files), `mysql://dir`
    * (multi-row SQL, socket stubbed to .sql files per SURVEY K1),
-   * `state://dir` (bucketed table state), `blackhole://` (drop), each
-   * dir being the URI's [[SinkUri.location]].
+   * `state://dir` (bucketed table state), `kafka://` and `kafka+ssl://`
+   * ([[kafkaSink]]), `blackhole://` (reads every row and drops it, through
+   * Spark's `noop` writer, as the reference's blackhole sink consumes
+   * every event), each dir being the URI's [[SinkUri.location]].
    */
   def forUri(spark: SparkSession, uri: String): (DataFrame, Long) => Unit = {
     val u = SinkUri(uri)
+    u.invalid.foreach(e =>
+      throw new IllegalArgumentException(s"malformed sink uri: $uri: $e"))
     u.scheme match {
       case "" => throw new IllegalArgumentException(s"malformed sink uri: $uri")
       case "storage" =>
         // K4 option surface (pkg/sink/cloudstorage/config.go via
         // [[StorageOptions]]): a bad worker-count or flush-interval
         // rejects the changefeed CREATE; the clamp/reset repairs are pure
-        StorageOptions(Map.empty, u.params) match {
-          case Left((err, msg)) =>
-            throw new IllegalArgumentException(s"$err: $msg")
-          case Right(_) => ()
-        }
+        orReject(StorageOptions(Map.empty, u.params))
         storageSink(u.location) _
       case "mysql" | "mysql+ssl" | "tidb" | "tidb+ssl" =>
         // K1 option surface (pkg/sink/mysql/config.go via [[MySqlOptions]]):
@@ -44,18 +44,22 @@ object Sinks {
         // the SQL generator — max-txn-row bounds each multi-row statement,
         // worker-count is the causality-slot parallelism
         val serverTz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-        val adj = MySqlOptions(serverTz, Map.empty, u.params) match {
-          case Left((err, msg)) => throw new IllegalArgumentException(s"$err: $msg")
-          case Right(a) => a.options
-        }
+        val adj = orReject(MySqlOptions(serverTz, Map.empty, u.params)).options
         sqlFileSink(u.location, maxTxnRow = adj.maxTxnRow,
           numPartitions = adj.workerCount) _
       case "state"     => parquetStateSink(spark, u.location)
-      case "kafka"     => kafkaSink(spark, u)
-      case "blackhole" => (_, _) => ()
+      case "kafka" | "kafka+ssl" => kafkaSink(spark, u)
+      case "blackhole" =>
+        (b, _) => b.write.format("noop").mode(SaveMode.Overwrite).save()
       case other => throw new IllegalArgumentException(s"unsupported sink scheme: $other")
     }
   }
+
+  /** An option surface's `Left((errClass, message))` rejects the
+    * changefeed CREATE. */
+  private def orReject[A](r: Either[(String, String), A]): A =
+    r.fold({ case (err, msg) => throw new IllegalArgumentException(s"$err: $msg") },
+      identity)
 
   /**
    * K2 — the Kafka sink URI path with the REAL option surface
@@ -74,10 +78,7 @@ object Sinks {
    */
   def kafkaSink(spark: SparkSession, u: SinkUri): (DataFrame, Long) => Unit = {
     import graft.streaming.{KafkaOptions => KO}
-    val o0 = KO.fromUri(u) match {
-      case Left((err, msg)) => throw new IllegalArgumentException(s"$err: $msg")
-      case Right(o) => o
-    }
+    val o0 = orReject(KO.fromUri(u))
     val topic = Some(u.path.stripPrefix("/")).filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException(
         "kafka sink uri carries no topic path"))
@@ -85,11 +86,8 @@ object Sinks {
       "kafka sink uri needs dir=<path> (socket transport is out of scope)"))
     val brokerMax = u.param("broker-message-max-bytes").map(_.toInt)
       .getOrElse(1048588)
-    val adj = KO.adjust(o0, KO.TopicMeta(exists = false,
-        brokerMessageMaxBytes = Some(brokerMax))) match {
-      case Left((err, msg)) => throw new IllegalArgumentException(s"$err: $msg")
-      case Right(a) => a.options
-    }
+    val adj = orReject(KO.adjust(o0, KO.TopicMeta(exists = false,
+      brokerMessageMaxBytes = Some(brokerMax)))).options
     (batch: DataFrame, batchId: Long) => {
       val recs = batch.select(
         pmod(graft.core.Hashing.portableLong(concat_ws("\u0001",

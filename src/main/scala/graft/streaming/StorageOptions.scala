@@ -67,8 +67,11 @@ object StorageOptions {
     var o = Options()
     var warnings = Vector.empty[String]
 
+    def notNumber(key: String, v: String) =
+      Left(ErrInvalidConfig -> s"invalid $key $v, which is not a number")
+
     params.get("worker-count").foreach { v =>
-      val n = v.toInt
+      val n = v.toIntOption.getOrElse(return notNumber("worker-count", v))
       if (n <= 0)
         return Left(ErrInvalidConfig ->
           s"invalid worker-count $n, it must be greater than 0")
@@ -92,7 +95,7 @@ object StorageOptions {
     }
 
     params.get("file-size").foreach { v =>
-      val sz = v.toInt
+      val sz = v.toIntOption.getOrElse(return notNumber("file-size", v))
       val clamped =
         if (sz > MaxFileSize) { warnings :+= "file-size-capped"; MaxFileSize }
         else if (sz < MinFileSize) { warnings :+= "file-size-raised"; MinFileSize }
@@ -119,6 +122,7 @@ object StorageOptions {
               flushConcurrency: Option[Int] = None)
       : Either[(String, String), Adjusted] = {
     val u = SinkUri(uri)
+    u.invalid.foreach(e => return Left(ErrInvalidConfig -> e))
     if (!isStorageScheme(u.scheme))
       return Left(ErrInvalidConfig ->
         s"can't create cloud storage sink with unsupported scheme: ${u.scheme}")

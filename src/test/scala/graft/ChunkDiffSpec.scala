@@ -178,24 +178,8 @@ class ChunkDiffSpec extends SparkSpec {
   }
 
   /** Jobs `f` starts, counted by a job group of its own. */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"chunkdiff-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tap = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(tap)
-    sc.setJobGroup(group, "ChunkDiffSpec")
-    try {
-      val r = f
-      org.apache.spark.graftbridge.SparkInternals.waitListenerEmpty(sc)
-      (r, jobs.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(tap) }
-  }
+  private def jobsOf[A](f: => A): (A, Int) =
+    JobTap.on(spark.sparkContext)(_.inGroup(f))
 
   private def wide(n: Long) = spark.range(0, n).select(col("id").as("k1"),
     (col("id") % 3).cast("int").as("k2"), (col("id") % 7).cast("string").as("x"),

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{ChangefeedManager, ChangefeedSpec, Sinks}
+import graft.streaming.{Changefeed, ChangefeedManager, ChangefeedSpec, Sinks}
 
 /** Changefeed CRUD lifecycle: create → pause → resume (continues from
   * checkpoint, no reprocessing) → delete. */
@@ -53,7 +53,7 @@ class ManagerSpec extends SparkSpec {
 
     push(ev(1, 1, 10), ev(2, 2, 20)) // commit ts 101, 102
     mgr.create(ChangefeedSpec(id = "cfS", checkpointDir = s"$dir/ckpt"),
-      () => mem.toDF())((_, _) => ())
+      () => mem.toDF())(Sinks.forUri(spark, "blackhole://"))
     mgr.setIntrospect("cfS", () => added.toDF())
     def ask(now: Long, pd: Boolean = true) = mgr.synced("cfS", now, pd, cfg)
 
@@ -97,6 +97,63 @@ class ManagerSpec extends SparkSpec {
     assert(ask(8100)("checkpoint_ts") == 6000L)
     assert(ask(8100)("puller_resolved_ts") == 8000L)
     mgr.delete("cfS")
+  }
+
+  test("a managed feed runs as many jobs per batch as Changefeed.start") {
+    // The /synced marks come from the query's own observation, so the
+    // manager adds no job to a batch, whether or not metricsDir caches it.
+    implicit val sqlCtx = spark.sqlContext
+    def sink(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      b.write.format("noop").mode("overwrite").save()
+    val batches = Seq(Seq(ev(1, 1, 10), ev(2, 2, 20)), Seq(ev(3, 1, 11)),
+      Seq(ev(4, 3, 30), ev(5, 4, 40)))
+    for (metrics <- Seq(false, true)) {
+      def spec(id: String) = {
+        val dir = Files.createTempDirectory(s"graft_mgr_jobs_$id").toString
+        ChangefeedSpec(id = id, checkpointDir = s"$dir/ckpt",
+          metricsDir = if (metrics) Some(s"$dir/m") else None)
+      }
+      val started = JobTap.on(spark.sparkContext) { tap =>
+        val mem = MemoryStream[StreamEv]
+        val once = spec("cfJobsStart")
+        batches.foreach { evs =>
+          mem.addData(evs: _*)
+          Changefeed.start(spark, mem.toDF(), once)(sink)
+            .awaitTermination()
+        }
+        tap.perBatch()
+      }
+      val mgr = new ChangefeedManager(spark)
+      val managed = JobTap.on(spark.sparkContext) { tap =>
+        val mem = MemoryStream[StreamEv]
+        mem.addData(batches.head: _*)
+        mgr.create(spec("cfJobsMgr"), () => mem.toDF())(sink)
+        batches.tail.foreach { evs => mem.addData(evs: _*); mgr.resume("cfJobsMgr") }
+        tap.perBatch()
+      }
+      assert(managed.keySet == batches.indices.map(_.toLong).toSet)
+      assert(managed == started, s"metricsDir=$metrics")
+      assert(mgr.synced("cfJobsMgr", 105)("last_synced_ts") == 105L)
+      mgr.delete("cfJobsMgr")
+    }
+  }
+
+  test("the marks leave DDL control rows out, as the sink does") {
+    val dir = Files.createTempDirectory("graft_mgr_ddlmarks").toString
+    val mgr = new ChangefeedManager(spark)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    mem.addData(StreamEv(0, "G", 100, 99, 0, "db", "t", 0, 0, None, None,
+        "CREATE TABLE db.t (pk BIGINT NOT NULL PRIMARY KEY, val DOUBLE)"),
+      ev(1, 1, 10), // commit_ts 101
+      StreamEv(5, "G", 150, 149, 0, "db", "t", 0, 0, None, None,
+        "ALTER TABLE db.t ADD COLUMN c2 BIGINT"))
+    mgr.create(ChangefeedSpec(id = "cfDdlMarks", checkpointDir = s"$dir/ckpt",
+      textDdlRegistryDir = Some(s"$dir/reg")), () => mem.toDF())(
+      Sinks.forUri(spark, "blackhole://"))
+    assert(mgr.synced("cfDdlMarks", 101)("last_synced_ts") == 101L)
+    assert(mgr.synced("cfDdlMarks", 101)("checkpoint_ts") == 101L)
+    mgr.delete("cfDdlMarks")
   }
 
   test("metricsDir and textDdlRegistryDir are first-class spec options") {

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{ApiServer, ChangefeedManager, CreatorFix, SinkUri, Sinks}
+import graft.streaming.{ApiServer, ChangefeedManager, CreatorFix, KafkaOptions,
+  MySqlOptions, PulsarOptions, SinkUri, Sinks, StorageOptions}
 import graft.streaming.CreatorFix.FeedInfo
 
 /** The one sink-URI grammar ([[SinkUri]]): its query rules, the readers
@@ -93,6 +94,67 @@ class SinkUriSpec extends SparkSpec {
       assert(factory.isSuccess, factory)
       assert(r.statusCode() == 200, r.body())
       assert(spark.read.parquet(s"$dir/mq/t").count() == 1L)
+    } finally srv.stop()
+  }
+
+  test("a malformed escape or value is a Left on every option surface") {
+    assert(SinkUri("pulsar://h/%zz").invalid.contains("invalid URL escape \"%zz\""))
+    assert(SinkUri("kafka://h/t?a=%2F&b=%4").invalid.contains("invalid URL escape \"%4\""))
+    assert(SinkUri("kafka://h/%2Ft?a=%C3%A9").invalid.isEmpty)
+    def errClass[E](r: Either[(String, String), E]) = r.left.toOption.map(_._1)
+    assert(errClass(MySqlOptions.fromUri("mysql://h/?worker-count=%zz", "UTC"))
+      .contains(MySqlOptions.ErrInvalidConfig))
+    assert(errClass(MySqlOptions.fromUri("mysql://h/?worker-count=abc", "UTC"))
+      .contains(MySqlOptions.ErrInvalidConfig))
+    assert(errClass(MySqlOptions.fromUri("mysql://h/?safe-mode=maybe", "UTC"))
+      .contains(MySqlOptions.ErrInvalidConfig))
+    assert(PulsarOptions.fromUri("pulsar://h/%zz") ==
+      Left("invalid URL escape \"%zz\""))
+    assert(errClass(KafkaOptions.fromUri("kafka://h/t?partition-num=abc"))
+      .contains(KafkaOptions.ErrInvalidConfig))
+    assert(errClass(KafkaOptions.fromUri("kafka://h/t?auto-create-topic=yes"))
+      .contains(KafkaOptions.ErrInvalidConfig))
+    assert(errClass(KafkaOptions.fromUri("kafka://h/t?dir=%zz"))
+      .contains(KafkaOptions.ErrInvalidConfig))
+    assert(errClass(StorageOptions.fromUri("file:///x?file-size=1MB"))
+      .contains(StorageOptions.ErrInvalidConfig))
+    assert(errClass(StorageOptions.fromUri("s3://b/%zz"))
+      .contains(StorageOptions.ErrInvalidConfig))
+  }
+
+  test("a repeated query key reads its first value, as Query().Get does") {
+    assert(SinkUri("kafka://h/t?a=1&b=2&a=3").params == Map("a" -> "1", "b" -> "2"))
+    assert(KafkaOptions.fromUri("kafka://h/t?partition-num=0&partition-num=3") ==
+      Left(KafkaOptions.ErrInvalidPartitionNum -> "invalid partition num 0"))
+  }
+
+  test("forUri builds the Kafka sink for kafka+ssl") {
+    val dir = Files.createTempDirectory("graft_kafkassl").toString
+    val sink = Sinks.forUri(spark, s"kafka+ssl://h:9093/t?dir=$dir")
+    sink(Seq(("db", "t", 1L)).toDF("schema_name", "table_name", "pk"), 0L)
+    assert(spark.read.parquet(s"$dir/t").count() == 1L)
+  }
+
+  test("POST /changefeeds answers 400 for a malformed escape or value") {
+    val dir = Files.createTempDirectory("graft_sinkuri_bad").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamEv]
+    val srv = new ApiServer(spark, new ChangefeedManager(spark),
+      Map("mem" -> (() => mem.toDF()))).start()
+    try {
+      def post(id: String, uri: String) = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:${srv.boundPort}/api/v2/changefeeds"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            s"""{"changefeed_id":"$id","source":"mem","sink_uri":"$uri",
+               |"checkpoint_dir":"$dir/$id"}""".stripMargin)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val escape = post("bad-escape", "mysql://h/?worker-count=%zz")
+      assert(escape.statusCode() == 400, escape.body())
+      assert(escape.body().contains("ErrSinkURIInvalid"), escape.body())
+      val value = post("bad-value", s"kafka://h/t?dir=$dir/mq&partition-num=abc")
+      assert(value.statusCode() == 400, value.body())
+      assert(value.body().contains(KafkaOptions.ErrInvalidConfig), value.body())
     } finally srv.stop()
   }
 

@@ -165,6 +165,29 @@ class StreamingSpec extends SparkSpec {
     assert(java.nio.file.Files.readAllLines(barFile).size == before + 1)
   }
 
+  test("a fresh feed on a deleted barrier dir logs every batch") {
+    // The replay guard reads the log itself, so nothing about the first
+    // feed outlives its dir: the second feed restarts its batch ids at 0
+    // and must log each of them again.
+    val dir = Files.createTempDirectory("graft_cfbar_fresh").toString
+    val bar = java.nio.file.Paths.get(s"$dir/bar/barriers.jsonl")
+    implicit val sqlCtx = spark.sqlContext
+    for (run <- 0 to 1) {
+      val spec = ChangefeedSpec(id = s"cf-bar-fresh$run",
+        checkpointDir = s"$dir/ckpt$run", textDdlRegistryDir = Some(s"$dir/reg$run"),
+        barrierDir = Some(s"$dir/bar"))
+      val mem = MemoryStream[StreamEv]
+      ddlBatches.foreach { evs =>
+        mem.addData(evs: _*)
+        Changefeed.start(spark, mem.toDF(), spec)((_, _) => ()).awaitTermination()
+      }
+      val logged = Files.readAllLines(bar).toArray.map(_.toString).toSeq
+        .map(l => """"batch":(\d+)""".r.findFirstMatchIn(l).get.group(1).toLong)
+      assert(logged == ddlBatches.indices.map(_.toLong), s"run $run")
+      graft.core.FileOps.deleteTree(new java.io.File(s"$dir/bar"))
+    }
+  }
+
   test("live multiplexed changefeed: two region streams merge through the puller semantics") {
     // S3's one remaining streaming-native surface: a REAL StreamingQuery
     // over the union of two independent region delivery streams, consumed
@@ -579,32 +602,21 @@ class StreamingSpec extends SparkSpec {
     // full-option feed adds the control step's single scan (resolved ts
     // and DDL rows together) and the metrics write; the schema bind is a
     // plan literal and runs no job: 4 jobs.
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
-    val tap = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        for (p <- Option(e.properties);
-             b <- Option(p.getProperty("streaming.sql.batchId")))
-          jobs.add((p.getProperty("sql.streaming.queryId"), b.toLong))
-    }
-    spark.sparkContext.addSparkListener(tap)
-    def perBatch(spec: ChangefeedSpec): Seq[Int] = {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[StreamEv]
-      val ids = ddlBatches.map { evs =>
-        mem.addData(evs: _*)
-        val q = Changefeed.start(spark, mem.toDF(), spec) { (b, _) =>
-          b.write.format("noop").mode("overwrite").save()
-        }
-        q.awaitTermination()
-        q.id.toString
-      }.toSet
-      org.apache.spark.graftbridge.SparkInternals
-        .waitListenerEmpty(spark.sparkContext)
-      val mine = jobs.toArray(Array.empty[(String, Long)]).filter(j => ids(j._1))
-      ddlBatches.indices.map(b => mine.count(_._2 == b))
-    }
-    try {
+    JobTap.on(spark.sparkContext) { tap =>
+      def perBatch(spec: ChangefeedSpec): Seq[Int] = {
+        implicit val sqlCtx = spark.sqlContext
+        val mem = MemoryStream[StreamEv]
+        val ids = ddlBatches.map { evs =>
+          mem.addData(evs: _*)
+          val q = Changefeed.start(spark, mem.toDF(), spec) { (b, _) =>
+            b.write.format("noop").mode("overwrite").save()
+          }
+          q.awaitTermination()
+          q.id.toString
+        }.toSet
+        val mine = tap.perBatch(ids)
+        ddlBatches.indices.map(b => mine.getOrElse(b.toLong, 0))
+      }
       val plainDir = Files.createTempDirectory("graft_cfjobs0").toString
       val plain = perBatch(
         ChangefeedSpec(id = "cf-jobs-plain", checkpointDir = s"$plainDir/ckpt"))
@@ -612,7 +624,7 @@ class StreamingSpec extends SparkSpec {
       val full = perBatch(fullSpec("cf-jobs-full", fullDir))
       assert(full.zip(plain).map { case (f, p) => f - p } == Seq(4, 4, 4),
         s"plain=$plain full=$full")
-    } finally spark.sparkContext.removeSparkListener(tap)
+    }
   }
 
   test("full-option feed reads its source once per microbatch") {
