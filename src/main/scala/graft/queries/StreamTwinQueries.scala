@@ -302,7 +302,7 @@ object StreamTwinQueries {
    * ts, and the epoch's opening barrier ts lower-bounds all its rows
    * (min_ts >= barrier_ts is pinned by the hash). Twin of the streaming
    * path's apply-DDLs-then-rows microbatch ordering
-   * ([[graft.streaming.DdlStream.controlStep]] inside
+   * (`DdlStream.peel` inside the batch body of
    * [[graft.streaming.Changefeed.start]]).
    */
   private val BarrierDdls = Seq(
@@ -1202,11 +1202,12 @@ object StreamTwinQueries {
 
   /**
    * W1/G5 — the owner barrier at the MICROBATCH BOUNDARY
-   * ([[graft.streaming.DdlStream.controlStep]] — ddl_manager.go:508-584
+   * (`DdlStream.peel`'s control step — ddl_manager.go:508-584
    * wired into foreachBatch; the live path is exercised in
    * StreamingSpec): four batch windows over the cdc stream, each with its
    * announced-but-unexecuted textual DDLs classified through the REAL
-   * parser ([[graft.streaming.Changefeed.ddlAction]]). Per batch the feed's
+   * parser by the control step's own function
+   * ([[graft.streaming.OwnerBarrier.ofTextDdls]]). Per batch the feed's
    * clamp record: resolved (data-derived max commit ts), the global
    * barrier held at a create_table's commit ts (batch 2 — and, redo ON,
    * the redo resolved ts held there too, exactly ddl_manager.go:521-526's
@@ -1250,19 +1251,18 @@ object StreamTwinQueries {
          |   WHERE d.is_global = 0 AND d.ts > r.prev AND d.ts <= r.cut) AS n_tb
          |FROM res r""".stripMargin)) { (spark, dir) =>
     import spark.implicits._
-    import graft.streaming.{Changefeed, OwnerBarrier}
-    import graft.streaming.OwnerBarrier.DdlAt
+    import graft.streaming.OwnerBarrier
     val cdc = CdcStream.derive(spark, dir)
     val bounds = cdc.agg(min("commit_ts"), max("commit_ts")).head()
     val (tmin, tmax) = (bounds.getLong(0), bounds.getLong(1))
     def at(num: Long, off: Long) = tmin + (tmax - tmin) * num / 8 + off
-    // announced DDLs as SQL TEXT — classification goes through the real
-    // parser, the same path the streaming boundary takes
+    // announced DDLs as SQL TEXT (sql, ts, schema, table) — classified by
+    // the function the streaming boundary's control step calls
     val ddls = Seq(
-      ("ALTER TABLE db.tbl_0 ADD COLUMN c2 BIGINT", "tbl_0", at(1, 0)),
-      ("CREATE TABLE db.tbl_9 (pk BIGINT, val DOUBLE)", "tbl_9", at(3, 0)),
-      ("ALTER TABLE db.tbl_0 MODIFY COLUMN val BIGINT", "tbl_0", at(5, 0)),
-      ("DROP TABLE db.tbl_1", "tbl_1", at(5, 1)))
+      ("ALTER TABLE db.tbl_0 ADD COLUMN c2 BIGINT", at(1, 0), "db", "tbl_0"),
+      ("CREATE TABLE db.tbl_9 (pk BIGINT, val DOUBLE)", at(3, 0), "db", "tbl_9"),
+      ("ALTER TABLE db.tbl_0 MODIFY COLUMN val BIGINT", at(5, 0), "db", "tbl_0"),
+      ("DROP TABLE db.tbl_1", at(5, 1), "db", "tbl_1"))
     val cuts = (1 to 4).map(k =>
       (k, tmin + (tmax - tmin) * (k - 1) / 4, tmin + (tmax - tmin) * k / 4))
     val res = cdc.agg(
@@ -1272,12 +1272,9 @@ object StreamTwinQueries {
       }: _*).head()
     val out = cuts.map { case (k, prev, cut) =>
       val resolved = res.getAs[Long](s"r$k")
-      val pending = ddls.filter(d => d._3 > prev && d._3 <= cut).flatMap { d =>
-        Changefeed.ddlAction(d._1, "db").map(a =>
-          DdlAt(d._3, a, Seq(Changefeed.physicalId("db", d._2))))
-      }
-      val on = OwnerBarrier.barrier(resolved, pending, redoEnabled = true)
-      val off = OwnerBarrier.barrier(resolved, pending, redoEnabled = false)
+      val pending = ddls.filter(d => d._2 > prev && d._2 <= cut)
+      val on = OwnerBarrier.ofTextDdls(resolved, pending, redoEnabled = true, "db")
+      val off = OwnerBarrier.ofTextDdls(resolved, pending, redoEnabled = false, "db")
       (k.toLong, resolved, on.globalBarrierTs, on.minTableBarrierTs,
         on.redoBarrierTs, off.redoBarrierTs, on.tableBarriers.size.toLong)
     }

@@ -321,15 +321,24 @@ final class ApiServer(spark: SparkSession,
           // wall clock, so the caller supplies the instant
           case Some(now) =>
             val q = queryParams(ex)
-            // intervals come from the changefeed's replica config in the
-            // reference (replica_config.go:109 defaults 5 min / 15 s)
-            val cfg = SyncedStatus.SyncedConfig(
-              syncedCheckIntervalSec =
-                q.get("sci").map(_.toLong).getOrElse(300L),
-              checkpointIntervalSec =
-                q.get("ci").map(_.toLong).getOrElse(15L))
-            respond(ex, 200, manager.synced(id, now.toLong,
-              pdAvailable = q.get("pd").forall(_.toBoolean), cfg))
+            val malformed = q.toSeq.sorted.collectFirst {
+              case (k @ ("now" | "sci" | "ci"), v) if v.toLongOption.isEmpty => k -> v
+              case ("pd", v) if v.toBooleanOption.isEmpty => "pd" -> v
+            }
+            malformed match {
+              case Some((k, v)) =>
+                error(ex, 400, s"invalid query parameter $k: $v")
+              case None =>
+                // intervals come from the changefeed's replica config in
+                // the reference (replica_config.go:109 defaults 5 min / 15 s)
+                val cfg = SyncedStatus.SyncedConfig(
+                  syncedCheckIntervalSec =
+                    q.get("sci").map(_.toLong).getOrElse(300L),
+                  checkpointIntervalSec =
+                    q.get("ci").map(_.toLong).getOrElse(15L))
+                respond(ex, 200, manager.synced(id, now.toLong,
+                  pdAvailable = q.get("pd").forall(_.toBoolean), cfg))
+            }
           // clockless degenerate case: AvailableNow feeds drain to the
           // source end each resume, so "drained" IS "synced"
           case None =>

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max, when}
+import org.apache.spark.sql.functions.max
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.SchemaRegistry
 import graft.operators._
@@ -47,90 +44,6 @@ final case class ChangefeedSpec(
 
 object Changefeed {
 
-  /** The owner's action-type vocabulary for a textual DDL — what
-    * [[OwnerBarrier]]'s tables key on (ddl_manager.go:58-97), as far as
-    * the text path can classify. Unparseable statements map to
-    * "unknown", which is GLOBAL (not in NonGlobalDDLs) — the safe
-    * over-blocking default. */
-  def ddlAction(sql: String, defaultSchema: String = ""): Seq[String] = {
-    import graft.core.DdlParser._
-    try parse(sql, defaultSchema).map {
-      case _: CreateTable => "create_table"
-      case _: DropTable => "drop_table"
-      case _: TruncateTable => "truncate_table"
-      case _: RenameTable => "rename_table"
-      case _: CreateDatabase => "create_schema"
-      case _: DropDatabase => "drop_schema"
-      case ai: AlterIndex => if (ai.addIndex) "add_index" else "drop_index"
-      case at: AlterTable => at.action match {
-        case _: SchemaRegistry.AddColumn => "add_column"
-        case _: SchemaRegistry.DropColumn => "drop_column"
-        case _: SchemaRegistry.ModifyColumn => "modify_column"
-        case _ => "rename_column" // not in NonGlobalDDLs → global
-      }
-    } catch { case _: Exception => Seq("unknown") }
-  }
-
-  /** Stable physical-table id for the barrier's per-table map — the text
-    * path has names, not TiDB table ids. Plain JVM hash: the id only has
-    * to be stable and distinct per name within one feed. */
-  def physicalId(schema: String, table: String): Long = {
-    val s = s"$schema.$table"
-    s.foldLeft(1125899906842597L)((h, c) => h * 31 + c)
-  }
-
-  /** The owner barrier at a microbatch boundary: pending = the batch's
-    * DDL control rows (sql, ts, schema, table) NOT yet in the applied
-    * log, classified by [[ddlAction]]. */
-  private[streaming] def barrierFromRows(resolved: Long,
-      rows: Seq[(String, Long, String, String)],
-      seen: Set[(String, Long)], redoEnabled: Boolean,
-      defaultSchema: String): OwnerBarrier.Barrier = {
-    val pending = rows
-      .filterNot(r => seen.contains((r._1, r._2)))
-      .flatMap { case (etype, ts, sch, tbl) =>
-        ddlAction(etype, defaultSchema).map(a =>
-          OwnerBarrier.DdlAt(ts, a, Seq(physicalId(sch, tbl))))
-      }
-    OwnerBarrier.barrier(resolved, pending, redoEnabled)
-  }
-
-  /** One JSON line per batch: the boundary's clamp record.
-    * Replay-idempotent like the DDL registry on the same path: a
-    * foreachBatch retry re-runs the same batchId AFTER the first attempt
-    * may already have applied the batch's DDLs, so the recomputed
-    * barrier would differ — the original record stands, the re-run
-    * writes nothing. The guard reads the log's last record, which holds
-    * its highest batch id, so no state outlives the log. */
-  private[graft] def appendBarrier(dir: String, batchId: Long,
-      resolved: Long,
-      b: OwnerBarrier.Barrier): Unit = {
-    val path = Files.createDirectories(Paths.get(dir)).resolve("barriers.jsonl")
-    if (batchId <= lastLoggedBatch(path)) return
-    val line = s"""{"batch":$batchId,"resolved_ts":$resolved,""" +
-      s""""global_ts":${b.globalBarrierTs},""" +
-      s""""min_table_ts":${b.minTableBarrierTs},""" +
-      s""""redo_ts":${b.redoBarrierTs},"n_tb":${b.tableBarriers.size}}""" + "\n"
-    Files.writeString(path, line,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    ()
-  }
-
-  /** The batch id of the barrier log's last record, -1 without one. Only
-    * the log's tail is read: a record is well under a kilobyte, and a
-    * line cut short by a crash mid-append is read as far as its id. */
-  private def lastLoggedBatch(path: Path): Long =
-    if (!Files.exists(path)) -1L
-    else {
-      val f = new java.io.RandomAccessFile(path.toFile, "r")
-      val tail = new Array[Byte](math.min(f.length, 4096L).toInt)
-      try { f.seek(f.length - tail.length); f.readFully(tail) } finally f.close()
-      new String(tail, StandardCharsets.UTF_8).split('\n').reverseIterator
-        .collectFirst { case BarrierRecord(b) => b.toLong }.getOrElse(-1L)
-    }
-
-  private val BarrierRecord = """\{"batch":(\d+),.*""".r
-
   /** The filter→route→shape pipeline shared by batch and streaming — the
     * changefeed "plan" (tiflow's fixed topology, here a Catalyst plan). */
   def pipeline(df: DataFrame, spec: ChangefeedSpec): DataFrame = {
@@ -148,7 +61,7 @@ object Changefeed {
     * tables share one target, and net effects must fold across them (dm
     * shard-merge semantics). Renamed back so sinks see the canonical
     * envelope names. */
-  def compactRouted(data: DataFrame): DataFrame =
+  private def compactRouted(data: DataFrame): DataFrame =
     Compaction.compact(data, keyCols = Seq("target_schema", "target_table", "pk"))
       .withColumnRenamed("target_schema", "schema_name")
       .withColumnRenamed("target_table", "table_name")
@@ -166,48 +79,41 @@ object Changefeed {
     require(spec.barrierDir.isEmpty || spec.textDdlRegistryDir.isDefined,
       s"changefeed ${spec.id}: barrierDir requires textDdlRegistryDir")
     val shaped = pipeline(source, spec)
-    // the control step peels its DDL rows off the batch's data rows
-    val peel = spec.textDdlRegistryDir.isDefined && shaped.columns.contains("op")
     // the feed's marks: Spark reports this max in every committed batch's
     // progress ([[committedTs]]) and runs no job for it
-    val ts = col("commit_ts")
     shaped.observe(Marks,
-        max(if (peel) when(DdlStream.isDataRow, ts) else ts).as("commit_ts"))
+        max(DdlStream.dataCommitTs(shaped, spec.textDdlRegistryDir)).as("commit_ts"))
       .writeStream
       .queryName(spec.id)
       .option("checkpointLocation", spec.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The batch is computed once: a frame is cached only where two
-        // readers share it (the control step and compaction share the raw
-        // batch; the metrics counters and the sink the bound one). A cache
-        // fill is a job of its own, so a one-reader feed caches nothing.
-        if (peel) batch.persist()
-        try {
-          // DDL + OWNER BARRIER (W1/G5): the batch's control step logs the
-          // barrier and advances the registry BEFORE any row is delivered;
-          // data rows bind against the versions it returns.
-          val versions = spec.textDdlRegistryDir.map(d =>
-            DdlStream.controlStep(batch, batchId, d, spec.textDdlDefaultSchema,
-              spec.barrierDir, spec.redoEnabled))
-          val data = if (peel) batch.filter(DdlStream.isDataRow) else batch
-          val b = if (spec.compact) compactRouted(data) else data
-          // the batch binds once, as a map-only plan literal (no job), so
-          // the metrics wrapper and the user sink see the same schema-bound
-          // rows; compacted batches bind on their last_commit_ts
-          val bound = versions.fold(b)(SchemaRegistry.bindSchemaVersion(b, _,
-            if (spec.compact) "last_commit_ts" else "commit_ts"))
-          spec.metricsDir match {
-            case None => sink(bound, batchId)
-            case Some(m) =>
-              bound.persist()
-              try Metrics.withDmlMetrics(spark, m)(sink)(bound, batchId)
-              finally { bound.unpersist(); () }
-          }
-        } finally if (peel) { batch.unpersist(); () }
-      }
+      .foreachBatch(runBatch(spark, spec, sink) _)
       .trigger(Trigger.AvailableNow())
       .start()
   }
+
+  /** The body of one shaped batch: every microbatch, and DM's full load as
+    * batch -1. DDL + OWNER BARRIER (W1/G5): the control step logs the
+    * barrier and advances the registry BEFORE any row is delivered; data
+    * rows bind against the versions it returns. */
+  private[streaming] def runBatch(spark: SparkSession, spec: ChangefeedSpec,
+      sink: (DataFrame, Long) => Unit)(batch: DataFrame, batchId: Long): Unit =
+    DdlStream.peel(batch, batchId, spec.textDdlRegistryDir,
+        spec.textDdlDefaultSchema, spec.barrierDir, spec.redoEnabled) {
+      (data, versions) =>
+        val b = if (spec.compact) compactRouted(data) else data
+        // the batch binds once, as a map-only plan literal (no job), so
+        // the metrics wrapper and the user sink see the same schema-bound
+        // rows; compacted batches bind on their last_commit_ts
+        val bound = versions.fold(b)(SchemaRegistry.bindSchemaVersion(b, _,
+          if (spec.compact) "last_commit_ts" else "commit_ts"))
+        spec.metricsDir match {
+          case None => sink(bound, batchId)
+          case Some(m) =>
+            bound.persist()
+            try Metrics.withDmlMetrics(spark, m)(sink)(bound, batchId)
+            finally { bound.unpersist(); () }
+        }
+    }
 
   private val Marks = "changefeed_marks" // the observation start puts on
 

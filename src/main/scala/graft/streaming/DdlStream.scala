@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -77,58 +78,108 @@ object DdlStream {
       .withColumn("barrier_ts", coalesce(array_max(passed), lit(0L)))
   }
 
-  /**
-   * One microbatch's DDL control step — the owner's cycle at a barrier
-   * (ddl_manager.go:508-584). ONE Spark action yields the batch's
-   * resolved ts (max commit ts, the DDL puller's resolved ts — the batch
-   * is watermark-complete by construction) and its DDL control rows; the
-   * applied log is read once. With a `barrierDir`, the owner barrier over
-   * the not-yet-applied DDLs is logged BEFORE they join the registry —
-   * the boundary's checkpoint/redo clamp, and the crash order the
-   * barrier log's replay idempotence relies on. Then the fresh DDLs are
-   * appended (the (sql, ts) pair set is the idempotence key, so a batch
-   * replay re-applies nothing) and the table versions are folded from
-   * the in-memory log. A batch without an `op` column (already
-   * compacted) carries no control rows.
-   */
-  def controlStep(batch: DataFrame, batchId: Long, registryDir: String,
-      defaultSchema: String = "", barrierDir: Option[String] = None,
-      redoEnabled: Boolean = false): Seq[SchemaRegistry.TableVersion] = {
+  /** One microbatch through its feed's DDL control, then `body` with the
+    * batch's data rows and, with a registry, the table versions they bind
+    * to. A batch without an `op` column (already compacted) has no control
+    * rows. Otherwise the control step and `body` share the batch, cached
+    * until `body` returns. */
+  private[streaming] def peel(batch: DataFrame, batchId: Long,
+      registryDir: Option[String], defaultSchema: String,
+      barrierDir: Option[String], redoEnabled: Boolean)
+      (body: (DataFrame, Option[Seq[SchemaRegistry.TableVersion]]) => Unit): Unit =
+    registryDir match {
+      case Some(dir) if peels(batch, registryDir) =>
+        batch.persist()
+        try {
+          val vs = controlStep(batch, batchId, dir, defaultSchema, barrierDir,
+            redoEnabled)
+          body(batch.filter(isDataRow), Some(vs))
+        } finally { batch.unpersist(); () }
+      case _ => body(batch, registryDir.map(versions(_, defaultSchema)))
+    }
+
+  /** The `commit_ts` of the rows [[peel]] hands on, null on a control
+    * row: what a feed observes as its marks. */
+  private[streaming] def dataCommitTs(stream: DataFrame,
+      registryDir: Option[String]): Column =
+    if (peels(stream, registryDir)) when(isDataRow, col("commit_ts"))
+    else col("commit_ts")
+
+  private def peels(frame: DataFrame, registryDir: Option[String]) =
+    registryDir.isDefined && frame.columns.contains("op")
+
+  /** True on a data row, false or null on a DDL control row. */
+  private def isDataRow: Column = col("op") =!= DdlOp
+
+  /** The owner's cycle at a barrier (ddl_manager.go:508-584). ONE Spark
+    * action yields the batch's resolved ts (its max commit ts — the batch
+    * is watermark-complete) and its DDL control rows; those not in the
+    * applied log are pending. With a `barrierDir`, their owner barrier is
+    * logged BEFORE they join the registry (the crash order the barrier
+    * log's replay idempotence relies on); then they are appended — the
+    * (sql, ts) pair is the idempotence key — and the versions folded. */
+  private def controlStep(batch: DataFrame, batchId: Long,
+      registryDir: String, defaultSchema: String, barrierDir: Option[String],
+      redoEnabled: Boolean): Seq[SchemaRegistry.TableVersion] = {
+    // one scan folds each partition to (max ts, its DDL rows):
+    // control-plane sized, a handful of DDLs per batch
+    val parts = batch
+      .select(col("commit_ts"), col("op") <=> DdlOp, col("etype"),
+        col("schema_name"), col("table_name"))
+      .rdd.mapPartitions { it =>
+        var hi: Option[Long] = None
+        val ddls = Seq.newBuilder[(String, Long, String, String)]
+        it.foreach { r =>
+          if (!r.isNullAt(0))
+            hi = Some(hi.fold(r.getLong(0))(math.max(_, r.getLong(0))))
+          if (r.getBoolean(1)) ddls += ((r.getString(2), r.getLong(0),
+            r.getString(3), r.getString(4)))
+        }
+        Iterator((hi, ddls.result()))
+      }.collect()
     val applied = loadApplied(registryDir)
-    val log =
-      if (!batch.columns.contains("op")) applied
-      else {
-        // one scan folds each partition to (max ts, its DDL rows):
-        // control-plane sized, a handful of DDLs per batch
-        val parts = batch
-          .select(col("commit_ts"), col("op") <=> DdlOp, col("etype"),
-            col("schema_name"), col("table_name"))
-          .rdd.mapPartitions { it =>
-            var hi: Option[Long] = None
-            val ddls = Seq.newBuilder[(String, Long, String, String)]
-            it.foreach { r =>
-              if (!r.isNullAt(0))
-                hi = Some(hi.fold(r.getLong(0))(math.max(_, r.getLong(0))))
-              if (r.getBoolean(1)) ddls += ((r.getString(2), r.getLong(0),
-                r.getString(3), r.getString(4)))
-            }
-            Iterator((hi, ddls.result()))
-          }.collect()
-        val rows = parts.toSeq.flatMap(_._2)
-        val seen = applied.toSet
-        for (dir <- barrierDir; resolved <- parts.flatMap(_._1).maxOption)
-          Changefeed.appendBarrier(dir, batchId, resolved,
-            Changefeed.barrierFromRows(resolved, rows, seen, redoEnabled,
-              defaultSchema))
-        val fresh = rows.map(r => (r._1, r._2))
-          .filterNot(seen.contains).distinct.sortBy(_._2)
-        if (fresh.nonEmpty) append(registryDir, fresh)
-        applied ++ fresh
-      }
-    DdlParser.applyToRegistry(Nil, log, defaultSchema)
+    val seen = applied.toSet
+    val pending = parts.toSeq.flatMap(_._2).filterNot(r => seen((r._1, r._2)))
+    for (dir <- barrierDir; resolved <- parts.flatMap(_._1).maxOption)
+      appendBarrier(dir, batchId, resolved,
+        OwnerBarrier.ofTextDdls(resolved, pending, redoEnabled, defaultSchema))
+    val fresh = pending.map(r => (r._1, r._2)).distinct.sortBy(_._2)
+    if (fresh.nonEmpty) append(registryDir, fresh)
+    DdlParser.applyToRegistry(Nil, applied ++ fresh, defaultSchema)
   }
 
-  /** True on a data row of a batch with an `op` column, false or null on
-    * a DDL control row: the filter that peels the control rows off. */
-  private[streaming] def isDataRow: Column = col("op") =!= DdlOp
+  /** One JSON line per batch in `<dir>/barriers.jsonl`: the boundary's
+    * clamp record. Replay-idempotent like the DDL registry: a
+    * foreachBatch retry re-runs the same batchId AFTER the first attempt
+    * may already have applied the batch's DDLs, so the recomputed
+    * barrier would differ — the original record stands, the re-run
+    * writes nothing. The guard reads the log's last record, which holds
+    * its highest batch id, so no state outlives the log. */
+  private[graft] def appendBarrier(dir: String, batchId: Long,
+      resolved: Long, b: OwnerBarrier.Barrier): Unit = {
+    val path = Files.createDirectories(Paths.get(dir)).resolve("barriers.jsonl")
+    if (batchId <= lastLoggedBatch(path)) return
+    val line = s"""{"batch":$batchId,"resolved_ts":$resolved,""" +
+      s""""global_ts":${b.globalBarrierTs},""" +
+      s""""min_table_ts":${b.minTableBarrierTs},""" +
+      s""""redo_ts":${b.redoBarrierTs},"n_tb":${b.tableBarriers.size}}""" + "\n"
+    Files.writeString(path, line,
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    ()
+  }
+
+  /** The batch id of the barrier log's last record, -1 without one. Only
+    * the log's tail is read: a record is well under a kilobyte, and a
+    * line cut short by a crash mid-append is read as far as its id. */
+  private def lastLoggedBatch(path: Path): Long =
+    if (!Files.exists(path)) -1L
+    else {
+      val f = new java.io.RandomAccessFile(path.toFile, "r")
+      val tail = new Array[Byte](math.min(f.length, 4096L).toInt)
+      try { f.seek(f.length - tail.length); f.readFully(tail) } finally f.close()
+      new String(tail, StandardCharsets.UTF_8).split('\n').reverseIterator
+        .collectFirst { case BarrierRecord(b) => b.toLong }.getOrElse(-1L)
+    }
+
+  private val BarrierRecord = """\{"batch":(\d+),.*""".r
 }

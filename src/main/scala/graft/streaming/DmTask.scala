@@ -18,10 +18,11 @@ import graft.operators.{Filters, Routing}
  * instance.
  *
  * Spark-first mapping of the three DM units (dm/worker/subtask.go
- * createUnits): dump+load = one batch `pipeline(...).write` over the
- * snapshot source (Spark's distributed scan replaces mydumper/lightning
- * worker pools); sync = the changefeed runtime. The per-unit worker-count
- * knobs disappear — Spark's scheduler owns parallelism.
+ * createUnits): dump+load = the changefeed's own batch body run once
+ * over the snapshot source (Spark's distributed scan replaces
+ * mydumper/lightning worker pools); sync = the changefeed runtime. The
+ * per-unit worker-count knobs disappear — Spark's scheduler owns
+ * parallelism.
  *
  * Stage machine per subtask (dm/pb/dmworker.pb.go:107-115 New/Running/
  * Paused/Stopped/Finished; the transitional Pausing/Resuming/Stopping
@@ -211,13 +212,11 @@ final class DmTaskManager(spark: SparkSession, checkpointRoot: String) {
       val st = SubTask(inst, New)
       try {
         if (cfg.taskMode == "full" || cfg.taskMode == "all") {
-          // dump+load as ONE distributed batch job through the same pipeline
+          // dump+load as ONE batch through the feed's own pipeline and body
           val snap = snapshotSources.getOrElse(inst.sourceId,
             throw new IllegalArgumentException(s"no snapshot source for ${inst.sourceId}"))
           val spec = specFor(cfg, inst, checkpointRoot)
-          sink(Changefeed.pipeline(snap(), spec)
-            .transform(d => if (cfg.compact) Changefeed.compactRouted(d) else d),
-            -1L)
+          Changefeed.runBatch(spark, spec, sink)(Changefeed.pipeline(snap(), spec), -1L)
         }
         if (cfg.taskMode == "incremental" || cfg.taskMode == "all") {
           val raw = streamSources.getOrElse(inst.sourceId,

@@ -127,8 +127,7 @@ object MySqlOptions {
         "cache-prep-stmts" -> (b => o.copy(cachePrepStmts = b)),
         "has-vector-type" -> (b => o.copy(hasVectorType = b)))) {
       params.get(key).foreach { v =>
-        o = set(v.toBooleanOption.getOrElse(return Left(ErrInvalidConfig ->
-          s"invalid $key $v, which is not a boolean")))
+        o = set(boolParam(key, v).fold(e => return Left(e), identity))
       }
     }
 
@@ -180,9 +179,15 @@ object MySqlOptions {
   }
 
   /** `IsSinkSafeMode` (config.go:261-283): the merged safe-mode param or
-    * the default — no other validation runs on this early probe. */
+    * the default — no other validation runs on this early probe, but a
+    * value that is not a boolean is an error, as in [[apply]]. */
   def isSinkSafeMode(uriParams: Map[String, String],
-                     fileSafeMode: Option[Boolean]): Boolean =
-    uriParams.get("safe-mode").map(_.toBoolean)
-      .orElse(fileSafeMode).getOrElse(DefaultSafeMode)
+                     fileSafeMode: Option[Boolean])
+      : Either[(String, String), Boolean] =
+    uriParams.get("safe-mode").map(boolParam("safe-mode", _))
+      .getOrElse(Right(fileSafeMode.getOrElse(DefaultSafeMode)))
+
+  private def boolParam(key: String, v: String): Either[(String, String), Boolean] =
+    v.toBooleanOption.toRight(ErrInvalidConfig ->
+      s"invalid $key $v, which is not a boolean")
 }

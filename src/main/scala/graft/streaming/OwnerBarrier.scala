@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.core.{DdlParser, SchemaRegistry}
+
 /**
  * The owner's barrier composition — `ddlManager.barrier()`
  * (cdc/owner/ddl_manager.go:508-584): from the DDL puller's resolved ts and
@@ -86,5 +88,45 @@ object OwnerBarrier {
       tb = tb.take(TableBarrierNumberLimit)
     }
     Barrier(global, minTable, redo, tb)
+  }
+
+  /** The barrier over textual DDLs not yet applied, as (sql, ts, schema,
+    * table) rows: each statement is classified by [[ddlAction]] and keyed
+    * on its table's [[physicalId]]. */
+  def ofTextDdls(resolved: Long, pending: Seq[(String, Long, String, String)],
+      redoEnabled: Boolean, defaultSchema: String): Barrier =
+    barrier(resolved, pending.flatMap { case (sql, ts, sch, tbl) =>
+      ddlAction(sql, defaultSchema).map(a => DdlAt(ts, a, Seq(physicalId(sch, tbl))))
+    }, redoEnabled)
+
+  /** The action-type vocabulary above for a textual DDL, as far as the
+    * text path can classify. Unparseable statements map to "unknown",
+    * which is GLOBAL (not in NonGlobalDDLs) — the safe over-blocking
+    * default. */
+  private def ddlAction(sql: String, defaultSchema: String): Seq[String] = {
+    import DdlParser._
+    try parse(sql, defaultSchema).map {
+      case _: CreateTable => "create_table"
+      case _: DropTable => "drop_table"
+      case _: TruncateTable => "truncate_table"
+      case _: RenameTable => "rename_table"
+      case _: CreateDatabase => "create_schema"
+      case _: DropDatabase => "drop_schema"
+      case ai: AlterIndex => if (ai.addIndex) "add_index" else "drop_index"
+      case at: AlterTable => at.action match {
+        case _: SchemaRegistry.AddColumn => "add_column"
+        case _: SchemaRegistry.DropColumn => "drop_column"
+        case _: SchemaRegistry.ModifyColumn => "modify_column"
+        case _ => "rename_column" // not in NonGlobalDDLs → global
+      }
+    } catch { case _: Exception => Seq("unknown") }
+  }
+
+  /** Stable physical-table id for the barrier's per-table map — the text
+    * path has names, not TiDB table ids. Plain JVM hash: the id only has
+    * to be stable and distinct per name within one feed. */
+  def physicalId(schema: String, table: String): Long = {
+    val s = s"$schema.$table"
+    s.foldLeft(1125899906842597L)((h, c) => h * 31 + c)
   }
 }

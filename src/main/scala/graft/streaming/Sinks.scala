@@ -84,7 +84,9 @@ object Sinks {
         "kafka sink uri carries no topic path"))
     val dir = u.param("dir").getOrElse(throw new IllegalArgumentException(
       "kafka sink uri needs dir=<path> (socket transport is out of scope)"))
-    val brokerMax = u.param("broker-message-max-bytes").map(_.toInt)
+    val brokerMax = u.param("broker-message-max-bytes").map(v =>
+      orReject(v.toIntOption.toRight(KO.ErrInvalidConfig ->
+        s"invalid broker-message-max-bytes $v, which is not a number")))
       .getOrElse(1048588)
     val adj = orReject(KO.adjust(o0, KO.TopicMeta(exists = false,
       brokerMessageMaxBytes = Some(brokerMax)))).options

@@ -405,6 +405,11 @@ class ApiServerSpec extends SparkSpec {
       val s2 = mapper.readTree(get(base,
         "/api/v2/changefeeds/cf-cap/synced?now=5102&sci=3&ci=1&pd=false")._2)
       assert(s2.get("info").asText() == "pd-unavailable-check")
+      // a malformed clock or flag is the caller's error, and named
+      for ((qs, bad) <- Seq("now=abc&sci=3" -> "now", "now=5102&pd=maybe" -> "pd")) {
+        val (code, body) = get(base, s"/api/v2/changefeeds/cf-cap/synced?$qs")
+        assert(code == 400 && body.contains(s"invalid query parameter $bad"), body)
+      }
       // clockless degenerate form still answers drained == synced
       assert(mapper.readTree(get(base, "/api/v2/changefeeds/cf-cap/synced")._2)
         .get("synced").asBoolean())

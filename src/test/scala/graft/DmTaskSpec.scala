@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{DmTask, DmTaskManager, Sinks}
+import graft.streaming.{Changefeed, DmTask, DmTaskManager, Sinks}
 import graft.operators.Filters
 
 // top-level so both MemoryStream and Seq(...).toDF() derive the encoder
@@ -132,6 +132,45 @@ class DmTaskSpec extends SparkSpec {
     mgr.stopTask(name)
     assert(mgr.list().isEmpty)
     intercept[NoSuchElementException](mgr.queryStatus(name))
+  }
+
+  test("full load and a catch-up changefeed of one spec leave the same state") {
+    // DM's full load runs the changefeed's own batch body: over the same
+    // rows, a full-mode task and Changefeed.start with the spec the task
+    // compiles to must agree bucket for bucket
+    val dir = Files.createTempDirectory("graft_dm_body").toString
+    val rows = Seq(
+      ev(1, "shop_1", "t_1", 1, 10),
+      ev(2, "shop_2", "t_2", 2, 20),
+      ev(3, "shop_1", "t_1", 1, 11, op = "U"),  // folds onto pk 1
+      ev(4, "shop_2", "t_2", 1, 12, op = "U"),  // shard merge: same target key
+      ev(5, "shop_1", "scratch", 9, 90),        // ignore-tables
+      ev(6, "crm", "t_1", 8, 80),               // not in do-dbs
+      ev(7, "shop_1", "t_1", 7, -7),            // expression filter
+      ev(8, "shop_2", "t_2", 2, 0, op = "D"),   // event filter
+      ev(9, "shop_1", "t_1", 3, 30))
+    val yaml = taskYaml.replace("task-mode: all", "task-mode: full")
+      .replace("SINKDIR", s"$dir/load")
+    val mgr = new DmTaskManager(spark, s"$dir/ckpt")
+    mgr.startTask(yaml, snapshotSources = Map("src-1" -> (() => rows.toDF())))
+    assert(mgr.queryStatus("shard-merge").map(_("stage")) == Seq("Finished"))
+
+    val cfg = DmTask.parse(yaml)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    mem.addData(rows: _*)
+    Changefeed.start(spark, mem.toDF(),
+        DmTask.specFor(cfg, cfg.instances.head, s"$dir/feed-ckpt"))(
+      Sinks.forUri(spark, s"state://$dir/feed")).awaitTermination()
+
+    def state(sub: String) = {
+      val df = Sinks.readState(spark, s"$dir/$sub")
+      df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq).toSet
+    }
+    val loaded = state("load")
+    assert(loaded.size == 3, loaded) // shop.t pk 1 (merged), 2 and 3
+    assert(state("feed") == loaded)
   }
 
   test("handle-error: skip and replace recover a paused subtask") {

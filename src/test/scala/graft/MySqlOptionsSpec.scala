@@ -78,9 +78,11 @@ class MySqlOptionsSpec extends AnyFunSuite {
       Map("max-txn-row" -> "1000", "safe-mode" -> "true"),
       utc + ("max-txn-row" -> "9")))
     assert(m.options.maxTxnRow == 9 && m.options.safeMode)
-    assert(isSinkSafeMode(Map.empty, Some(true)))
-    assert(!isSinkSafeMode(Map("safe-mode" -> "false"), Some(true)))
-    assert(!isSinkSafeMode(Map.empty, None))
+    assert(isSinkSafeMode(Map.empty, Some(true)) == Right(true))
+    assert(isSinkSafeMode(Map("safe-mode" -> "false"), Some(true)) == Right(false))
+    assert(isSinkSafeMode(Map.empty, None) == Right(false))
+    assert(isSinkSafeMode(Map("safe-mode" -> "maybe"), Some(true)) ==
+      Left(ErrInvalidConfig -> "invalid safe-mode maybe, which is not a boolean"))
   }
 
   test("scheme gate: mysql-compatible only") {

@@ -75,7 +75,7 @@ class OwnerBarrierSpec extends AnyFunSuite {
     val globals = Seq("create_table", "rename_table", "rename_tables",
       "exchange_table_partition", "create_schema", "drop_schema",
       // global-by-absence: the text path's unparseable marker and an
-      // action outside the table (Changefeed.ddlAction's outputs)
+      // action outside the table (OwnerBarrier.ofTextDdls' classification)
       "unknown", "rename_column")
     val actions = (refNonGlobal.toSeq.sorted ++ globals).toIndexedSeq
     val rnd = new scala.util.Random(1601L)

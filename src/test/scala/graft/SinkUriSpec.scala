@@ -2,10 +2,8 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -152,31 +150,20 @@ class SinkUriSpec extends SparkSpec {
       val escape = post("bad-escape", "mysql://h/?worker-count=%zz")
       assert(escape.statusCode() == 400, escape.body())
       assert(escape.body().contains("ErrSinkURIInvalid"), escape.body())
-      val value = post("bad-value", s"kafka://h/t?dir=$dir/mq&partition-num=abc")
-      assert(value.statusCode() == 400, value.body())
-      assert(value.body().contains(KafkaOptions.ErrInvalidConfig), value.body())
+      for (bad <- Seq("partition-num=abc", "broker-message-max-bytes=abc")) {
+        val value = post("bad-value", s"kafka://h/t?dir=$dir/mq&$bad")
+        assert(value.statusCode() == 400, value.body())
+        assert(value.body().contains(KafkaOptions.ErrInvalidConfig), value.body())
+      }
     } finally srv.stop()
-  }
-
-  /** The files under src/main/scala whose text contains `needle`,
-    * relative to it. */
-  private def mainFilesWith(needle: String): Seq[String] = {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root: $root")
-    val walk = Files.walk(root)
-    try walk.iterator.asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(needle))
-      .map(p => root.relativize(p).toString).toSeq.sorted
-    finally walk.close()
   }
 
   test("only SinkUri parses a query; only it and the redo storage split on ://") {
     val sinkUri = "graft/streaming/SinkUri.scala"
-    assert((mainFilesWith("getRawQuery") ++ mainFilesWith("split('&')")).toSet ==
-      Set(sinkUri))
+    assert((MainSources.filesWith("getRawQuery") ++
+      MainSources.filesWith("split('&')")).toSet == Set(sinkUri))
     // the redo log's consistent.storage URI has its own blackhole rule
-    assert(mainFilesWith("split(\"://\"").toSet
+    assert(MainSources.filesWith("split(\"://\"").toSet
       .subsetOf(Set(sinkUri, "graft/streaming/ReplicaValidate.scala")))
   }
 }

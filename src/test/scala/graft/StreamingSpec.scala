@@ -154,12 +154,12 @@ class StreamingSpec extends SparkSpec {
     // recomputed barrier differs
     val barFile = java.nio.file.Paths.get(s"$dir/bar/barriers.jsonl")
     val before = java.nio.file.Files.readAllLines(barFile).size
-    graft.streaming.Changefeed.appendBarrier(s"$dir/bar", 1L, 999L,
+    graft.streaming.DdlStream.appendBarrier(s"$dir/bar", 1L, 999L,
       graft.streaming.OwnerBarrier.barrier(999L, Seq.empty,
         redoEnabled = true))
     assert(java.nio.file.Files.readAllLines(barFile).size == before)
     // a NEW batchId still appends
-    graft.streaming.Changefeed.appendBarrier(s"$dir/bar", 99L, 999L,
+    graft.streaming.DdlStream.appendBarrier(s"$dir/bar", 99L, 999L,
       graft.streaming.OwnerBarrier.barrier(999L, Seq.empty,
         redoEnabled = true))
     assert(java.nio.file.Files.readAllLines(barFile).size == before + 1)
@@ -405,7 +405,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_cf_sched").toString
     val spec = ChangefeedSpec(id = "cf-sched", checkpointDir = s"$dir/ckpt")
     val bridge = new SchedulerBridge(Seq("cap-1", "cap-2", "cap-3"))
-    def tid(t: String): Long = Changefeed.physicalId("db", t)
+    def tid(t: String): Long = OwnerBarrier.physicalId("db", t)
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[StreamEv]
@@ -419,11 +419,11 @@ class StreamingSpec extends SparkSpec {
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, batchId) => {
       val tables = b.select("schema_name", "table_name").distinct()
         .collect().map(r => (r.getString(0), r.getString(1)))
-      val ids = tables.map { case (s, t) => Changefeed.physicalId(s, t) }
+      val ids = tables.map { case (s, t) => OwnerBarrier.physicalId(s, t) }
       bridge.round(ids.toSeq)
       val placement = bridge.converge(ids.toSeq)
       val pdf = tables.map { case (s, t) =>
-        (s, t, placement.getOrElse(Changefeed.physicalId(s, t), ""))
+        (s, t, placement.getOrElse(OwnerBarrier.physicalId(s, t), ""))
       }.toSeq.toDF("schema_name", "table_name", "capture")
       b.join(broadcast(pdf), Seq("schema_name", "table_name"))
         .withColumn("batch", lit(batchId))
